@@ -1,20 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
+
 object Bench {
+  /** Short query id: the unique qNN prefix of a registered name. */
+  private def sid(k: String): String = k.takeWhile(_ != '_')
+
+  private def sfOf(path: String): Option[String] =
+    """sf([0-9.]+)""".r.findFirstMatchIn(path).map(_.group(1))
+
+  /** The previous round's per-query mins keyed by short id, read from the
+    * newest `BENCH_FULL_r<N>.json` in `dir` (a committed copy of
+    * target/bench_full.json). Empty when there is none or when it was run
+    * at another scale factor than `sfDir`, so a local sf0.001 run is never
+    * compared against an sf0.1 round. */
+  def previousMins(dir: String, sfDir: String): Map[String, Double] = {
+    val Full = """BENCH_FULL_r(\d+)\.json""".r
+    val newest = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .flatMap(f => f.getName match {
+        case Full(n) => Some(n.toInt -> f)
+        case _ => None
+      })
+      .maxByOption(_._1)
+    newest.fold(Map.empty[String, Double]) { case (_, f) =>
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      val prevSf = sfOf(root.path("sf").asText())
+      if (prevSf.isEmpty || prevSf != sfOf(sfDir)) Map.empty
+      else root.path("min").properties().asScala
+        .map(e => sid(e.getKey) -> e.getValue.asDouble).toMap
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("bench")
     // Warmup (untimed): JIT/codegen + parquet footer caches, so the first
     // timed query isn't charged for JVM startup and numbers are comparable
     // across rounds. q67's construction also stages its IVF serving table
@@ -120,7 +139,6 @@ object Bench {
     // move) reads directly off the artifact.
     def r4(d: Double): Double = math.rint(d * 10000) / 10000
     def r2(d: Double): Double = math.rint(d * 100) / 100
-    def sid(k: String): String = k.takeWhile(_ != '_')
     // one query per qNN number is the SparkEntry naming contract; a clash
     // would silently drop a key from the JSON map — fail loudly instead
     require(results.map(r => sid(r._1)).distinct.size == results.size,
@@ -148,69 +166,25 @@ object Bench {
       .map { case (k, mn, p) =>
         jstr(sid(k)) + ":[" + r2(mn) + "," + r2(p) + "]" }
       .mkString("{", ",", "}")
-    // ---- cross-round regression map (asked by the r9/r10/r11 verdicts;
-    // re-keyed on MIN by the r12 verdict): per-query MIN vs the PREVIOUS
-    // round's driver artifact (newest BENCH_r*.json in cwd — the only
-    // durable cross-round record; target/ is gitignored). Min is the
+    // ---- cross-round regression map: per-query MIN vs the previous
+    // round's committed BENCH_FULL_r*.json (target/ is gitignored, so the
+    // committed copy is the only durable cross-round record). Min is the
     // contention-free floor: r12's median-keyed map flagged 10 false
-    // regressions that three quiet runs all refuted, because the median is
-    // exactly the statistic sandbox contention moves. The artifact's tail
-    // may be a truncated JSON-escaped string, so the previous values are
-    // scraped by regex from its flat "queries":{...} fragment rather than
-    // parsed as JSON. (BENCH_r12 and earlier carried MEDIANS in that map,
-    // so the first min-vs-prev comparison is min-vs-median — strictly
-    // conservative, since min <= median can only under-flag.) A query
-    // lands in `regressions` when its min grew >1.5x AND >0.1 s absolute
-    // (the floor keeps 20 ms scheduling jitter on sub-100 ms queries out);
-    // capped at the 10 worst by ratio so the driver's 2000-char stdout
-    // tail can never be overflowed by a pathological round.
-    // Round 15 dropped the per-query map from the stdout line (it kept
-    // overflowing the driver's 2000-char tail as queries grew), so the
-    // durable cross-round per-query record is now the COMMITTED
-    // BENCH_FULL_r*.json (a copy of target/bench_full.json, one per
-    // round); old driver BENCH_r*.json artifacts keep working for the
-    // transition. Prefer the newest round; FULL wins a round-number tie.
-    val prevMed: Map[String, Double] = try {
-      val benches = Option(new java.io.File(".").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.matches("BENCH(_FULL)?_r\\d+\\.json"))
-      val curSf = """sf([0-9.]+)""".r.findFirstMatchIn(sfDir).map(_.group(1))
-      // per-candidate extraction, newest first, FIRST PARSABLE WINS: a
-      // post-round-15 driver artifact carries no per-query map, so
-      // choosing purely by round number would silently yield Map.empty
-      // whenever the BENCH_FULL twin is missing — fall through to the
-      // newest artifact that actually carries comparable numbers
-      def extract(f: java.io.File): Map[String, Double] = {
-        val isFull = f.getName.contains("FULL")
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        // same-SF rounds only: a local sf0.001 iteration run must not be
-        // "compared" against the driver's sf0.1 artifact
-        val prevSf = """"sf"\s*:\s*"?(?:[^"]*sf)?([0-9.]+)""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        // FULL artifacts carry mins keyed by FULL query name under "min";
-        // legacy driver artifacts carry short-id mins under "queries"
-        val i = txt.indexOf(if (isFull) "\"min\"" else "queries")
-        if (i < 0 || prevSf.isEmpty || prevSf != curSf) Map.empty
-        else {
-          val frag = txt.substring(i, math.max(txt.indexOf('}', i), i))
-          val qrx = """\\?"(q\d+)[A-Za-z0-9_]*\\?":(-?\d+(?:\.\d+)?)""".r
-          qrx.findAllMatchIn(frag)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
+    // regressions that three quiet runs all refuted. A query lands in
+    // `regressions` when its min grew >1.5x AND >0.1 s absolute (the floor
+    // keeps 20 ms scheduling jitter on sub-100 ms queries out); capped at
+    // the 6 worst by ratio so a 2000-char stdout tail capture can never
+    // be overflowed by a pathological round.
+    val prevMins: Map[String, Double] =
+      try previousMins(".", sfDir)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] prev-round read failed: ${e.getMessage}")
+        Map.empty
       }
-      benches.sortBy(f => (
-          -f.getName.replaceAll("\\D", "").toInt,
-          if (f.getName.contains("FULL")) 0 else 1))
-        .iterator.map(extract).find(_.nonEmpty).getOrElse(Map.empty)
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] prev-round read failed: ${e.getMessage}")
-      Map.empty
-    }
     val regressions = results
       .collect { case (k, _, mn, _, None, _) => sid(k) -> mn }
       .flatMap { case (id, cur) =>
-        prevMed.get(id).collect {
+        prevMins.get(id).collect {
           case p if p > 0 && cur > 1.5 * p && cur - p > 0.1 => (id, p, cur)
         }
       }
@@ -228,8 +202,7 @@ object Bench {
     // floor, per the r12 adjudication); total_med/total_p90 are the
     // contention diagnostics (min flat + med inflated = noisy sandbox,
     // all three moved = real drift).
-    val sfShort = """sf([0-9.]+)""".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse(sfDir)
+    val sfShort = sfOf(sfDir).getOrElse(sfDir)
     val errsCapped = {
       val all = results.collect { case (k, _, _, _, Some(m), _) => (k, m) }
       (all.take(5).map { case (k, m) => jstr(sid(k)) + ":" + jstr(m.take(80)) } ++

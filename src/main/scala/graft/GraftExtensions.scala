@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{BpeEncode, CosineSimilarity, HllEstimate, HllMergeAgg, HllSketchAgg, SortedIntersectCount, SrpSign, TopKItems, TopKMergeAgg, TopKSketchAgg}
 
 /** Engine extension point, installed with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (all of the
-  * engine's session builders do). Injects the native functions:
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`
+  * ([[GraftSession.local]] does). Injects the native functions:
   *
   *  - `graft_cosine(a, b)` — codegen'd cosine similarity over float arrays
   *    ([[graft.expressions.CosineSimilarity]]), value-identical to the HOF

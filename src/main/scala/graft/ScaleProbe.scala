@@ -1,14 +1,14 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scaling-curve probe beyond the largest driver fixture: builds a
-  * deterministic ×N synthetic corpus from the sf0.1 documents/embeddings
-  * tables (engine-side, seedless — every value is a pure function of the
-  * source row and the copy index) and re-runs the similarity/dedup family
-  * plus the q66 shape duel on it, median-of-3 per query.
+/** Scaling corpus beyond the largest fixture: writes a
+  * deterministic ×N synthetic copy of the sf0.1 documents, embeddings,
+  * events and orders tables (engine-side, seedless — every value is a pure
+  * function of the source row and the copy index) to a fresh temp dir and
+  * prints its path. Time the queries that read only those tables on it
+  * with [[QTime]].
   *
   * Corpus construction (N copies, copy k — ids offset by k·10⁸, NOT 10⁷:
   * q75's srpCorpus internally unions a perturbed copy of every row at
@@ -22,124 +22,18 @@ import org.apache.spark.sql.functions._
   *    2⁻⁹-multiple offsets (same arithmetic as Similarity.srpCorpus, varied
   *    by k) — planting cos≈0.998 near-dup cliques of N for the banded path.
   *
-  * The declared-exact oracle references (q59 all-pairs cosine, q61 shingle
-  * self-join) are deliberately NOT probed: SCALE.md already records them as
-  * super-linear by design, and each has a shipped banded twin measured
-  * here. This is recorded as a skip, not silence.
-  *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=16
-  *        runMain graft.ScaleProbe [multiplier]
+  * Usage: SPARK_GRAFT_SF_DIR=<sf0.1 dir> runMain graft.ScaleProbe [multiplier]
+  *        runMain graft.QTime <printed dir> <runs> <prefix ...>
   * Results recorded in SCALE.md's scaling-curve table (×10 column).
   */
 object ScaleProbe {
-  /** Min-max vs rank z-order under Zipfian skew, at ×mult rows: 95% of
-    * the `a` axis in [0,100), outliers to ~2^30 — the distribution where
-    * min-max scaling collapses the data's mass into one scaled value and
-    * its axis stops pruning files. Measures file hits for (1) a
-    * dense-region a-slice (all of b) and (2) a combined 10%×10% box,
-    * against both layouts at 64 files, plus losslessness row counts.
-    * Deterministic Knuth-LCG values — no RNG (resume-safe). */
-  private def zorderDuel(spark: SparkSession, out: String, mult: Int): String = {
-    import org.apache.spark.sql.functions._
-    val n = mult * 20000L
-    val h = pmod(col("id") * lit(2654435761L), lit(1L << 31))
-    val dense = pmod(h, lit(100L))
-    val a = when(pmod(h, lit(100L)) < 95, dense)
-      .otherwise((lit(1073741824L) / (pmod(h, lit(97L)) + 1)).cast("long"))
-    val b = pmod(h, lit(10000L))
-    val df = spark.range(n).select(col("id"), a.as("a"), b.as("b"))
-    def mk(tag: String): String = {
-      val dir = s"$out/zduel_$tag"
-      ops.Snapshot.commit(df, dir, 0, "id", nFiles = 8)
-      dir
-    }
-    val (mmDir, rkDir) = (mk("minmax"), mk("rank"))
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val tMm = timed(ops.Snapshot.optimizeZorder(spark, mmDir, "a", "b", 64))
-    val tRk = timed(ops.Snapshot.optimizeZorderRank(spark, rkDir, "a", "b", 64))
-    def hits(dir: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long): Int =
-      ops.Snapshot.prunedFilesBox(spark, dir, aLo, aHi, bLo, bHi).size
-    def rows(dir: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long): Long =
-      ops.Snapshot.readPrunedBox(spark, dir, "a", "b", aLo, aHi, bLo, bHi).count()
-    val denseA = (hits(mmDir, 10, 19, 0, 9999), hits(rkDir, 10, 19, 0, 9999))
-    val box = (hits(mmDir, 10, 19, 2000, 2999), hits(rkDir, 10, 19, 2000, 2999))
-    val lossless =
-      rows(mmDir, 10, 19, 2000, 2999) == rows(rkDir, 10, 19, 2000, 2999)
-    f"""{"zorder_duel":$mult,"rows":$n,"files":64,""" +
-      f""""dense_a_files":{"minmax":${denseA._1},"rank":${denseA._2}},""" +
-      f""""box_files":{"minmax":${box._1},"rank":${box._2}},""" +
-      f""""optimize_sec":{"minmax":$tMm%.3f,"rank":$tRk%.3f},""" +
-      f""""lossless_rowcount_equal":$lossless}"""
-  }
-
-  /** Bloom point-index probe at ×mult rows: a table clustered on a
-    * LOW-CARDINALITY key (so every file's range on the point column
-    * spans ~the whole id domain — min/max prunes nothing), probed by 20
-    * present + 5 absent ids, with and without the sidecars. Measures
-    * candidate-file counts, the optimize pass cost, and the wall-clock
-    * of readPoints vs a full-scan IN filter. Deterministic values. */
-  private def bloomDuel(spark: SparkSession, out: String, mult: Int): String = {
-    import org.apache.spark.sql.functions._
-    val n = mult * 150000L
-    val h = pmod(col("id") * lit(2654435761L), lit(1L << 31))
-    val df = spark.range(n).select(col("id"), pmod(h, lit(1000L)).as("c"),
-      (col("id") * 7).as("payload"))
-    val dir = s"$out/bloomduel"
-    ops.Snapshot.commit(df, dir, 0, "c", nFiles = 64)
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (_, tOpt) = timed(ops.Snapshot.optimizeBloom(spark, dir, "id"))
-    val m = ops.Snapshot.manifest(spark, dir,
-      ops.Snapshot.currentVersion(spark, dir))
-    val present = (1 to 20).map(i => (i * 79993L) % n)
-    val absent = (1 to 5).map(i => n + i * 1000L)
-    val keys = present ++ absent
-    def candidates(ks: Seq[Long]): Int =
-      m.files.count(f => ks.exists(k =>
-        ops.Snapshot.mayContain(m, f, "id", k)))
-    val withBloom = candidates(keys)
-    val absentOnly = candidates(absent)
-    val (nPoint, tPoint) = timed(
-      ops.Snapshot.readPoints(spark, dir, "id", keys).count())
-    val (nFull, tFull) = timed(
-      ops.Snapshot.read(spark, dir).filter(col("id").isin(keys: _*)).count())
-    f"""{"bloom_duel":$mult,"rows":$n,"files":64,""" +
-      f""""candidate_files":{"bloom":$withBloom,"minmax_only":64,""" +
-      f""""absent_keys":$absentOnly},""" +
-      f""""optimize_sec":$tOpt%.3f,""" +
-      f""""probe_sec":{"read_points":$tPoint%.3f,"full_filter":$tFull%.3f},""" +
-      f""""exact":${nPoint == nFull && nPoint == present.distinct.size}}"""
-  }
-
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_scaleprobe_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    // mult ≤ 10 keeps every copied orderkey under q42's +10⁹ insert keys
+    require(mult <= 10, s"mult=$mult would collide copied orderkeys with q42's +1e9 insert keys")
+    val spark = GraftSession.local("scaleprobe")
     val out = Files.createTempDirectory(s"graft_scale_x$mult").toString
-
-    // z-order normalization duel under Zipf skew (the q127 family's scale
-    // probe, round 12). Self-synthesized — runnable alone without the ×N
-    // fixture build: `runMain graft.ScaleProbe 10 zorder`.
-    if (args.lift(1).contains("bloom")) {
-      println(bloomDuel(spark, out, mult)); spark.stop(); return
-    }
-    println(zorderDuel(spark, out, mult))
-    if (args.lift(1).contains("zorder")) { spark.stop(); return }
 
     val docs = Tables.documents(spark, src)
     val docCopies = (0 until mult).map { k =>
@@ -184,9 +78,7 @@ object ScaleProbe {
     // orders ×N: key offsets keep q42's %-20 change residues (10⁸ ≡ 0 mod
     // 20, so the CDC batch stays a constant fraction) and custkey offsets
     // hold per-customer history length constant — more entities, not
-    // longer histories, is how a dimension grows. mult ≤ 10 keeps every
-    // copied key under q42's +10⁹ insert-key space.
-    require(mult <= 10, s"mult=$mult would collide copied orderkeys with q42's +1e9 insert keys")
+    // longer histories, is how a dimension grows.
     val ord = Tables.orders(spark, src)
     val ordCopies = (0 until mult).map { k =>
       ord.select((col("o_orderkey") + lit(k * 100000000L)).as("o_orderkey"),
@@ -196,72 +88,7 @@ object ScaleProbe {
     }.reduce(_ unionAll _)
     ordCopies.write.mode("overwrite").parquet(s"$out/orders.parquet")
 
-    val nDocs = spark.read.parquet(s"$out/documents.parquet").count()
-    val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
-
-    def med3(thunk: => Long): (Double, Long) = {
-      val runs = (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        val n = thunk
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      (runs.map(_._1).sorted.apply(1), runs.head._2)
-    }
-
-    // warmup: JIT + parquet footers, untimed
-    SparkEntry.queries("q60_dedup_exact")(spark, out).count()
-
-    val family = Seq("q60_dedup_exact", "q81_dedup_fingerprint",
-      "q64_sim_topk", "q65_sim_lsh_join", "q66_dedup_simhash",
-      "q67_sim_ivf", "q75_sim_srp_join", "q79_dedup_resolve",
-      // corpus curation family (round 8): all driven off the same synthetic
-      // documents table; decontamination/TF-IDF are the token-heavy ones
-      "q86_text_decontaminate", "q87_sample_stratified", "q88_stats_profile",
-      "q89_text_tfidf", "q91_pack_sequences", "q92_mix_report",
-      "q93_text_redact", "q94_text_repetition", "q98_mix_rebalance",
-      // relational/warehouse additions (round 8): interval join over the
-      // ×N events axis, CDC merge + SCD2 over the ×N orders/customers
-      "q19_join_interval", "q42_merge_upsert", "q43_scd2_history",
-      // round-8-end additions: span dedup + shuffle/shard + BM25 over the
-      // ×N documents, incremental view maintenance over the ×N orders,
-      // and the prefix-filtered exact near-dup path (its candidate
-      // pruning is the thing to observe as the corpus grows)
-      "q99_dedup_spans", "q100_shuffle_shard", "q101_text_bm25",
-      "q38_agg_incremental", "q106_dedup_prefix",
-      // round-9 additions: trained-IVF serving, containment (its j side
-      // deliberately doesn't prefix-prune — the thing to observe), kNN
-      // ranking, the incremental gate, the streaming fingerprint index,
-      // and tempered mixture sampling
-      "q110_sim_ivf_trained", "q111_dedup_containment", "q112_sim_knn_rank",
-      "q113_dedup_incremental", "q114_stream_dedup_index",
-      "q115_mix_temperature", "q116_sim_ivf_batch",
-      // round-9-end additions: transcript assembly over the x10 time
-      // axis, the packing manifest, the quantile gate
-      "q117_assemble_sessions", "q118_pack_manifest", "q119_quality_gate",
-      // round-10 additions: the persisted-index gate + two-day append
-      // (per-run cost ∝ batch is the claim to observe), the mixed-length
-      // interval join over the ×N time axis, the snapshot table's COW
-      // merge + time travel + exactly-once streaming sink (first
-      // construction builds the memoized table/index artifacts — q110's
-      // med3 discipline, the median reads the serving cost)
-      "q120_dedup_inc_index", "q122_join_interval_varlen",
-      "q123_dedup_inc_append", "q124_merge_versioned", "q125_time_travel",
-      "q126_stream_snapshot_sink",
-      // round-12 additions: the 2-D and 3-D z-order box serves over the
-      // ×N orders axis (first construction builds the staged layouts —
-      // med3's median reads the serving cost)
-      "q127_zorder_box", "q130_zorder3_box")
-    val results = family.map { name =>
-      val (t, n) = med3(SparkEntry.queries(name)(spark, out).count())
-      println(f"""{"probe":"$name","x":$mult,"rows":$n,"sec":$t%.3f}""")
-      (name, t, n)
-    }
-    val (tExplode, _) = med3(ops.Dedup.simhashPairs(
-      ops.Dedup.simhashSignatures(spark, out, wide = false)).count())
-    val (tWide, _) = med3(ops.Dedup.simhashPairs(
-      ops.Dedup.simhashSignatures(spark, out, wide = true)).count())
-    val qs = results.map { case (k, t, _) => f""""$k":$t%.3f""" }.mkString(",")
-    println(f"""{"scale_probe":$mult,"src":"$src","docs":$nDocs,"vecs":$nVecs,"queries":{$qs},"q66_explode_sec":$tExplode%.3f,"q66_wide_sec":$tWide%.3f,"skipped":"q59,q61 (declared-exact oracle references, super-linear by design; banded twins probed instead)"}""")
+    println(s"SCALE_DIR=$out")
     spark.stop()
   }
 }

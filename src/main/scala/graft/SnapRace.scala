@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One racer of the CROSS-PROCESS commit race (PipelineSpec drives two
   * of these as separate JVMs at one snapshot table): block on a
   * rendezvous file so both processes attempt the same `expectedVersion`
@@ -19,13 +17,7 @@ import org.apache.spark.sql.SparkSession
 object SnapRace {
   def main(args: Array[String]): Unit = {
     val Array(dir, goFile, marker) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-snap-race-$marker")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession.local("snaprace", cpus = 2)
     val code =
       try {
         import spark.implicits._

@@ -222,27 +222,10 @@ object Stages {
     }
   }
 
-  /** One task JVM's session — the per-stage analog of Pipeline.main's. */
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_stage_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private[graft] def drive(args: Array[String], usage: String)
                           (f: (SparkSession, Array[String]) => Unit): Unit = {
     require(args.nonEmpty, usage)
-    val spark = session()
+    val spark = GraftSession.local("stage")
     try f(spark, args) finally spark.stop()
   }
 }

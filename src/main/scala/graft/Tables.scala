@@ -144,11 +144,11 @@ object Tables {
     *
     *  - INT64 TIMESTAMP(NANOS): Spark's parquet reader rejects it
     *    ([PARQUET_TYPE_ILLEGAL]) unless the session sets
-    *    `spark.sql.legacy.parquet.nanosAsLong=true` — every graft session
-    *    builder does (Bench/Verify/Pipeline/Smoke/Plans/LayoutDemo/
-    *    SparkSpec), so `ts` arrives as a BIGINT of epoch nanoseconds.
-    *    (Set in the builder, not here: mutating session conf inside a
-    *    query closure is hidden global state.)
+    *    `spark.sql.legacy.parquet.nanosAsLong=true` — every session comes
+    *    from `GraftSession.local`, which sets it, so `ts` arrives as a
+    *    BIGINT of epoch nanoseconds. (Set in the factory, not here:
+    *    mutating session conf inside a query closure is hidden global
+    *    state.)
     *  - µs TIMESTAMP / TIMESTAMP_NTZ (the standard parquet encoding and
     *    what the current fixtures carry): normalized below to the same
     *    epoch-nanos BIGINT with exact integer arithmetic.

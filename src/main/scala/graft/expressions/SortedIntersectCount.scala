@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `sort_array(collect_set(...))` — already sorted, already distinct — so
   * the count is a single allocation-free two-pointer walk: O(|a|+|b|)
   * comparisons, no hashing, no scratch array, inside whole-stage codegen.
-  * Measured at sf0.1 this halves the q106 verify stage (PfxStageProbe;
-  * numbers in the Dedup scaladoc).
+  * Measured at sf0.1 this halves the q106 verify stage (SCALE.md q106
+  * row; numbers in the Dedup scaladoc).
   *
   * Contract (property-tested equal to `size(array_intersect)` in
   * PropertySpec): inputs must be sorted ascending in the element type's

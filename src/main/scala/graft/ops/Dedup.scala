@@ -26,20 +26,18 @@ import graft.{QueryModule, Tables => T}
   */
 object Dedup extends QueryModule {
 
-  /** Default pair-count ceiling for [[resolveComponents]]' single-task
+  /** Pair-count ceiling for [[resolveComponents]]' single-task
     * union-find base case: 1M (i, j) pairs ≈ 16 MB of edge data and ≤ 2M
     * hash-map entries (~200 MB transient) in the one resolving task —
     * comfortable for any executor sized to shuffle real data. The measured
-    * crossover is MUCH higher (CCProbe, local[16]: union-find still beats
-    * the iterative loop 6× at 8M pairs — 11.2 s vs 70.2 s — and scales
+    * crossover is MUCH higher (SCALE.md §"×10 beyond the largest fixture",
+    * connected-components table, local[16]: union-find still beats the
+    * iterative loop 6× at 8M pairs — 11.2 s vs 70.2 s — and scales
     * linearly), so the bound is executor MEMORY, not speed: ~100 MB of
-    * transient hash map per 1M pairs. Deployments with roomy executors
-    * raise it via `spark.graft.cc.ufMaxPairs`; the iterative
-    * pointer-jumping loop takes over past the limit. */
+    * transient hash map per 1M pairs. The iterative pointer-jumping loop
+    * takes over past the limit; callers (tests) force either path through
+    * `smallLimit`. */
   private[graft] val SmallGraphPairLimit = 1000000L
-
-  /** Session-conf override for the union-find ceiling (pairs). */
-  private[graft] val UfMaxPairsKey = "spark.graft.cc.ufMaxPairs"
 
   /** doc_id + distinct 3-token shingles, one row per (doc, shingle). */
   private[graft] def shingles(s: SparkSession, d: String): DataFrame =
@@ -57,7 +55,7 @@ object Dedup extends QueryModule {
 
   /** Exact Jaccard >= tau pairs from a (doc_id, sh) shingle table.
     *
-    * Shape (round 22, measured in [[graft.R22Probe]], sf0.1 min-of-5):
+    * Shape (round 22, OPTIMIZATION_r22.md §1, sf0.1 min-of-5):
     * each side of the self-join carries its own shingle count (`nsh`
     * attached by ONE broadcast of the doc-size aggregate before the
     * join), and the pair aggregate folds ni/nj through as min()s — so
@@ -120,7 +118,7 @@ object Dedup extends QueryModule {
     * random corpora AND hash-proven by q106 running against q61's oracle
     * SQL verbatim.
     *
-    * MEASURED at sf0.1 ([[graft.PfxProbe]], QTime): the filter cuts
+    * MEASURED at sf0.1 (SCALE.md q106 row, QTime): the filter cuts
     * candidate pairs 2.8× (1 130 536 → 409 103) and join input rows 1.9×
     * (260 388 → 133 971) even on this WORST-CASE corpus (31-token
     * vocabulary ⇒ no rare shingles; real corpora are Zipfian and prune
@@ -179,7 +177,7 @@ object Dedup extends QueryModule {
     // doc key, canonicalize identically, and AQE reuses one exchange —
     // the collect_set aggregate (an ObjectHashAggregate over every
     // shingle row) runs ONCE instead of once per side. Measured
-    // (R22Probe q106b, min-of-7 interleaved): min 2.06 -> 1.95 s,
+    // (OPTIMIZATION_r22.md §6, min-of-7 interleaved): min 2.06 -> 1.95 s,
     // medians ~8% better; outputs asserted row-identical. q111's
     // containment twin measured WORSE with the same hint (1.54 -> 1.74
     // — its candidate side is container-heavy and the extra shuffle of
@@ -196,7 +194,7 @@ object Dedup extends QueryModule {
         // instead of size(array_intersect(...)): array_intersect hash-sets
         // one side and ALLOCATES the intersection array per candidate just
         // to take its size — the merge walk is allocation-free and stays in
-        // whole-stage codegen. Measured (PfxStageProbe, sf0.1, med-of-3):
+        // whole-stage codegen. Measured (SCALE.md q106 row, sf0.1, med-of-3):
         // full pipeline 4.10 s -> 1.86 s; also beats a 64-bit-hashed-
         // identity pipeline (2.38 s) while keeping STRING identity, so the
         // "exact" claim carries no hash-collision footnote (an md5-binary
@@ -605,7 +603,7 @@ object Dedup extends QueryModule {
 
   /** 60-bit tf-weighted SimHash signatures, one row per doc, in either of
     * two plan shapes (value-identical; pinned by SimilaritySpec, shape
-    * timings recorded in SCALE.md via [[graft.BenchShapes]]):
+    * timings recorded in SCALE.md's q66 row):
     *
     *  - wide (`wide = true`, the SHIPPED q66 path since round 5): md5
     *    computed once per (doc, token), then ONE aggregate with 60 sum
@@ -825,7 +823,7 @@ object Dedup extends QueryModule {
     * Returns (node, lbl) for every node that appears in some pair. */
   private[graft] def resolveComponents(
       pairs: DataFrame,
-      smallLimit: Long = -1L): DataFrame =
+      smallLimit: Long = SmallGraphPairLimit): DataFrame =
     resolveComponentsWithRounds(pairs, smallLimit)._1
 
   /** [[resolveComponents]] plus the propagation-round count the iterative
@@ -833,24 +831,10 @@ object Dedup extends QueryModule {
     * O(log diameter) convergence property test pins. */
   private[graft] def resolveComponentsWithRounds(
       pairs: DataFrame,
-      smallLimit: Long = -1L): (DataFrame, Int) = {
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (debug) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[cc] $tag ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
+      smallLimit: Long = SmallGraphPairLimit): (DataFrame, Int) = {
     val p = pairs.persist()
     val nPairs = p.count()
-    lap("pairs materialize")
-    // negative smallLimit (the default) = resolve from the session conf;
-    // callers pass an explicit value only to force a path (tests, probes)
-    val limit =
-      if (smallLimit >= 0) smallLimit
-      else p.sparkSession.conf
-        .get(UfMaxPairsKey, SmallGraphPairLimit.toString).toLong
-    if (nPairs <= limit) {
+    if (nPairs <= smallLimit) {
       val sp = p.sparkSession
       import sp.implicits._
       // Eager checkpoint: downstream consumers reference the labels frame
@@ -885,7 +869,6 @@ object Dedup extends QueryModule {
         }
         .toDF("node", "lbl")
         .localCheckpoint(true)
-      lap(s"union-find resolve ($nPairs pairs)")
       p.unpersist()
       return (labels, 0)
     }
@@ -934,7 +917,6 @@ object Dedup extends QueryModule {
         .select(col("i").as("node"), least(col("i"), col("mn")).as("lbl"))
         .localCheckpoint(false)
       var curSum = labelSum(labels)
-      lap("init labels")
       var done = false
       var round = 0
       while (!done) {
@@ -951,7 +933,6 @@ object Dedup extends QueryModule {
         curSum = nextSum
         labels = next
         round += 1
-        lap(s"round $round")
       }
       (labels, round)
     } catch {
@@ -1310,7 +1291,7 @@ object Dedup extends QueryModule {
       // distance <= 3 the pigeonhole principle guarantees two near-dup docs
       // agree on at least one band, so the band-bucket join is EXACT, not
       // approximate — and shuffle volume is O(docs x 4), never all-pairs.
-      // Shape choice is measured (BenchShapes, SCALE.md): the wide
+      // Shape choice is measured (SCALE.md q66 row): the wide
       // aggregate beats explode at every fixture SF and the gap GROWS with
       // data (3.4x at sf0.1) — the x60 row blow-up dominates, codegen
       // handles the 60-column aggregate fine. SimilaritySpec pins the two

@@ -509,9 +509,10 @@ object Similarity extends QueryModule {
     * element_at per subspace — which is the entire point of ADC. Indexed
     * lut(m)(c). */
   /** Corpus size, memoized per (session, dir) — drives q121's rerank
-    * budget. The AdcRecall probe measured that a FIXED K'=64 becomes the
-    * first recall limiter as cells grow with the corpus (sf0.1: 0.34 →
-    * 0.61 recall@10 as K' rises to the probed-cell ceiling), so the
+    * budget. A recall sweep (SCALE.md q121 row) measured that a FIXED
+    * K'=64 becomes the first recall limiter as cells grow with the
+    * corpus (sf0.1: 0.34 → 0.61 recall@10 as K' rises to the probed-cell
+    * ceiling), so the
     * budget scales with cell size: K' = max(64, N/8) — identical to the
     * old constant at fixture scale (N=500 → 64, the unit-pinned
     * operating point), ~N/8 beyond, still a bounded TakeOrdered whose
@@ -703,8 +704,8 @@ object Similarity extends QueryModule {
     * exists and recall is a measured property, not a theorem. The
     * registered q121 pins the same plan's exactness on the planted
     * corpus; THIS twin keeps the honest float-geometry gates — recall@10
-    * vs the exact scan (SimilaritySpec) and the AdcRecall probe's
-    * nprobe/budget curves. */
+    * vs the exact scan (SimilaritySpec) and the nprobe/budget recall
+    * curves in SCALE.md's q121 row. */
   private[graft] def fixtureAdcTopK(s: SparkSession, d: String): DataFrame = {
     val e = T.embeddings(s, d)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -869,8 +870,8 @@ object Similarity extends QueryModule {
       // literals so the pass is one stateless codegen projection; (3)
       // the top-K' ADC candidates (a driver-bounded TakeOrdered,
       // deterministic adc-then-id tie-break; K' = [[adcRerankBudget]] —
-      // max(64, N/8), SCALING WITH CELL SIZE per the AdcRecall
-      // measurement) rerank by EXACT cosine against their full
+      // max(64, N/8), SCALING WITH CELL SIZE per the recall sweep in
+      // SCALE.md's q121 row) rerank by EXACT cosine against their full
       // embeddings — the only point the full vectors are read. Cost at
       // 100 TB: probed-cell code bytes + K' embedding lookups, never
       // corpus x query. END-TO-END ORACLED (round 16; unit-only
@@ -879,8 +880,7 @@ object Similarity extends QueryModule {
       // cluster fits under K' with strictly minimal codes), so the
       // served top-10 EQUALS the brute-force top-10 DuckDB recomputes.
       // The fixture-corpus serving twin ([[fixtureAdcTopK]] — trained
-      // coarse quantizer, no closed form) keeps its unit recall gate
-      // and the AdcRecall probe.
+      // coarse quantizer, no closed form) keeps its unit recall gate.
       val corpus = plantedCorpus(s, d)
       val q = corpus.filter(col("vec_id") === 0).select(col("emb").as("qv"))
       val probed = plantedProbeIds(s, d)
@@ -940,7 +940,7 @@ object Similarity extends QueryModule {
       // the exact-pair recursive-CTE oracle hash-matches end-to-end.
       // Union corpus pinned per construction — q75's rationale, one
       // reference MORE here (the resolved left join makes five):
-      // measured 0.96 -> 0.81 s (R22Probe q97 duel, min-of-6).
+      // measured 0.96 -> 0.81 s (OPTIMIZATION_r22.md §7, min-of-6).
       val u = srpCorpus(s, d).localCheckpoint(true)
       val cand = srpCandidates(u)
       val pairs = cand

@@ -44,16 +44,17 @@ import org.apache.spark.sql.functions._
   * of data size; MERGE cost is (touched files rewritten) + (one
   * broadcast join of change keys against a file-count-sized range
   * table); time travel and snapshot isolation are free side effects of
-  * immutable manifests. Concurrency caveat, same class as
-  * [[Layout]]'s staging discipline: the no-overwrite rename is enforced
-  * with a JVM-level lock plus an existence check, which serializes
-  * writers within one driver; two SEPARATE drivers racing on the same
-  * table dir need a filesystem whose rename/create-exclusive is atomic
-  * (HDFS rename, S3 conditional PUT, a lock service) — exactly the
-  * deployment answer Delta OSS (atomic-put LogStore) and Iceberg
-  * (catalog swap) give. Single-writer-per-JVM is the supported model
-  * here, and the loser path is still exercised deterministically in
-  * SnapshotSpec.
+  * immutable manifests. Concurrency: a manifest is published with an
+  * atomic create-exclusive — link(2) of the fully-written temp file on
+  * local filesystems, the no-overwrite rename on HDFS-class ones — so
+  * exactly one of any number of writers, in one JVM or in several, lands
+  * a given version; a local loser gets a [[SnapshotConflict]] and deletes
+  * its own data files. A JVM-level lock plus an existence check in front
+  * only turns same-JVM races into that conflict early. Object stores
+  * without an atomic create-exclusive (S3 before conditional PUT) need
+  * the deployment answer Delta OSS (atomic-put LogStore) and Iceberg
+  * (catalog swap) give. SnapshotSpec drives the loser path in one JVM,
+  * and PipelineSpec races two `SnapRace` JVMs at one table.
   */
 object Snapshot {
 
@@ -557,7 +558,7 @@ object Snapshot {
   private[graft] val manifestParses =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** Probe/spec hook: drop every cached manifest so the next accesses
+  /** Spec hook: drop every cached manifest so the next accesses
     * measure the true cold path. Never needed in production — the cache
     * is correct by key. */
   private[graft] def clearManifestCache(): Unit =
@@ -568,31 +569,6 @@ object Snapshot {
     * of the delta and binary layouts without needing data files. */
   private[graft] def publishManifestForTest(spark: SparkSession,
       dir: String, m: Manifest): Unit = publish(spark, dir, m)
-
-  /** Probe hook: publish a synthetic manifest through the REAL publish
-    * path (serialize + tmp + atomic link — full text, binary checkpoint
-    * or delta, whatever the policy picks) without writing data files —
-    * ManifestScaleProbe times the metadata envelope alone. */
-  private[graft] def commitManifestForProbe(spark: SparkSession,
-      dir: String, files: Seq[FileEntry],
-      colStats: Map[(String, String), (Long, Long)] = Map.empty,
-      version: Int = 1): Unit =
-    publish(spark, dir, Manifest(version, "k", files, colStats = colStats))
-
-  /** Probe hook: publish a synthetic batch through the REAL
-    * steady-state append path ([[publishExplicitAppend]] — the one
-    * [[publishAppend]] rides) without writing data files, so
-    * ManifestScaleProbe times the explicit-delta metadata envelope
-    * against the generic diff-derived one. */
-  private[graft] def appendManifestForProbe(spark: SparkSession,
-      dir: String, added: Seq[FileEntry],
-      colStats: Map[(String, String), (Long, Long)] = Map.empty,
-      note: String = "probe:append"): Int = {
-    val cur = currentVersion(spark, dir)
-    val (base, chain) = manifestWithChain(spark, dir, cur)
-    publishExplicitAppend(spark, dir, base, chain, added, colStats,
-      Map.empty, base.schemaJson, note)
-  }
 
   /** Parse a committed manifest (cached — see [[manifestCache]]).
     * Format is line-oriented and dependency-free: a `v` header line, an
@@ -779,7 +755,8 @@ object Snapshot {
     * publishes a DELTA against version-1, so a commit's metadata write
     * is O(what changed), not O(table files) — the per-commit tax that
     * made a million-file estate pay ~hundreds of MB of serialization
-    * per append (ManifestScaleProbe) becomes a few lines, with a full
+    * per append (SCALE.md Round 15, manifest scale envelope) becomes a
+    * few lines, with a full
     * checkpoint at most K-1 versions back bounding every resolution
     * chain (Delta Lake's exact log/checkpoint discipline).
     * `binaryMinFiles`: a FULL manifest with at least this many files
@@ -1823,7 +1800,7 @@ object Snapshot {
     // [[graft.expressions.DvMembership]] probe — one codegen'd call per
     // row (per-thread file memo + bounds check + binary search), vs a
     // broadcast anti-join's UnsafeRow assembly + composite hash probe
-    // (~8× cheaper per row, measured in DvProbe). Keyed on the
+    // (~8× cheaper per row, SCALE.md Round 14 DV read tax). Keyed on the
     // QUALIFIED full path ([[dvKey]] — bare names repeat across hive
     // partition dirs; URI spellings normalize on both sides). Files
     // without a vector pay one memoized null lookup per file; a scan
@@ -3546,10 +3523,8 @@ object Snapshot {
         cuts = Some(vals.init.toSeq))
   }
 
-  /** Serialize-and-publish gate: one lock per JVM serializes local
-    * writers so the exists-check + rename below is race-free within a
-    * driver (the supported model — see the class scaladoc for the
-    * cross-driver story). */
+  /** Serializes this JVM's publishers in front of the create-exclusive
+    * below (see the object scaladoc for the cross-JVM story). */
   private val publishLock = new Object
 
   private def publish(spark: SparkSession, dir: String, m: Manifest): Unit = {
@@ -3644,7 +3619,8 @@ object Snapshot {
         // STREAM the lines out — a million-file manifest with auto-stats
         // sidecars runs to hundreds of MB, and materializing it as one
         // String (plus its getBytes copy) doubled that in transient heap
-        // and dominated publish time (measured in ManifestScaleProbe)
+        // and dominated publish time (SCALE.md Round 15, manifest scale
+        // envelope)
         fullTextLines(mm).foreach { l =>
           os.write(l.getBytes(StandardCharsets.UTF_8)); os.write('\n')
         }
@@ -3727,7 +3703,8 @@ object Snapshot {
     * rewritten — so this path verifies that claim with O(added log
     * table) guards and hands the serializer the delta directly, making
     * an 8-file append to a million-file table a sub-second metadata
-    * commit (ManifestScaleProbe) instead of the measured ~8–9 s diff
+    * commit (SCALE.md Round 17, metadata-envelope cuts) instead of the
+    * measured ~8–9 s diff
     * scan.
     *
     * Soundness: the manifest this method seeds and that readers
@@ -3903,18 +3880,8 @@ object Snapshot {
       case (n, sql) => n -> physicalCheckSql(spark, p, sql) })
       .getOrElse(checks ++ genChecks)
     val physStats = prior.map(physicalName(_, statsCol)).getOrElse(statsCol)
-    // GRAFT_SNAP_DEBUG: section laps for commit-path profiling (write job
-    // vs manifest publish) — env-gated, zero cost when unset
-    val snapDebug = sys.env.contains("GRAFT_SNAP_DEBUG")
-    var lapT = System.nanoTime()
-    def lap(tag: String): Unit = if (snapDebug) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[snap] $dir v$v $tag ${(t1 - lapT) / 1e6}%.0f ms")
-      lapT = t1
-    }
     val written = writeDataFiles(physDf, dir, sub, physStats, nFiles,
       physChecks, cuts)
-    lap("write")
     val fresh = written.files
     // Bloom and col-stats sidecars carry AUTOMATICALLY for carried files
     // (a sidecar describes an immutable file, so carrying by path is
@@ -3966,14 +3933,12 @@ object Snapshot {
       renames = prior.map(_.renames).getOrElse(Nil),
       droppedCols = prior.map(_.droppedCols).getOrElse(Nil),
       genCols = gens, schemaJson = schemaJson)
-    lap("manifest-build")
     try publish(spark, dir, m)
     catch {
       case e: SnapshotConflict =>
         fsOf(spark, dir).delete(new Path(s"$dir/$sub"), true)
         throw e
     }
-    lap("publish")
     v
   }
 

@@ -74,7 +74,7 @@ object StreamOps extends QueryModule {
     * watermark only EVICTS state, it never releases withheld rows) — so
     * a finite AvailableNow drain produces the identical output and the
     * skipped batch's only work was evicting state the stopping query
-    * discards anyway. Measured (R21Probe stream, sf0.1): the trailing
+    * discards anyway. Measured (OPTIMIZATION_r21.md §2, sf0.1): the trailing
     * batch read in=0/out=0 and cost 0.6 s of q74's 1.6 s and 0.8-1.2 s
     * of q95's 2.0-3.5 s. NEVER use for append-mode watermark
     * AGGREGATIONS (q73: closed windows emit IN the no-data batch —
@@ -225,7 +225,7 @@ object StreamOps extends QueryModule {
         // (localCheckpoint): mergeCow evaluates its `changes` twice —
         // the touched-file selection job and the COW merge itself — and
         // both previously re-ran the full micro-batch scan + argmax.
-        // Measured (R22Probe snapSinkTimed, sf0.1 warm): selection
+        // Measured (OPTIMIZATION_r22.md §3, sf0.1 warm): selection
         // 180-430 ms + merge-side re-eval per batch → selection ~30 ms
         // off the ~500-row pinned delta, one batch evaluation total.
         // Semantics unchanged: mergeLatest ≡ mergeDeltas ∘ latestDelta
@@ -800,7 +800,7 @@ object StreamOps extends QueryModule {
           col("n"), col("sum_value"))
         .orderBy(col("user_id"), col("sess_start"))),
 
-    // Width MEASURED (R21Probe width sweep, sf0.1, round 21 — the q95
+    // Width MEASURED (OPTIMIZATION_r21.md §4, sf0.1, round 21 — the q95
     // discipline applied to this drain): min-of-3 interleaved,
     // width 2/4/8 = 1.71/1.75/1.78 s — nearly flat (the drain's fixed
     // cost is the two batches' machinery, not store count at ~3.6k
@@ -874,8 +874,8 @@ object StreamOps extends QueryModule {
         .orderBy(col("c_mktsegment"), col("event_type"))
     }),
 
-    // Width 4 is MEASURED, not guessed (BenchShapes q95_drain_width sweep,
-    // sf0.1, recorded in SCALE.md): a stream-stream join keeps FOUR state
+    // Width 4 is MEASURED, not guessed (q95 drain-width sweep, sf0.1,
+    // SCALE.md streaming row): a stream-stream join keeps FOUR state
     // stores per shuffle partition (keyToNumValues + keyWithIndexToValue
     // per side), each paying delta-file + commit per batch, so width is
     // the dominant fixed cost of the drain — the q73/q74 state-width
@@ -885,8 +885,8 @@ object StreamOps extends QueryModule {
 
     "q74_stream_dedup_state" -> ((s2, d2) => q74drain(s2, d2, width = 8)))
 
-  /** q95's drain body at an explicit state width, separated so BenchShapes
-    * can sweep widths and the registered query pins the measured winner.
+  /** q95's drain body at an explicit state width; the registered query
+    * pins the measured winner.
     *
     * Stream-stream interval join — the attribution shape: purchases join
     * the same user's views from the preceding 6 hours. BOTH sides are
@@ -929,8 +929,8 @@ object StreamOps extends QueryModule {
     c.table(name).orderBy(col("user_id"), col("view_id"), col("buy_id"))
   }
 
-  /** q73's drain body at an explicit state width (the
-    * streamStreamJoinDrain separation, so the width can be swept).
+  /** q73's drain body at an explicit state width (the registered query
+    * pins the measured winner).
     *
     * Genuine Structured Streaming: parquet file source -> watermark ->
     * tumbling agg -> memory sink, drained with AvailableNow. In append
@@ -945,7 +945,7 @@ object StreamOps extends QueryModule {
     * exercised in StreamSpec via MemoryStream. The trailing no-data
     * batch is REQUIRED here (final windows emit in it) — never
     * streamSessionNoTail.
-    * (nanosAsLong comes from the session builder — see Tables.events.) */
+    * (nanosAsLong comes from GraftSession.local — see Tables.events.) */
   private[graft] def watermarkDrain(s: SparkSession, d: String,
                                     width: Int): DataFrame = {
     val c = streamSession(s, width)

@@ -333,7 +333,8 @@ object TextOps extends QueryModule {
       // production-shape tokenizer path end-to-end, not just in a spec;
       // fold == native equivalence on valid tables is additionally pinned
       // in PropertySpec, and the scale gap (fold depth vs native at a
-      // learned 256-rank table) is measured by graft.BpeProbe (SCALE.md).
+      // learned 256-rank table) is in SCALE.md §"×10 beyond the largest
+      // fixture" (BPE apply at tokenizer scale).
       T.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .select(

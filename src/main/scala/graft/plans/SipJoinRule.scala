@@ -291,10 +291,6 @@ case class SipJoinRule(session: SparkSession)
     inDynamicJob.set(true)
     try {
       dynamicJobs.incrementAndGet()
-      if (sys.env.contains("GRAFT_SIP_DEBUG"))
-        // scalastyle:off println
-        println(s"SIP DYNAMIC JOB on attr ${a.name}:\n${plan.treeString}")
-        // scalastyle:on println
       val frame = ExprColumn.frameOf(session,
         Project(Seq(Alias(a, "k")()), plan))
       val conv = CatalystTypeConverters.createToCatalystConverter(a.dataType)
