@@ -17,12 +17,14 @@ import org.apache.spark.sql.SparkSession
   *               actually asserting).
   *  3. derive  — fact ⟕ dim left join, 20-col aliased projection, CASE
   *               decode with the NULL->'Unknown' path (A16-A19), exactly
-  *               the patient_claims_plus CTAS (:161-189). The join is
-  *               REQUIRED Exchange-free off bucketed staging — the engine
+  *               the patient_claims_plus CTAS (:161-189), written once with
+  *               the final DQ gate riding the write. The join is REQUIRED
+  *               Exchange-free off load's bucketed output — the engine
   *               applies the reference's own A20 lesson (checks that can't
   *               fail aren't checks) to its own plan claims.
-  *  4. publish — overwrite-mode parquet materialization (A10/A19) + final
-  *               DQ gate (:194-199).
+  *  4. publish — the post-CTAS row-count audit (:194-199), failing on an
+  *               empty table or a NULL claim_key, plus the optional DB
+  *               landing (A10).
   *
   * Each stage is idempotent (overwrite staging), so reruns are safe — the
   * reference's own recovery model. `run` drives all four stages on any
@@ -32,14 +34,14 @@ import org.apache.spark.sql.SparkSession
 object Pipeline {
 
   /** Runs the full replay; returns (published rows, true join-miss rows,
-    * work dir). Restores the session's broadcast threshold on exit.
+    * work dir).
     *
     * `jdbcUrl`: the reference's publish step is a DATABASE load (Postgres
     * COPY, patient_claims_plus_postgres.py:55-56, 187-189) — pass a JDBC
-    * URL and the publish stage also lands the derived table there through
-    * [[ops.Ingest.writeJdbcBulk]] (one connection per partition, 10k-row
-    * batches, multi-row rewrite on PG — the COPY-grade distributed load).
-    * Parquet publication always happens; the DB landing is the
+    * URL and the publish stage also lands patient_claims_plus there
+    * through [[ops.Ingest.writeJdbcBulk]] (one connection per partition,
+    * 10k-row batches, multi-row rewrite on PG — the COPY-grade distributed
+    * load). The parquet table is always derive's; the DB landing is the
     * reference-faithful extra hop (PipelineSpec replays it against
     * embedded Derby). */
   def run(spark: SparkSession, sf: String,

@@ -18,8 +18,8 @@ import graft.ops.Ingest
   * {{{
   * runMain graft.StageRaw     <work> [sfDir]   # A1-A5   raw landing
   * runMain graft.StageLoad    <work>           # A6-A9/A13/A20 typed loads
-  * runMain graft.StageDerive  <work>           # A16-A19 bucketed derive
-  * runMain graft.StagePublish <work> [jdbcUrl] # A10/A19/A20 publish+gate
+  * runMain graft.StageDerive  <work>           # A16-A19 bucketed join CTAS
+  * runMain graft.StagePublish <work> [jdbcUrl] # A10/A20 audit + DB landing
   * runMain graft.StageMerge   <work> <runTag>  # A22 exactly-once snapshot
   *                                             # upsert (beyond-reference)
   * }}}
@@ -32,12 +32,13 @@ import graft.ops.Ingest
   *    so re-driving it after any partial failure REPLACES half-written
   *    output (never appends, never double-counts) and re-driving it after
   *    success is a no-op byte-wise: the inputs are deterministic.
-  * Handoff is parquet under the shared work dir (the derive join's
-  * bucketed staging is INTERNAL to the derive stage — bucket metadata
+  *
+  * Each byte is written once. Load lands its two outputs already bucketed
+  * and sorted on the join key; derive declares those directories as
+  * external bucketed tables from the schemas below — the bucket metadata
   * lives in the session catalog, which dies with the task JVM, so the
-  * cross-JVM contract is plain parquet and each derive re-run re-buckets
-  * its own inputs; at 100 TB that is one extra columnar read of the
-  * already-filtered load output, not a re-ingest).
+  * cross-JVM contract is the files plus this object's schemas — and
+  * writes patient_claims_plus itself; publish only reads it.
   */
 object Stages {
 
@@ -97,9 +98,13 @@ object Stages {
     StructField("o_totalprice", DoubleType),
     StructField("o_orderdate_ymd", StringType)))
 
+  /** Bucket count of load's two outputs; derive declares the same. */
+  private val Buckets = 8
+
   /** 2. load — contract-checked, FAILFAST, schema'd CSV reads with
     * empty→NULL semantics (A6-A9, A13), DQ-gated (A20, actually
-    * asserting); typed rows land as parquet for the derive handoff. */
+    * asserting); typed rows land bucketed+sorted on the join key, the
+    * layout derive joins on in place. */
   def load(spark: SparkSession, work: String): Unit = {
     Ingest.assertNonEmptyPath(spark, s"$work/claims_csv")
     Ingest.assertNonEmptyPath(spark, s"$work/dim_zips/dim.zip")
@@ -114,34 +119,32 @@ object Stages {
       Ingest.readZippedCsv(spark, s"$work/dim_zips", dimSchema)
         .filter(col("o_totalprice") > 150000.0),
       "raw_dim")
-    Ingest.stageOverwrite(claims, s"$work/load_claims")
-    Ingest.stageOverwrite(dim, s"$work/load_dim")
+    ops.Layout.writeBucketed(claims, s"$work/load_claims", "l_orderkey", Buckets)
+    ops.Layout.writeBucketed(dim, s"$work/load_dim", "o_orderkey", Buckets)
   }
 
-  /** 3. derive — the patient_claims_plus CTAS analog (A16-A19), from
-    * BUCKETED staging: both sides land pre-hashed+sorted on the join key,
-    * and the fact⟕dim join is REQUIRED Exchange-free in the sort-merge
-    * path a 100 TB fact forces (broadcast disabled in a child session to
-    * prove exactly that path — conf isolation, so a concurrently-planned
-    * query in the caller's session never sees the override). */
+  /** 3. derive — the patient_claims_plus CTAS (A16-A19), written once,
+    * with the final DQ gate riding that write (row-count and
+    * not-null(claim_key) metrics via Observation — A20, stronger than the
+    * reference's post-hoc count, which also could never fail). Both sides
+    * are load's bucketed output, declared in place, and the fact⟕dim join
+    * is REQUIRED Exchange-free in the sort-merge path a 100 TB fact forces
+    * (a `merge` hint rules out broadcast in the caller's own session). */
   def derive(spark: SparkSession, work: String): Unit = {
     Ingest.assertNonEmptyPath(spark, s"$work/load_claims")
     Ingest.assertNonEmptyPath(spark, s"$work/load_dim")
     // table names carry the sanitized work-dir path: two pipelines sharing
-    // one session (suite + demo) must not overwrite each other's staging,
-    // and a 32-bit hash could collide into exactly that overwrite — the
-    // full path cannot (csvStageOnce/ivfServing use the same convention)
+    // one session (suite + demo) must not redeclare each other's tables,
+    // and a 32-bit hash could collide into exactly that — the full path
+    // cannot (csvStageOnce/ivfServing use the same convention)
     val sfx = work.replaceAll("[^A-Za-z0-9]", "_")
-    ops.Layout.stageBucketed(spark.read.parquet(s"$work/load_claims"),
-      s"pipeline_claims_b_$sfx", "l_orderkey", 8)
-    ops.Layout.stageBucketed(spark.read.parquet(s"$work/load_dim"),
-      s"pipeline_dim_b_$sfx", "o_orderkey", 8)
-    val noBcast = spark.newSession()
-    noBcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val claimsB = noBcast.table(s"pipeline_claims_b_$sfx")
-    val dimB = noBcast.table(s"pipeline_dim_b_$sfx")
+    val claimsB = ops.Layout.bucketedTable(spark, s"pipeline_claims_b_$sfx",
+      s"$work/load_claims", claimsSchema, "l_orderkey", Buckets)
+    val dimB = ops.Layout.bucketedTable(spark, s"pipeline_dim_b_$sfx",
+      s"$work/load_dim", dimSchema, "o_orderkey", Buckets)
     val derived = claimsB
-      .join(dimB, claimsB("l_orderkey") === dimB("o_orderkey"), "left")
+      .join(dimB.hint("merge"), claimsB("l_orderkey") === dimB("o_orderkey"),
+        "left")
       .select(
         col("l_orderkey").as("claim_key"),
         col("l_linenumber").as("claim_line"),
@@ -160,32 +163,34 @@ object Stages {
     val derivePlan = derived.queryExecution.executedPlan.toString
     require(!derivePlan.contains("Exchange"),
       s"derive join must be Exchange-free off bucketed staging; plan:\n$derivePlan")
-    Ingest.stageOverwrite(derived, s"$work/derived")
-  }
-
-  /** 4. publish — overwrite-mode parquet materialization plus the final
-    * DQ gate in a SINGLE PASS (row-count and not-null(claim_key) metrics
-    * ride the publish write via Observation — A20, stronger than the
-    * reference's post-hoc count, which also could never fail), then the
-    * reference-faithful DB landing through the COPY-grade bulk sink
-    * (patient_claims_plus_postgres.py:55-56). Returns (published rows,
-    * true join-miss rows). */
-  def publish(spark: SparkSession, work: String,
-              jdbcUrl: Option[String] = None,
-              jdbcOptions: Map[String, String] = Map.empty): (Long, Long) = {
-    Ingest.assertNonEmptyPath(spark, s"$work/derived")
-    val derived = spark.read.parquet(s"$work/derived")
     Ingest.observedDqGate(derived, "patient_claims_plus", Seq("claim_key")) {
       d => Ingest.stageOverwrite(d, s"$work/patient_claims_plus")
     }
+  }
+
+  /** 4. publish — the reference's post-CTAS audit (A20, :194-199) as ONE
+    * aggregate job that fails the same gate derive's write carries (empty
+    * table, or NULL claim_key), then the reference-faithful DB landing
+    * through the COPY-grade bulk sink (patient_claims_plus_postgres.py:
+    * 55-56). Writes no files. Returns (published rows, true join-miss
+    * rows). */
+  def publish(spark: SparkSession, work: String,
+              jdbcUrl: Option[String] = None,
+              jdbcOptions: Map[String, String] = Map.empty): (Long, Long) = {
+    Ingest.assertNonEmptyPath(spark, s"$work/patient_claims_plus")
     val out = spark.read.parquet(s"$work/patient_claims_plus")
-    jdbcUrl.foreach(url =>
-      Ingest.writeJdbcBulk(out, url, "patient_claims_plus",
-        options = jdbcOptions))
     // true join misses: the dim side is all-NULL on a left-join miss, and
     // o_custkey is never NULL in a real dim row — unlike the 'Unknown'
     // decode, which also fires for joined orders with an unmapped status
-    (out.count(), out.filter(col("cust_key").isNull).count())
+    val audit = out.agg(count(lit(1)),
+      count_if(col("claim_key").isNull), count_if(col("cust_key").isNull)).head()
+    val rows = audit.getLong(0)
+    Ingest.assertDq("patient_claims_plus", rows,
+      Seq("claim_key" -> audit.getLong(1)))
+    jdbcUrl.foreach(url =>
+      Ingest.writeJdbcBulk(out, url, "patient_claims_plus",
+        options = jdbcOptions))
+    (rows, audit.getLong(2))
   }
 
   /** 5. merge — incremental warehouse maintenance as a RESTARTABLE task:

@@ -150,13 +150,20 @@ object Ingest {
     val row = obs.get
     val n = row("n_rows").asInstanceOf[Long]
     val nulls = notNullCols.map(c => row(s"nulls_$c").asInstanceOf[Long])
-    if (n == 0)
+    assertDq(name, n, notNullCols.zip(nulls))
+    (n, nulls)
+  }
+
+  /** The gate verdict shared by [[observedDqGate]] and the publish audit:
+    * IllegalStateException on zero rows or any NULL in a not-null column,
+    * given as (column, null count). */
+  def assertDq(name: String, rows: Long, nulls: Seq[(String, Long)]): Unit = {
+    if (rows == 0)
       throw new IllegalStateException(s"DQ gate '$name' failed: empty result")
-    val bad = notNullCols.zip(nulls).filter(_._2 > 0)
+    val bad = nulls.filter(_._2 > 0)
     if (bad.nonEmpty)
       throw new IllegalStateException(s"DQ gate '$name' failed: nulls in " +
         bad.map { case (c, k) => s"$c($k)" }.mkString(", "))
-    (n, nulls)
   }
 
   /** A10: the reference's ACTUAL sink — a relational database. The

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.SparkPlan
@@ -128,11 +128,9 @@ object Layout {
       df.write.mode("overwrite").format("parquet").saveAsTable(table)
     }
 
-  /** Stage a table bucketed+sorted on its join key. Two tables staged with
-    * the same bucket count join with NO Exchange on either side (verified
-    * in LayoutSpec against the executed plan) — at scale this converts
-    * every subsequent join/aggregation on `key` from a full shuffle into a
-    * per-bucket local merge. */
+  /** Stage a session-lifetime warehouse table bucketed+sorted on its probe
+    * key (the q120 serving index). Output that must outlive the session —
+    * a stage handoff — goes through [[writeBucketed]] instead. */
   def stageBucketed(df: DataFrame, table: String, key: String,
                     buckets: Int): Unit =
     stagedWrite(df, table) {
@@ -142,6 +140,44 @@ object Layout {
         .sortBy(key)
         .saveAsTable(table)
     }
+
+  /** Write `df` bucketed+sorted on `key` into the directory `path`. Two
+    * outputs written with the same bucket count and declared through
+    * [[bucketedTable]] join with NO Exchange on either side (verified in
+    * LayoutSpec against the executed plan) — at scale every later
+    * join/aggregation on `key` becomes a per-bucket local merge instead of
+    * a full shuffle. No pre-shuffle: each task writes one file per bucket
+    * it holds. Overwrite mode, so a re-run replaces the directory, debris
+    * included. Spark writes buckets only through a catalog table, so the
+    * write goes through a transient external table that is dropped again
+    * (dropping an external table leaves its files). */
+  def writeBucketed(df: DataFrame, path: String, key: String,
+                    buckets: Int): Unit = {
+    val t = "graft_bucketed_write_" + path.replaceAll("[^A-Za-z0-9]", "_")
+    try
+      df.write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(buckets, key)
+        .sortBy(key)
+        .option("path", path)
+        .saveAsTable(t)
+    finally df.sparkSession.sql(s"DROP TABLE IF EXISTS `$t`")
+  }
+
+  /** Declare the files [[writeBucketed]] left at `path` as the external
+    * table `name`, bucketed+sorted on `key`, and return it. The schema is
+    * the caller's, so a reader in a fresh JVM needs only the files. Any
+    * earlier declaration is dropped first, so the file listing is always
+    * the current one. */
+  def bucketedTable(spark: SparkSession, name: String, path: String,
+                    schema: StructType, key: String,
+                    buckets: Int): DataFrame = {
+    spark.sql(s"DROP TABLE IF EXISTS `$name`")
+    spark.sql(s"CREATE TABLE `$name` (${schema.toDDL}) USING parquet " +
+      s"CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $buckets BUCKETS " +
+      s"LOCATION '${path.replace("\\", "\\\\").replace("'", "\\'")}'")
+    spark.table(name)
+  }
 
   /** Stage a table hive-partitioned by DAY, derived from a date column in
     * the CMS `yyyyMMdd` convention (the reference keeps claim/discharge

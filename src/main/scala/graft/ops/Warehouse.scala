@@ -22,7 +22,7 @@ import graft.{Fns => F, QueryModule, Tables => T}
   *    magnitude smaller than the base table, so the changes side
   *    broadcasts (AQE threshold); a fact-sized batch degrades to a
   *    sort-merge join on the co-partitioned key, and on a bucketed base
-  *    layout ([[Layout.stageBucketed]]) that join plans with ZERO
+  *    layout ([[Layout.writeBucketed]]) that join plans with ZERO
   *    Exchange. Rewrite cost at the sink is per-partition (dynamic
   *    partition overwrite), never the full table.
   *  - q43's history build is two per-key window passes plus one run-keyed

@@ -9,22 +9,21 @@ import graft.ops.Layout
 class LayoutSpec extends SparkSpec {
 
   test("bucketed staging: co-located join runs with NO Exchange") {
-    Layout.stageBucketed(
-      Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice"),
-      "graft_orders_b", "o_custkey", 8)
-    Layout.stageBucketed(
-      Tables.customer(spark, sf).select("c_custkey", "c_name"),
-      "graft_customer_b", "c_custkey", 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft_layout_b").toString
+    val orders =
+      Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice")
+    val customer = Tables.customer(spark, sf).select("c_custkey", "c_name")
+    Layout.writeBucketed(orders, s"$dir/orders", "o_custkey", 8)
+    Layout.writeBucketed(customer, s"$dir/customer", "c_custkey", 8)
+    val o2 = Layout.bucketedTable(spark, "graft_orders_b", s"$dir/orders",
+      orders.schema, "o_custkey", 8)
+    val c2 = Layout.bucketedTable(spark, "graft_customer_b", s"$dir/customer",
+      customer.schema, "c_custkey", 8)
     // bucketing pays off in the sort-merge path (broadcast would bypass it
-    // — and at real scale neither side broadcasts). Pin the conf in a
-    // CHILD session (own SQLConf, shared catalog) so a concurrently
-    // running suite never plans under the override — suites share one
-    // JVM-wide session and ScalaTest interleaves them.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val o2 = s2.table("graft_orders_b")
-    val c2 = s2.table("graft_customer_b")
-    val joined = o2.join(c2, o2("o_custkey") === c2("c_custkey"))
+    // — and at real scale neither side broadcasts). A `merge` hint pins
+    // that path without touching the shared session's conf, which a
+    // concurrently running suite may be planning under.
+    val joined = o2.join(c2.hint("merge"), o2("o_custkey") === c2("c_custkey"))
     val n = joined.count()
     assert(n == Tables.orders(spark, sf).count(), "inner join keeps all orders")
     val plan = joined.queryExecution.executedPlan.toString

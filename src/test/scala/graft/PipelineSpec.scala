@@ -1,10 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 /** The full reference-DAG replay under `sbt test`: every stage (CSV+zip
-  * staging, contract-checked loads, bucketed Exchange-free derive join,
-  * publish + DQ gate) runs for real on the smallest fixture — and the
-  * derive-join plan assertion inside Pipeline.run means a plan that
-  * reintroduces a shuffle FAILS this suite, not just a demo run. */
+  * staging, contract-checked loads landing bucketed, the Exchange-free
+  * derive join writing patient_claims_plus, the publish audit + DB
+  * landing) runs for real on the smallest fixture — and the derive-join
+  * plan assertion inside Pipeline.run means a plan that reintroduces a
+  * shuffle FAILS this suite, not just a demo run. Also pinned: each
+  * pipeline byte is written once, and publish's audit refuses a bad
+  * table. */
 class PipelineSpec extends SparkSpec {
 
   test("pipeline replay publishes, preserves claim cardinality, gates its own plan") { Derby.exclusive {
@@ -47,16 +53,17 @@ class PipelineSpec extends SparkSpec {
     assert(rows == Tables.lineitem(spark, sf).count())
     assert(misses > 0 && misses < rows)
     // crash debris at a handoff path (a torn writer's leftovers) must be
-    // REPLACED by the retry, not merged into the stage output
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$work/derived/part-junk.parquet"), "torn")
+    // REPLACED by the retry, not merged into the stage output — a junk
+    // file left in load's bucketed output would also break derive's read
+    val junk = Seq("load_claims", "patient_claims_plus")
+      .map(d => Paths.get(s"$work/$d/part-junk.parquet"))
+    junk.foreach(Files.writeString(_, "torn"))
     // re-drive the middle stages (the Airflow retry), then publish again:
     // byte-identical inputs => identical published result
     Stages.load(spark, work)
     Stages.derive(spark, work)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$work/derived/part-junk.parquet")),
-      "a re-driven stage must replace its output dir, debris included")
+    junk.foreach(j => assert(!Files.exists(j),
+      s"a re-driven stage must replace its output dir, debris included: $j"))
     assert(Stages.publish(spark, work) == ((rows, misses)),
       "a re-driven pipeline must publish the identical result")
 
@@ -82,6 +89,59 @@ class PipelineSpec extends SparkSpec {
     assert(Stages.merge(spark, work, "day2") == 2)
     val v2 = ops.Snapshot.read(spark, snap).count()
     assert(v2 == rows, "upsert of identical published rows is idempotent")
+  }
+
+  test("each pipeline byte is written once; publish only reads") {
+    val work = Files.createTempDirectory("graft_once").toString
+    Stages.stage(spark, work, sf)
+    Stages.load(spark, work)
+    Stages.derive(spark, work)
+    // every file under the work dir, by (size, mtime)
+    def files(): Map[String, (Long, Long)] =
+      scala.util.Using.resource(Files.walk(Paths.get(work))) { w =>
+        w.iterator.asScala.filter(Files.isRegularFile(_)).map(f =>
+          f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis))
+          .toMap
+      }
+    val before = files()
+    val published = Stages.publish(spark, work)
+    val after = files()
+    val touched = (before.keySet ++ after.keySet).filter(f => before.get(f) != after.get(f))
+    assert(touched.isEmpty, "publish must write no file under the work dir")
+    // derive joins load's output in place: nothing restaged into the
+    // session warehouse
+    val wh = Paths.get(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    val restaged = scala.util.Using.resource(Files.list(wh)) { l =>
+      l.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("pipeline_")).toList
+    }
+    assert(restaged.isEmpty, s"derive restaged into the warehouse: $restaged")
+    // a derive in a fresh JVM has no catalog entries: drop this
+    // session's, re-drive derive + publish, same result
+    val declared = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("pipeline_"))
+    assert(declared.length >= 2, declared.mkString(", "))
+    declared.foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    Stages.derive(spark, work)
+    assert(Stages.publish(spark, work) == published,
+      "derive from the files alone must publish the same result")
+  }
+
+  test("publish refuses an empty table or a NULL claim_key") {
+    import spark.implicits._
+    def publishOver(rows: Seq[(Option[Long], Option[Long])]): Unit = {
+      val work = Files.createTempDirectory("graft_gate").toString
+      rows.toDF("claim_key", "cust_key")
+        .write.parquet(s"$work/patient_claims_plus")
+      Stages.publish(spark, work)
+    }
+    publishOver(Seq(Some(1L) -> Some(7L), Some(2L) -> None))
+    val empty = intercept[IllegalStateException](publishOver(Nil))
+    assert(empty.getMessage.contains("empty result"), empty.getMessage)
+    val nullKey = intercept[IllegalStateException](
+      publishOver(Seq(Some(1L) -> Some(7L), None -> Some(8L))))
+    assert(nullKey.getMessage.contains("claim_key(1)"), nullKey.getMessage)
   }
 
   test("cross-process commit race: one winner, clean loser abort") {
