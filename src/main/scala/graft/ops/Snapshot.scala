@@ -1982,36 +1982,6 @@ object Snapshot {
     (inside, boundary.result())
   }
 
-  /** [[metaRangeSplit]] extended with the summed column `c` (round 18
-    * — `sum(amount) WHERE key BETWEEN lo AND hi`, the canonical
-    * windowed warehouse aggregate): a file is answerable from stamps
-    * iff it is WHOLLY inside [lo,hi] (every row's key satisfies),
-    * its clustering-key NULL count is stamped ZERO (a NULL key fails
-    * the predicate but its `c` value is inside the whole-file sum —
-    * unsubtractable), it carries NO DV (a mask always invalidates a
-    * stored sum), and `c`'s [[SumPfx]] stamp is present (or the
-    * [[NullsPfx]] witness proves `c` all-NULL there — contributing 0
-    * with the flag down). Wholly-outside files contribute nothing;
-    * everything else scans WITH the predicate. Returns (rows inside,
-    * stamped sum, any-non-null-c?, scan files); `addExact` refusal as
-    * in [[metaSumSplitCol]]. */
-  private[graft] def metaRangeSumSplit(m: Manifest, lo: Long, hi: Long,
-      physC: String): (Long, Long, Boolean, Seq[FileEntry]) = {
-    val (rows, cs, scan) = metaRangeSumSplitCols(m, lo, hi, Seq(physC))
-    (rows, cs.head._1, cs.head._2, scan)
-  }
-
-  /** The range-windowed sum split for SEVERAL summed columns —
-    * [[metaAggSplitCols]] specialized to sums under a window. */
-  private[graft] def metaRangeSumSplitCols(m: Manifest, lo: Long,
-      hi: Long, physCs: Seq[String])
-      : (Long, Seq[(Long, Boolean)], Seq[FileEntry]) = {
-    val (rows, _, accs, scan) =
-      metaAggSplitCols(m, physCs.map(c => SumSpec(c)), Some((lo, hi)))
-    (rows, accs.map { case SumAcc(t, a) => (t, a); case _ => (0L, false) },
-      scan)
-  }
-
   /** Exact `count(*) WHERE statsCol BETWEEN lo AND hi`: Σ stamps over
     * wholly-inside files + one scan over boundary-overlap files only
     * ([[metaRangeSplit]]) — on a range-clustered 100 TB table the scan
@@ -2143,32 +2113,6 @@ object Snapshot {
     (sums.toMap, scan.result())
   }
 
-  /** METADATA-ONLY GLOBAL SUM split (round 18): partition the
-    * manifest's files into a driver-arithmetic sum and a scan set for
-    * `SELECT sum(c) FROM t` over an INTEGRAL auto-stamped column.
-    * Per file, each refusal degrading to the scan set:
-    *   - a DV masks rows whose contribution the whole-file stamp
-    *     already counted → scan (a mask always invalidates a sum);
-    *   - [[SumPfx]] stamp present → total += stamp (the stamp is the
-    *     file's non-null sum in Spark's own LongType arithmetic —
-    *     NULLs are invisible to SQL SUM, so no witness is needed);
-    *   - no stamp but the [[NullsPfx]] witness proves ALL-NULL
-    *     (`nulls == rows`) → contributes nothing, and the returned
-    *     flag stays false for it (an all-NULL table must answer NULL,
-    *     not 0);
-    *   - legacy/unwitnessed stampless files → scan.
-    * Accumulation is `addExact`: a (beyond-astronomical) overflow of
-    * the STAMPED partial refuses the whole metadata path rather than
-    * choosing wrap-vs-throw on Spark's behalf — the plain scan then
-    * answers under the session's own overflow contract. Returns
-    * (stamped total, any-non-null-stamped?, scan files). */
-  private[graft] def metaSumSplitCol(m: Manifest, physCol: String)
-      : (Long, Boolean, Seq[FileEntry]) = {
-    val (sums, scan) = metaSumSplitCols(m, Seq(physCol))
-    val (t, a) = sums.head
-    (t, a, scan)
-  }
-
   /** What a metadata-aggregate fold should extract per column
     * (round 18): a [[SumSpec]] reads the [[SumPfx]] stamp, a
     * [[RangeSpec]] the column's exact [min,max] stamp (`colStats`
@@ -2177,7 +2121,10 @@ object Snapshot {
     * spec under the all-in-or-all-scan per-file discipline. */
   private[graft] sealed trait StampSpec { def phys: String }
   /** `pfx` selects the sum-like stamp family: [[SumPfx]] (Σx, the
-    * default) or [[SqPfx]] (Σx² — round 19's variance moments). */
+    * default) or [[SqPfx]] (Σx² — round 19's variance moments). A
+    * [[SumPfx]] stamp is the file's non-null sum in Spark's own
+    * LongType arithmetic (decimals: exact micro-units) — NULLs are
+    * invisible to SQL SUM, so no witness is needed where it exists. */
   private[graft] final case class SumSpec(phys: String,
       pfx: String = Snapshot.SumPfx) extends StampSpec
   private[graft] final case class RangeSpec(phys: String,
@@ -2356,48 +2303,25 @@ object Snapshot {
     }
   }
 
-  /** [[metaSumSplitCol]] for SEVERAL summed columns in ONE pass
-    * (round 18 — `SELECT sum(qty), sum(price), count(*)`, the TPC-H
-    * q1 shape) — [[metaAggSplitCols]] specialized to sums. */
-  private[graft] def metaSumSplitCols(m: Manifest, physCols: Seq[String])
-      : (Seq[(Long, Boolean)], Seq[FileEntry]) = {
-    val (_, _, accs, scan) =
-      metaAggSplitCols(m, physCols.map(c => SumSpec(c)))
-    (accs.map { case SumAcc(t, a) => (t, a); case _ => (0L, false) }, scan)
-  }
-
-  /** GROUPED SUM split (round 18): `SELECT g, count(*), sum(c)
-    * GROUP BY g` from stamps — the [[metaGroupSplit]] /
+  /** The grouped metadata-aggregate fold (round 18): the
+    * [[metaAggSplitCols]] spec discipline under the [[metaGroupSplit]] /
     * [[metaGroupSplitCol]] single-valued-file discipline for the
-    * GROUPING column `g` joined with the [[SumPfx]] stamp of the
-    * SUMMED column `c`, per file:
+    * GROUPING column `g` — a file feeds its group's (rows, per-spec
+    * accumulators) only when `g` is provably single-valued there AND
+    * every spec is provable. Per file:
     *   - any DV → scan (masks invalidate both counts and sums);
     *   - `g` provably all-NULL (`witness == rows`, or `kNulls == rows`
     *     for the clustering column) → the whole file feeds the NULL
-    *     group: rows, plus `c`'s stamp (or 0 with the flag false when
-    *     `c` is itself all-NULL there);
+    *     group (a spec column all-NULL there contributes nothing, its
+    *     NULL-ness flag down);
     *   - `g` single-valued with ZERO nulls → the file feeds group v
     *     the same way;
     *   - `g` single-valued WITH nulls → scan: the per-subgroup split
-    *     of `c`'s whole-file sum is unknowable from stamps;
+    *     of a whole-file stamp is unknowable;
     *   - mixed / unstamped / unwitnessed → scan.
-    * Returns (group → (rows, sum, any-non-null-c?), scan files);
-    * `addExact` refusal as in [[metaSumSplitCol]]. */
-  private[graft] def metaGroupSumSplitCol(m: Manifest, physG: String,
-      gIsClustering: Boolean, physC: String)
-      : (Map[Option[Long], (Long, Long, Boolean)], Seq[FileEntry]) = {
-    val (sums, scan) =
-      metaGroupSumSplitCols(m, physG, gIsClustering, Seq(physC))
-    (sums.map { case (k, (n, cs)) =>
-      k -> (n, cs.head._1, cs.head._2) }, scan)
-  }
-
-  /** The grouped metadata-aggregate fold (round 18): the
-    * [[metaAggSplitCols]] spec discipline under the
-    * [[metaGroupSumSplitCol]] grouping rules — a file feeds its
-    * group's (rows, per-spec accumulators) only when the grouping
-    * column is provably single-valued there AND every spec is
-    * provable. Returns (group → (rows, per-spec accs), scan files). */
+    * Returns (group → (rows, per-spec accs), scan files); an `addExact`
+    * overflow degrades the file that triggered it, as in
+    * [[metaAggSplitCols]]. */
   private[graft] def metaGroupAggSplitCols(m: Manifest, physG: String,
       gIsClustering: Boolean, specs: Seq[StampSpec],
       bounds: Option[(Long, Long)] = None)
@@ -2570,18 +2494,6 @@ object Snapshot {
     } catch {
       case _: ArithmeticException => (Map.empty, m.files)
     }
-  }
-
-  /** The grouped-sum split for SEVERAL summed columns —
-    * [[metaGroupAggSplitCols]] specialized to sums. */
-  private[graft] def metaGroupSumSplitCols(m: Manifest, physG: String,
-      gIsClustering: Boolean, physCs: Seq[String])
-      : (Map[Option[Long], (Long, Seq[(Long, Boolean)])], Seq[FileEntry]) = {
-    val (accs, scan) = metaGroupAggSplitCols(m, physG, gIsClustering,
-      physCs.map(c => SumSpec(c)))
-    (accs.map { case (k, (n, cs)) =>
-      k -> (n, cs.map { case SumAcc(t, a) => (t, a); case _ => (0L, false) })
-    }, scan)
   }
 
   /** Exact `SELECT statsCol, count(*) GROUP BY statsCol`: per-group

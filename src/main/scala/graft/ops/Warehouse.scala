@@ -1998,8 +1998,8 @@ object Warehouse extends QueryModule {
 
     "q175_agg_meta_sum" -> ((s, d) => {
       // METADATA-ONLY SUM ([[statusOrders]] →
-      // [[Snapshot.metaSumSplitCol]] / [[Snapshot.metaGroupSumSplitCol]]
-      // riding [[graft.plans.MetadataOnlyCountRule]] rewrites #6/#7,
+      // [[Snapshot.metaAggSplitCols]] / [[Snapshot.metaGroupAggSplitCols]]
+      // riding [[graft.plans.MetadataOnlyCountRule]] rewrites #3/#6,
       // round 18 — past what any public system stamps): every write's
       // stats pass also records each INTEGRAL column's per-file sum as
       // the `sum:<col>` colStats pseudo-column (the null-witness
@@ -2024,20 +2024,19 @@ object Warehouse extends QueryModule {
       // refusal, and the `sum:`-shadow discipline are SourceSpec-pinned.
       val dir = statusOrders(s, d)
       val m = Snapshot.manifest(s, dir, Snapshot.currentVersion(s, dir))
-      val (_, _, scanG) = Snapshot.metaSumSplitCol(m, "order_key")
+      val (_, _, _, scanG) =
+        Snapshot.metaAggSplitCols(m, Seq(Snapshot.SumSpec("order_key")))
       require(scanG.isEmpty,
         "every band file must carry the order_key sum stamp")
-      val (sums, scanGrp) =
-        Snapshot.metaGroupSumSplitCol(m, "rcode",
-          gIsClustering = false, "order_key")
+      val (sums, scanGrp) = Snapshot.metaGroupAggSplitCols(m, "rcode",
+        gIsClustering = false, Seq(Snapshot.SumSpec("order_key")))
       require(sums.nonEmpty,
         "band files must answer the grouped-sum split from stamps")
       // the DECIMAL measure (price, scale 2) stamps exact micro-unit
       // sums — the money phase's grouped split shares the same scan
       // set (eligibility is per-(g,c) stamps, identical here)
-      val (sumsP, scanP) =
-        Snapshot.metaGroupSumSplitCol(m, "rcode",
-          gIsClustering = false, "price")
+      val (sumsP, scanP) = Snapshot.metaGroupAggSplitCols(m, "rcode",
+        gIsClustering = false, Seq(Snapshot.SumSpec("price")))
       require(sumsP.nonEmpty,
         "band files must answer the decimal grouped-sum from stamps")
       val fd = s.read.format("graft").load(dir)
@@ -2057,12 +2056,13 @@ object Warehouse extends QueryModule {
         .select(lit("money").as("phase"), col("rcode"), col("n"),
           nullL.as("sk"), F.od(col("spd")).as("sp"),
           lit(scanP.size.toLong).as("n_scan"))
-      // the RANGE-FILTERED window (round-18 extension of rewrite #6b):
+      // the RANGE-FILTERED window (round-18 extension of rewrite #6):
       // `sum(order_key) WHERE scode >= 79` — the 79/80 bands wholly
       // inside sum from stamps, the mixed tail (min 70) straddles and
       // scans WITH the predicate, the 70 band vanishes
-      val (_, _, _, scanR) =
-        Snapshot.metaRangeSumSplit(m, 79L, Long.MaxValue, "order_key")
+      val (_, _, _, scanR) = Snapshot.metaAggSplitCols(m,
+        Seq(Snapshot.SumSpec("order_key")),
+        bounds = Some((79L, Long.MaxValue)))
       val rng = fd.filter(col("scode") >= 79)
         .agg(count(lit(1)).as("n"), sum(col("order_key")).as("sk"))
         .select(lit("range").as("phase"), lit(-1).as("rcode"),
@@ -2075,7 +2075,7 @@ object Warehouse extends QueryModule {
     "q176_agg_meta_extrema" -> ((s, d) => {
       // METADATA-ONLY GROUPED AND WINDOWED MIN/MAX ([[statusOrders]] →
       // [[Snapshot.metaGroupAggSplitCols]] / [[Snapshot.metaAggSplitCols]]
-      // riding MetadataOnlyCountRule rewrites #6b/#7, round 18 — the
+      // riding MetadataOnlyCountRule rewrite #6, round 18 — the
       // {min,max} × {grouped, range-window} arms that complete the
       // reflex matrix): `group` rolls up count + min/max(order_key) BY
       // the non-clustering rcode — per-group extremes from each band
@@ -2184,7 +2184,7 @@ object Warehouse extends QueryModule {
     "q180_agg_meta_gwindow" -> ((s, d) => {
       // GROUPED AGGREGATES UNDER A CLUSTERING-RANGE WINDOW
       // ([[statusOrders]] → [[Snapshot.metaGroupAggSplitCols]] with
-      // bounds, riding groupedSumRewrite's round-19 filtered path —
+      // bounds, riding aggRewrite's round-19 filtered grouped path —
       // THE dashboard query: "rows, revenue, and average ticket per
       // day for the last week"): `GROUP BY scode … WHERE scode >= lo`
       // serves wholly-inside single-valued bands from stamps, lets

@@ -3,11 +3,11 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, If, IsNotNull, LessThan, LessThanOrEqual, Literal, Multiply, NamedExpression, PredicateHelper}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, CentralMomentAgg, Complete, Count, DeclarativeAggregate, HyperLogLogPlusPlus, Max, Min, StddevPop, StddevSamp, Sum, VariancePop, VarianceSamp}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, CentralMomentAgg, Complete, Count, DeclarativeAggregate, HyperLogLogPlusPlus, Max, Min, StddevPop, StddevSamp, Sum, VariancePop, VarianceSamp}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, IntegerType, LongType, ShortType, StringType}
 
 import graft.ops.Snapshot
 import graft.sources.GraftRelation
@@ -16,22 +16,25 @@ import graft.sources.GraftRelation
   * Delta's metadata-only query optimization
   * (`OptimizeMetadataOnlyQuery` / numRecords), re-expressed as a
   * Catalyst `Rule[LogicalPlan]` injected through
-  * [[graft.GraftExtensions]]. Three rewrites, each firing ONLY when it
-  * is provably the same answer:
+  * [[graft.GraftExtensions]]. Every rewrite fires ONLY when it is
+  * provably the same answer; anything unprovable refuses (the plain
+  * scan answers) or degrades the file into a restricted scan. The
+  * rewrite families, in dispatch order:
   *
-  * '''1. Global unfiltered COUNT(*)''' (round 16).
+  * '''1. Global unfiltered COUNT(*)''' ([[countRows]], round 16).
   * `spark.read.format("graft").load(dir).count()` on a 100 TB table
   * becomes one `LocalRelation` row built from Σ per-file row stamps −
   * Σ deletion-vector positions: zero tasks, zero bytes of data I/O.
   * Guards: the aggregate is global (no grouping) and every output is a
   * non-distinct, unfiltered `count(<non-null literal>)` — the
   * `count(*)` / `count(1)` family (`count(col)` is null-sensitive and
-  * never rewrites); the child is the relation under Project nodes only
+  * belongs to #6); the child is the relation under Project nodes only
   * (projections cannot change cardinality); every file carries a row
   * stamp ([[GraftRelation.metaRowCount]] is Some) — unknown is never
   * zero, pre-stamp and adopted tables keep scanning.
   *
-  * '''2. Clustering-range-filtered COUNT(*)''' (round 17).
+  * '''2. Clustering-range-filtered COUNT(*)'''
+  * ([[filteredCountRewrite]], round 17).
   * `count(*) WHERE key BETWEEN lo AND hi` on the CLUSTERING column
   * splits the manifest's files by [[Snapshot.metaRangeSplit]]: files
   * WHOLLY inside [lo,hi] sum from stamps (row count − DV positions;
@@ -50,23 +53,58 @@ import graft.sources.GraftRelation
   * exact. A contradictory range (`lo > hi`) answers 0 — proven by the
   * predicate itself, independent of any stamp.
   *
-  * '''3. Global unfiltered MIN/MAX of the clustering column'''
-  * (round 17). `min(key)` / `max(key)` (mixed freely with count-star
-  * outputs) answer from pure manifest arithmetic — min of file mins /
-  * max of file maxes — when [[Snapshot.clusteringMinMaxMeta]] can
+  * '''3. Global unfiltered MIN/MAX, and full-metadata SUM'''
+  * ([[minMaxRewrite]], rounds 17–18). `min(key)` / `max(key)` (mixed
+  * freely with count-star outputs) answer from pure manifest
+  * arithmetic — min of file mins / max of file maxes — when [[Snapshot.clusteringMinMaxMeta]] can
   * prove the stamps exact: no deletion vectors anywhere (a DV may
   * have masked the extreme row), every file's row count stamped
   * positive (an adopted empty file would stamp phantom extremes), no
   * degraded full-open stamp. NULL keys are harmless: SQL MIN/MAX and
   * the stamps both ignore them. Widening integral casts of the key
-  * commute with MIN/MAX and are accepted.
+  * commute with MIN/MAX and are accepted. Other columns answer from
+  * their sidecar stamps when the stamp kind is exact (integral, DATE,
+  * STRING); `sum(c)` answers when EVERY file is stamped or witnessed
+  * all-NULL.
   *
-  * All three rewrites reuse the Aggregate's own output attributes (or
-  * alias onto its exprIds), so downstream references resolve
-  * unchanged; time travel is free in each — the relation pins its
-  * version's manifest, so a `VERSION AS OF` aggregate answers from
-  * that version's stamps. Boundary relations are marked restricted
-  * and are never themselves rewritten (convergence + soundness). */
+  * '''4. GROUP BY one column, counting''' ([[groupedCountRewrite]],
+  * round 17). `SELECT g, count(*) GROUP BY g` sums per-group stamps of
+  * single-valued files ([[Snapshot.metaGroupSplit]] /
+  * [[Snapshot.metaGroupSplitCol]]); everything else scans restricted
+  * and merges. A clustering-range window composes when `g` IS the
+  * clustering column.
+  *
+  * '''5. Global count(c) / count(DISTINCT c)'''
+  * ([[distinctCountRewrite]], round 17) — the same grouped split,
+  * merged into global outputs.
+  *
+  * '''6. SUM / MIN / MAX / AVG / count(c) / variance, global or
+  * grouped''' ([[aggRewrite]], rounds 18–20). One rewrite for both
+  * arities: a global aggregate is a GROUP BY over the empty grouping
+  * set (Gray et al., Data Cube, ICDE 1996), so zero keys is the
+  * one-group case. Stamped partials ride a LocalRelation, files the
+  * fold cannot prove scan restricted, and an outer aggregate of each
+  * output's own kind merges the two. Range windows, literals and
+  * single-aggregate scalar wrappers compose.
+  *
+  * '''7. Opt-in approx_count_distinct, global or grouped'''
+  * ([[approxDistinctRewrite]], round 19), behind
+  * [[MetadataOnlyCountRule.ApproxDistinctSketchKey]]: the HLL register
+  * sidecars answer when at least as tight as the requested relativeSD.
+  *
+  * The count-only families (1, 2, 4) keep their own folds
+  * ([[Snapshot.metaCount]], [[Snapshot.metaRangeSplit]],
+  * [[Snapshot.metaGroupSplit]]): those answer DV'd files from stamps
+  * (rows − masked positions), where the aggregate folds behind #6 send
+  * them to the scan set.
+  *
+  * All rewrites reuse the Aggregate's own output attributes (or alias
+  * onto its exprIds), so downstream references resolve unchanged; time
+  * travel is free — the relation pins its version's manifest. Boundary
+  * relations are marked restricted and are never themselves rewritten
+  * (convergence + soundness). Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.MetadataOnlyCountRule`
+  * switches the whole rule off for a session. */
 case class MetadataOnlyCountRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -231,6 +269,57 @@ case class MetadataOnlyCountRule(session: SparkSession)
     case _ => None
   }
 
+  /** The relation under `plan` with its clustering-range window: the
+    * unfiltered relation (None), or a Filter whose conjuncts all fold
+    * into one [lo, hi] window ([[boundsOf]]). */
+  private def windowedRelationOf(plan: LogicalPlan)
+      : Option[(LogicalRelation, GraftRelation, Option[(Long, Long)])] =
+    relationOf(plan).map { case (lr, g) => (lr, g, None) }.orElse(
+      filteredRelationOf(plan).flatMap { case (f, lr, g) =>
+        boundsOf(splitConjunctivePredicates(f.condition), lr, g)
+          .map(b => (lr, g, Some(b)))
+      })
+
+  /** `plan` with `lr` restricted to `files` — the boundary scan a
+    * hybrid rewrite merges with its stamped partials. */
+  private def restrictedTo(plan: LogicalPlan, lr: LogicalRelation,
+      g: GraftRelation, files: Seq[Snapshot.FileEntry]): LogicalPlan =
+    plan.transformUp {
+      case l: LogicalRelation if l eq lr =>
+        l.copy(relation = g.restrictedTo(files.map(_.path).toSet))
+    }
+
+  /** Stamped groups as a LocalRelation UNIONed with one restricted
+    * scan over `scan`, both laid out as (key?, rows, partials…): the
+    * scan side aggregates `partials` grouped by `keys` (empty = one
+    * global row); the local side declares the partial columns as
+    * `partialOut` and carries `rows`, one per stamped group. An outer
+    * aggregate over the union merges them. */
+  private def hybridUnion(child: LogicalPlan, lr: LogicalRelation,
+      g: GraftRelation, scan: Seq[Snapshot.FileEntry],
+      keys: Seq[AttributeReference], partials: Seq[NamedExpression],
+      partialOut: Seq[AttributeReference], rows: Seq[Seq[Any]]): Union = {
+    val cnt = Alias(AggregateExpression(Count(Seq(Literal(1L))), Complete,
+      isDistinct = false), "gm_part_cnt")()
+    val scanAgg = Aggregate(keys, keys ++ (cnt +: partials),
+      restrictedTo(child, lr, g, scan))
+    val out = keys.map(k => AttributeReference("gm_k", k.dataType)()) ++
+      (AttributeReference("gm_c", LongType, nullable = false)() +: partialOut)
+    Union(Seq(scanAgg, LocalRelation(out, rows.map(InternalRow.fromSeq))))
+  }
+
+  /** A stamped Long as the internal value of `dt`: integral columns
+    * stamp raw longs, DATE columns epoch days. None for any other
+    * dtype (timestamp/decimal stamps are truncated/saturated). */
+  private def typedLong(v: Long, dt: DataType): Option[Any] = dt match {
+    case LongType    => Some(v)
+    case IntegerType => Some(v.toInt)
+    case ShortType   => Some(v.toShort)
+    case ByteType    => Some(v.toByte)
+    case DateType    => Some(v.toInt)
+    case _           => None
+  }
+
   private def countRows(exprs: Seq[NamedExpression],
       output: Seq[Attribute], n: Long): LocalRelation =
     LocalRelation(output,
@@ -256,12 +345,8 @@ case class MetadataOnlyCountRule(session: SparkSession)
             val cnt = Alias(AggregateExpression(
               Count(Seq(Literal(1L))), Complete, isDistinct = false),
               "gm_boundary_cnt")()
-            val newChild = agg.child.transformUp {
-              case l: LogicalRelation if l eq lr =>
-                l.copy(relation =
-                  g.restrictedTo(boundary.map(_.path).toSet))
-            }
-            val inner = Aggregate(Nil, Seq(cnt), newChild)
+            val inner = Aggregate(Nil, Seq(cnt),
+              restrictedTo(agg.child, lr, g, boundary))
             val outs = agg.aggregateExpressions.zip(agg.output).map {
               case (e, a) => litOf(e) match {
                 case Some(l) => Alias(l, a.name)(exprId = a.exprId)
@@ -292,13 +377,6 @@ case class MetadataOnlyCountRule(session: SparkSession)
       val strMeta =
         scala.collection.mutable.Map.empty[String,
           Option[(String, String)]]
-      def typedLong(v: Long, dt: DataType): Option[Any] = dt match {
-        case LongType    => Some(v)
-        case IntegerType => Some(v.toInt)
-        case ShortType   => Some(v.toShort)
-        case ByteType    => Some(v.toByte)
-        case _           => None
-      }
       def boundOf(c: Expression, outDt: DataType,
                   isMin: Boolean): Option[Any] =
         keyAttrOf(c).flatMap { a =>
@@ -309,18 +387,13 @@ case class MetadataOnlyCountRule(session: SparkSession)
           else {
             val phys = Snapshot.physicalName(m, a.name)
             a.dataType match {
-              case ByteType | ShortType | IntegerType | LongType =>
+              case ByteType | ShortType | IntegerType | LongType |
+                  DateType =>
                 longMeta.getOrElseUpdate(phys,
                   Snapshot.sidecarMinMaxMeta(m, phys))
                   .flatMap(p =>
                     typedLong(if (isMin) p._1 else p._2, outDt))
-              case org.apache.spark.sql.types.DateType
-                  if outDt == org.apache.spark.sql.types.DateType =>
-                longMeta.getOrElseUpdate(phys,
-                  Snapshot.sidecarMinMaxMeta(m, phys))
-                  .map(p => (if (isMin) p._1 else p._2).toInt)
-              case org.apache.spark.sql.types.StringType
-                  if outDt == org.apache.spark.sql.types.StringType =>
+              case StringType if outDt == StringType =>
                 strMeta.getOrElseUpdate(phys,
                   Snapshot.sidecarStrMinMaxMeta(m, phys))
                   .map(p =>
@@ -336,20 +409,21 @@ case class MetadataOnlyCountRule(session: SparkSession)
           ae.aggregateFunction match {
             case Min(c) => boundOf(c, al.dataType, isMin = true)
             case Max(c) => boundOf(c, al.dataType, isMin = false)
-            // '''6. Global SUM from per-file sum stamps''' (round 18)
-            // — full-metadata arm only (every file stamped or provably
-            // all-NULL; the partial/hybrid arm is [[sumRewrite]]).
+            // Global SUM from per-file sum stamps (round 18) —
+            // full-metadata arm only (every file stamped or provably
+            // all-NULL; the partial/hybrid arm is #6, [[aggRewrite]]).
             // Some(null) is the honest SQL answer for an all-NULL
             // column, distinct from None = refuse.
             case Sum(c, _) if !ae.isDistinct =>
               sumAttrOf(c, lr, g).flatMap { a =>
                 sumCodecOf(a).filter(_._1 == al.dataType)
                   .flatMap { case (_, dec) =>
-                    val (total, any, scan) = Snapshot.metaSumSplitCol(m,
-                      Snapshot.physicalName(m, a.name))
-                    if (scan.nonEmpty) None
-                    else if (!any) Some(null: Any)
-                    else dec(total)
+                    Snapshot.metaAggSplitCols(m, Seq(Snapshot.SumSpec(
+                      Snapshot.physicalName(m, a.name)))) match {
+                      case (_, _, Seq(Snapshot.SumAcc(total, any)), Seq()) =>
+                        if (!any) Some(null: Any) else dec(total)
+                      case _ => None
+                    }
                   }
               }
             case _      => None
@@ -381,39 +455,20 @@ case class MetadataOnlyCountRule(session: SparkSession)
     case _ => false
   }
 
-  /** '''4. GROUP BY the clustering column, counting''' (round 17 —
-    * Delta's `OptimizeMetadataOnlyQuery` partition-value analog on
-    * range stamps). `SELECT key[, count(*)…] GROUP BY key` answers
-    * per-group sums from [[Snapshot.metaGroupSplit]]'s stamp
-    * arithmetic for SINGLE-VALUED files (min == max: a
-    * partition-value-clustered table — ingest-date bands, tenant
-    * shards, status codes — is all such files), while mixed-value,
-    * DV-ambiguous or unstamped files degrade into one
-    * boundary-restricted grouped scan merged by a final aggregate.
-    * A clustering-range FILTER below the grouping ("rows per day for
-    * the last week") composes: wholly-outside files drop by stamps
-    * alone, NULL keys are excluded (they fail any range predicate),
-    * a contradictory range answers zero groups, and the scan branch
-    * keeps the predicate. None = guards refuse (non-integral key,
-    * unprovable filter conjuncts, every file degraded). */
-  /** Eligible grouped-count dtype: integral always; DATE for
-    * NON-clustering columns (epoch-day `colStats` stamps are exact and
-    * its internal representation is the stamped Int — the clustering
-    * column is integral by the stats contract). Timestamp/decimal
-    * stamps are truncated/saturated and never single-value-exact. */
+  /** Eligible grouping dtype: integral always; DATE for NON-clustering
+    * columns (epoch-day `colStats` stamps are exact and its internal
+    * representation is the stamped Int — the clustering column is
+    * integral by the stats contract). Timestamp/decimal stamps are
+    * truncated/saturated and never single-value-exact. */
   private def groupableDtype(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case org.apache.spark.sql.types.DateType => true
+    case ByteType | ShortType | IntegerType | LongType | DateType => true
     case _ => false
   }
 
-  private def typedKey(v: Long, dt: DataType): Any = dt match {
-    case LongType    => v
-    case IntegerType => v.toInt
-    case ShortType   => v.toShort
-    case ByteType    => v.toByte
-    case org.apache.spark.sql.types.DateType => v.toInt
-  }
+  /** A stamped group key as the grouping column's value (None = the
+    * NULL group). */
+  private def keyValue(k: Option[Long], dt: DataType): Any =
+    k.flatMap(typedLong(_, dt)).orNull
 
   /** The grouped stamp split for `a` — the clustering column reads the
     * `FileEntry` stamps ([[Snapshot.metaGroupSplit]]), any other
@@ -428,16 +483,32 @@ case class MetadataOnlyCountRule(session: SparkSession)
       Snapshot.metaGroupSplitCol(m, Snapshot.physicalName(m, a.name))
   }
 
+  /** Stamped per-group row counts UNIONed with one restricted scan
+    * grouped by `g` — rows (g, count) on both sides. */
+  private def countUnion(child: LogicalPlan, lr: LogicalRelation,
+      gr: GraftRelation, g: AttributeReference,
+      sums: Map[Option[Long], Long], scan: Seq[Snapshot.FileEntry]): Union =
+    hybridUnion(child, lr, gr, scan, Seq(g), Nil, Nil,
+      sums.toSeq.map { case (k, n) => Seq(keyValue(k, g.dataType), n) })
+
+  /** '''4. GROUP BY one column, counting''' (round 17 — Delta's
+    * `OptimizeMetadataOnlyQuery` partition-value analog on range
+    * stamps). `SELECT g[, count(*)…] GROUP BY g` answers per-group sums
+    * from [[groupSplitOf]]'s stamp arithmetic for SINGLE-VALUED files
+    * (min == max: a partition-value-clustered table — ingest-date
+    * bands, tenant shards, status codes — is all such files), while
+    * mixed-value, DV-ambiguous or unstamped files degrade into one
+    * boundary-restricted grouped scan merged by a final aggregate. A
+    * clustering-range FILTER below the grouping ("rows per day for the
+    * last week") composes when `g` is the clustering column:
+    * wholly-outside files drop by stamps alone, NULL keys are excluded
+    * (they fail any range predicate), a contradictory range answers
+    * zero groups, and the scan branch keeps the predicate. None =
+    * guards refuse (non-groupable key, unprovable filter conjuncts,
+    * every file degraded). */
   private def groupedCountRewrite(agg: Aggregate,
-      g: AttributeReference): Option[LogicalPlan] = {
-    val unfiltered = relationOf(agg.child)
-      .map(r => (r, None: Option[(Long, Long)]))
-    def filtered = filteredRelationOf(agg.child).flatMap {
-      case (f, lr, gr) =>
-        boundsOf(splitConjunctivePredicates(f.condition), lr, gr)
-          .map(b => ((lr, gr), Some(b): Option[(Long, Long)]))
-    }
-    unfiltered.orElse(filtered).flatMap { case ((lr, gr), bounds) =>
+      g: AttributeReference): Option[LogicalPlan] =
+    windowedRelationOf(agg.child).flatMap { case (lr, gr, bounds) =>
       if (!groupableDtype(g.dataType) ||
           !lr.output.exists(_.exprId == g.exprId) ||
           // a range FILTER composes only when the grouped column IS the
@@ -448,7 +519,6 @@ case class MetadataOnlyCountRule(session: SparkSession)
         // contradictory range: zero rows, hence zero groups
         Some(LocalRelation(agg.output, Nil))
       else {
-        def typed(v: Long): Any = typedKey(v, g.dataType)
         val m = gr.pinnedManifest
         val (sums, scan) = bounds match {
           case Some((lo, hi)) =>
@@ -460,36 +530,19 @@ case class MetadataOnlyCountRule(session: SparkSession)
           // every file single-valued and fully accounted: one local row
           // per group, in the aggregate's own output shape
           val rows = sums.toSeq.map { case (k, n) =>
-            val kv = k.map(typed).orNull
+            val kv = keyValue(k, g.dataType)
             InternalRow.fromSeq(agg.aggregateExpressions.map(e =>
               if (isKeyOutput(e, g)) kv
               else litOf(e).map(_.value).getOrElse(n: Any)))
           }
           Some(LocalRelation(agg.output, rows))
         } else {
-          // stamped groups as a LocalRelation, degraded files as one
-          // restricted grouped scan, merged by a summing aggregate that
-          // reuses the original output exprIds
-          val cnt = Alias(AggregateExpression(
-            Count(Seq(Literal(1L))), Complete, isDistinct = false),
-            "gm_part_cnt")()
-          val newChild = agg.child.transformUp {
-            case l: LogicalRelation if l eq lr =>
-              l.copy(relation = gr.restrictedTo(scan.map(_.path).toSet))
-          }
-          val scanAgg = Aggregate(Seq(g), Seq(g, cnt), newChild)
-          val localOut = Seq(
-            AttributeReference("gm_k", g.dataType)(),
-            AttributeReference("gm_c", LongType, nullable = false)())
-          val local = LocalRelation(localOut,
-            sums.toSeq.map { case (k, n) =>
-              InternalRow.fromSeq(Seq(k.map(typed).orNull, n))
-            })
-          val un = Union(Seq(scanAgg, local))
+          // stamped groups + degraded files' grouped scan, merged by a
+          // summing aggregate that reuses the original output exprIds
+          val un = countUnion(agg.child, lr, gr, g, sums, scan)
           val uk = un.output.head
-          val uc = un.output(1)
           val sumCnt = Coalesce(Seq(AggregateExpression(
-            Sum(uc), Complete, isDistinct = false), Literal(0L)))
+            Sum(un.output(1)), Complete, isDistinct = false), Literal(0L)))
           val outs = agg.aggregateExpressions.map { e =>
             if (isKeyOutput(e, g)) Alias(uk, e.name)(exprId = e.exprId)
             else litOf(e) match {
@@ -501,7 +554,6 @@ case class MetadataOnlyCountRule(session: SparkSession)
         }
       }
     }
-  }
 
   /** The stamp decoding for a summable column dtype: Spark's SUM
     * result dtype for it, and the internal result value from the
@@ -706,20 +758,6 @@ case class MetadataOnlyCountRule(session: SparkSession)
     catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** min/max stamp decoding to the OUTPUT dtype (bare attr, or the
-    * widening integral cast `keyAttrOf` admits): integral and DATE
-    * columns only — string/timestamp/decimal hybrids refuse here (the
-    * full-metadata rewrite #3 already serves full-stamp strings). */
-  private def rangeValue(v: Long, outDt: DataType): Option[Any] =
-    outDt match {
-      case LongType    => Some(v)
-      case IntegerType => Some(v.toInt)
-      case ShortType   => Some(v.toShort)
-      case ByteType    => Some(v.toByte)
-      case org.apache.spark.sql.types.DateType => Some(v.toInt)
-      case _ => None
-    }
-
   /** Is `e` a non-distinct unfiltered `count(col)` of a bare (or
     * widening-cast) relation attribute? ANY dtype qualifies — the
     * answer needs only the NULL witness (`rows − nulls` per file),
@@ -737,8 +775,12 @@ case class MetadataOnlyCountRule(session: SparkSession)
   }
 
   /** Is `e` a non-distinct unfiltered `min(col)`/`max(col)` whose
-    * answer per-file [min,max] stamps can speak about? Returns
-    * (attr, isMin, output dtype). */
+    * answer per-file [min,max] stamps can speak about — integral and
+    * DATE columns, decoded by [[typedLong]] to the OUTPUT dtype (bare
+    * attr, or the widening integral cast `keyAttrOf` admits)?
+    * String/timestamp/decimal hybrids refuse here (the full-metadata
+    * rewrite #3 already serves full-stamp strings). Returns (attr,
+    * isMin, output dtype). */
   private def rangeKeyOf(e: NamedExpression, lr: LogicalRelation,
       g: GraftRelation)
       : Option[(AttributeReference, Boolean, DataType)] = e match {
@@ -746,12 +788,8 @@ case class MetadataOnlyCountRule(session: SparkSession)
         if ae.mode == Complete && ae.filter.isEmpty && !ae.isDistinct =>
       def attr(c: Expression): Option[AttributeReference] =
         keyAttrOf(c).filter(a => lr.output.exists(_.exprId == a.exprId) &&
-          rangeValue(0L, al.dataType).isDefined &&
-          (a.dataType match {
-            case ByteType | ShortType | IntegerType | LongType |
-                org.apache.spark.sql.types.DateType => true
-            case _ => false
-          }))
+          typedLong(0L, al.dataType).isDefined &&
+          groupableDtype(a.dataType))
       ae.aggregateFunction match {
         case Min(c) => attr(c).map(a => (a, true, al.dataType))
         case Max(c) => attr(c).map(a => (a, false, al.dataType))
@@ -760,53 +798,59 @@ case class MetadataOnlyCountRule(session: SparkSession)
     case _ => None
   }
 
-  /** '''6b. Global SUM — partial-stamp hybrid and the range-filtered
-    * window''' (round 18): when SOME files carry [[Snapshot.SumPfx]]
-    * stamps (or are provably all-NULL) and the rest must scan,
-    * `sum(c)` [+ count-star mixes] becomes the stamped partial as a
-    * LocalRelation row UNIONed with one restricted scan's aggregate,
-    * merged by an outer Sum — SQL SUM ignores NULLs, so the
-    * NULL-partial (nothing stamped non-null) merges correctly and an
-    * all-NULL table still answers NULL. A clustering-range FILTER
-    * composes (`sum(amount) WHERE key BETWEEN lo AND hi` — the
-    * canonical windowed warehouse aggregate): wholly-inside files sum
-    * from stamps via [[Snapshot.metaRangeSumSplit]] (zero key-nulls,
-    * zero DVs, `c` stamped or witnessed all-NULL), straddlers scan
-    * WITH the predicate, wholly-outside files vanish, and a
-    * contradictory range answers (0, NULL) from the predicate alone.
-    * The full-stamp unfiltered case is rewrite #6 inside
-    * [[minMaxRewrite]]. Round 19 adds `avg(c)` (kind 5): the SumSpec +
-    * CountSpec pair over existing stamps, the stamped (sum, count)
-    * partial riding the union UNDIVIDED as a (double sum, long count)
-    * pair mirroring Average's own buffer, the division done ONCE by
-    * the query's own [[Average.evaluateExpression]] over the merged
-    * aggregates — decimal avg serves only the full-metadata arm
-    * ([[avgKeyOf]]). Multiple measured columns compose in one rewrite,
-    * each with its own stamp fold, all sharing ONE all-in-or-all-scan
-    * file set; count-star outputs additionally require the stamped
-    * rows known. None = guards refuse (plain scan answers). */
-  private def sumRewrite(agg: Aggregate): Option[LogicalPlan] = {
-    val unfiltered = relationOf(agg.child)
-      .map(r => (r, None: Option[(Long, Long)]))
-    def filtered = filteredRelationOf(agg.child).flatMap {
-      case (fil, lr, gr) =>
-        boundsOf(splitConjunctivePredicates(fil.condition), lr, gr)
-          .map(b => ((lr, gr), Some(b): Option[(Long, Long)]))
-    }
-    unfiltered.orElse(filtered).flatMap { case ((lr, gr), bounds) =>
-      // per-output shape: kind 3 = count-star; 0 = sum, 1 = min,
-      // 2 = max, 5 = avg (round 19), 6 = count(col), each with its
-      // attribute and OUTPUT dtype; avg also records its re-rooted
-      // Average (by output position) for the final-value evaluation
+  /** '''6. SUM / MIN / MAX / AVG / count(c) / variance from stamps —
+    * global (`key` None) or GROUP BY one column''' (rounds 18–20).
+    * A global aggregate is the grouped one over the empty grouping
+    * set, so one body serves both arities; they differ only in the
+    * fold ([[Snapshot.metaAggSplitCols]]'s `(rows, accs)` is the single
+    * group; [[Snapshot.metaGroupAggSplitCols]] yields one entry per
+    * group), the global-only rows-known guard for count-star outputs
+    * (the grouped fold already routes rows-unknown files to the scan),
+    * the key column (in the local rows, the scan's grouping and the
+    * outer merge), and an EMPTY input — a contradictory window answers
+    * one row of empty accumulators at n = 0 with zero keys, and no
+    * rows with one key.
+    *
+    * A file feeds the stamped partials only when EVERY requested
+    * measure is provable there (stamp present, or the NULL witness
+    * proves the column all-NULL — contributing nothing with the
+    * NULL-ness flag down, so an all-NULL column or group answers NULL)
+    * and, grouped, the grouping column is provably single-valued. DVs,
+    * missing stamps and (windowed) straddlers degrade into ONE
+    * restricted scan — WITH the predicate — whose aggregate is UNIONed
+    * with the stamped partials and merged by an outer aggregate of each
+    * output's own kind (SQL SUM/MIN/MAX ignore NULLs, so a NULL partial
+    * merges correctly). Several measured columns compose in one
+    * rewrite, each with its own stamp spec, all sharing ONE
+    * all-in-or-all-scan file set. `avg(c)` rides the union UNDIVIDED as Average's
+    * own (sum, count) buffer and divides once through its own
+    * [[Average.evaluateExpression]]; variance rides as exact
+    * (Σx, Σx², n) integers ([[metaMomentEval]] /
+    * [[graft.expressions.MomentM2]]). A clustering-range FILTER
+    * composes (`sum(amount) WHERE key BETWEEN lo AND hi`; grouped only
+    * when the key IS the clustering column): wholly-inside files with
+    * zero key-nulls and no DV answer from stamps, straddlers scan,
+    * wholly-outside files vanish. Literal outputs pass through, and an
+    * output wrapping ONE served aggregate in deterministic scalar code
+    * (`F.od(sum(x))`, `avg(p) * 1e6`, `count(*) * 2`) is evaluated over
+    * the served value or the merged tree. None = guards refuse. */
+  private def aggRewrite(agg: Aggregate,
+      key: Option[AttributeReference]): Option[LogicalPlan] =
+    windowedRelationOf(agg.child).flatMap { case (lr, gr, bounds) =>
+      val m = gr.pinnedManifest
+      // per-output shape: kind 4 = the key, 3 = count-star, 8 = a
+      // literal; 0 = sum, 1 = min, 2 = max, 5 = avg, 6 = count(col),
+      // 7 = variance, each with its attribute and OUTPUT dtype; avg and
+      // variance also record their aggregate (by output position) for
+      // the final-value evaluation
       val avgFns = scala.collection.mutable.Map.empty[Int, Average]
       val momFns = scala.collection.mutable.Map.empty[Int, CentralMomentAgg]
       val litVals = scala.collection.mutable.Map.empty[Int, Literal]
       // outputs of the form f(one-served-aggregate) — the shape
       // CollapseProject leaves when a report wraps an aggregate in a
-      // cast/round/unit-scale projection (`F.od(sum(x))`,
-      // `avg(p) * 1e6`): the WRAPPER body and its single inner
-      // AggregateExpression, substituted with the served value (full
-      // arm) or the merged aggregate tree (hybrid arm)
+      // cast/round/unit-scale projection: the WRAPPER body and its
+      // single inner AggregateExpression, substituted with the served
+      // value (full arm) or the merged aggregate tree (hybrid arm)
       val wrappers =
         scala.collection.mutable.Map.empty[Int, (Expression,
           AggregateExpression)]
@@ -824,12 +868,13 @@ case class MetadataOnlyCountRule(session: SparkSession)
             avgFns(ei) = fn; (5, a, fn.dataType)
           })
           .orElse(momentKeyOf(e, lr, gr).map { case (a, fn) =>
-            momFns(ei) = fn
-            (7, a, org.apache.spark.sql.types.DoubleType)
+            momFns(ei) = fn; (7, a, DoubleType)
           })
       val shapes: Seq[Option[(Int, AttributeReference, DataType)]] =
         agg.aggregateExpressions.zipWithIndex.map { case (e, ei) =>
-          shapeOf(e, ei)
+          if (key.exists(isKeyOutput(e, _)))
+            Some((4, null: AttributeReference, e.dataType))
+          else shapeOf(e, ei)
             .orElse(litOf(e).map { l =>
               litVals(ei) = l; (8, null: AttributeReference, l.dataType)
             })
@@ -882,32 +927,26 @@ case class MetadataOnlyCountRule(session: SparkSession)
           }
           case None => m2e
         }
-      val keyed = shapes.flatten.filter(k => k._1 != 3 && k._1 != 8)
-      // pure count/literal mixes belong to dispatch arm 1 — EXCEPT
+      val keyed = shapes.flatten.filter(k => k._1 != 3 && k._1 != 4 &&
+        k._1 != 8)
+      // pure count/literal mixes belong to the count rewrites — EXCEPT
       // when a wrapper is involved (`count(*) * 2`), which only this
       // rewrite's machinery can fold
       if (shapes.exists(_.isEmpty) ||
-          (keyed.isEmpty && wrappers.isEmpty)) None
-      else if (bounds.exists(b => b._1 > b._2))
-        // contradiction: zero rows — count 0, every aggregate NULL,
-        // literals pass through, by the predicate alone
-        shapes.zipWithIndex.map {
-          case (Some((3, _, _)), ei)  => finish(ei, 0L)
-          case (Some((8, _, _)), ei) => Some(litVals(ei).value)
-          case (_, ei)               => finish(ei, null)
-        } match {
-          case vs if vs.forall(_.isDefined) =>
-            Some(LocalRelation(agg.output,
-              Seq(InternalRow.fromSeq(vs.map(_.get)))))
-          case _ => None
-        }
+          (keyed.isEmpty && wrappers.isEmpty) ||
+          key.exists(g => !groupableDtype(g.dataType) ||
+            !lr.output.exists(_.exprId == g.exprId) ||
+            // a range FILTER composes only when the grouped column IS
+            // the clustering column (bounds and grouping must speak
+            // about the same stamps — the q171 discipline)
+            (bounds.isDefined && !isClusteringAttr(g, lr, gr)))) None
       else {
-        val m = gr.pinnedManifest
         def dedup(as: Seq[AttributeReference]) =
           as.foldLeft(Seq.empty[AttributeReference])((acc, a) =>
             if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
         // one fold spec per distinct (attr, sum-vs-range-vs-count) —
-        // an avg contributes BOTH a sum and a non-null-count spec
+        // an avg contributes a sum and a non-null-count spec, a
+        // variance additionally a sum-of-squares spec
         val sumAttrs = dedup(keyed
           .filter(k => k._1 == 0 || k._1 == 5 || k._1 == 7).map(_._2))
         val rngAttrs = dedup(keyed.filter(k => k._1 == 1 || k._1 == 2)
@@ -938,134 +977,145 @@ case class MetadataOnlyCountRule(session: SparkSession)
           if (kind == 0) sumIdxOf(a)
           else if (kind == 6) cntIdxOf(a)
           else sumAttrs.length + rngAttrs.indexWhere(_.exprId == a.exprId)
-        val (stampedRows, rowsOk, accs, scan) =
-          Snapshot.metaAggSplitCols(m, specs, bounds)
-        // the raw stamped (sum-buffer, non-null count) pair per avg
-        // OUTPUT — the hybrid arm merges these undivided
-        def avgPartOf(a: AttributeReference, ei: Int)
-            : Option[(Any, Long)] =
-          (accs(sumIdxOf(a)), accs(cntIdxOf(a))) match {
+        val contradiction = bounds.exists(b => b._1 > b._2)
+        // (group, (rows, per-spec accs)) per stamped group, the scan
+        // set, and whether every stamped file's row count is known
+        val (groups, scan, rowsOk): (Seq[(Option[Long],
+            (Long, Seq[Snapshot.StampAcc]))], Seq[Snapshot.FileEntry],
+            Boolean) =
+          if (contradiction) {
+            // zero rows satisfy, by the predicate alone: zero keys
+            // still answer one row — empty accumulators at n = 0
+            val empty = specs.map {
+              case _: Snapshot.RangeSpec =>
+                Snapshot.RangeAcc(0L, 0L, any = false)
+              case _ => Snapshot.SumAcc(0L, any = false)
+            }
+            (if (key.isEmpty) Seq((None, (0L, empty))) else Nil,
+              Nil, true)
+          } else key match {
+            case None =>
+              val (rows, ok, accs, sc) =
+                Snapshot.metaAggSplitCols(m, specs, bounds)
+              (Seq((None, (rows, accs))), sc, ok)
+            case Some(g) =>
+              val (sums, sc) = Snapshot.metaGroupAggSplitCols(m,
+                Snapshot.physicalName(m, g.name),
+                isClusteringAttr(g, lr, gr), specs, bounds)
+              (sums.toSeq, sc, true)
+          }
+        def keyOf(k: Option[Long]): Any =
+          keyValue(k, key.map(_.dataType).getOrElse(LongType))
+        // the raw stamped (sum-buffer, non-null count) pair for an avg
+        // OUTPUT within one group's accumulators — the hybrid arm
+        // merges these undivided
+        def avgPartOf(cs: Seq[Snapshot.StampAcc], a: AttributeReference,
+            ei: Int): Option[(Any, Long)] =
+          (cs(sumIdxOf(a)), cs(cntIdxOf(a))) match {
             case (Snapshot.SumAcc(st, any), Snapshot.SumAcc(cnt, _)) =>
               avgSumBuffer(avgFns(ei), a, st, any).map(sv => (sv, cnt))
             case _ => None
           }
-        // raw stamped (Σx, Σx², n) triple per variance OUTPUT — exact
-        // integers the hybrid arm merges undivided (all-NULL stamped
-        // sides carry NULL sums the union Sum ignores)
-        def momPartOf(a: AttributeReference): (Any, Any, Long) =
-          (accs(sumIdxOf(a)), accs(cntIdxOf(a)), accs(sqIdxOf(a))) match {
+        // the raw stamped (Σx, Σx², n) triple for a variance OUTPUT —
+        // exact integers the hybrid arm merges undivided (all-NULL
+        // stamped sides carry NULL sums the union Sum ignores)
+        def momPartOf(cs: Seq[Snapshot.StampAcc], a: AttributeReference)
+            : Option[(Any, Any, Long)] =
+          (cs(sumIdxOf(a)), cs(cntIdxOf(a)), cs(sqIdxOf(a))) match {
             case (Snapshot.SumAcc(sx, anyX), Snapshot.SumAcc(cnt, _),
                 Snapshot.SumAcc(sq, anyQ)) =>
-              (if (anyX) org.apache.spark.sql.types.Decimal(
-                 scala.math.BigDecimal(sx), 38, 0) else null,
+              Some((if (anyX) org.apache.spark.sql.types.Decimal(
+                  scala.math.BigDecimal(sx), 38, 0) else null,
                 if (anyQ) org.apache.spark.sql.types.Decimal(
                   scala.math.BigDecimal(sq), 38, 0) else null,
-                cnt)
-            case _ => (null, null, 0L) // unreachable: partialsClean gated
+                cnt))
+            case _ => None
           }
-        // decoded stamped partial per non-count shape; inner None =
-        // corrupted stamp → refuse whole
-        def partialOf(kind: Int, a: AttributeReference, dt: DataType,
-            ei: Int): Option[Any] = kind match {
-          case 5 => avgPartOf(a, ei).flatMap { case (sv, c) =>
+        // one group's stamped value for an output — RAW (wrappers apply
+        // at the serving arms); None = corrupted stamp
+        def decode(k: Option[Long], n: Long, cs: Seq[Snapshot.StampAcc],
+            shape: (Int, AttributeReference, DataType),
+            ei: Int): Option[Any] = shape match {
+          case (4, _, _) => Some(keyOf(k))
+          case (3, _, _) => Some(n)
+          case (8, _, _) => Some(litVals(ei).value)
+          case (5, a, _) => avgPartOf(cs, a, ei).flatMap { case (sv, c) =>
             metaAvgEval(avgFns(ei), sv, c)
           }
-          case 7 =>
-            (accs(sumIdxOf(a)), accs(cntIdxOf(a)), accs(sqIdxOf(a))) match {
+          case (7, a, _) =>
+            (cs(sumIdxOf(a)), cs(cntIdxOf(a)), cs(sqIdxOf(a))) match {
               case (Snapshot.SumAcc(sx, _), Snapshot.SumAcc(cnt, _),
                   Snapshot.SumAcc(sq, _)) =>
                 metaMomentEval(momFns(ei), cnt, sx, sq)
               case _ => None
             }
-          case _ => accs(specIdx(kind, a)) match {
+          case (kind, a, dt) => cs(specIdx(kind, a)) match {
             case Snapshot.SumAcc(t, _) if kind == 6 =>
-              Some(t: Any) // count(c): 0 is the answer, never NULL
+              Some(t) // count(c): 0 is the answer, never NULL
             case Snapshot.SumAcc(t, any) =>
-              if (any) sumCodecOf(a).get._2(t) else Some(null: Any)
+              if (any) sumCodecOf(a).get._2(t) else Some(null)
             case Snapshot.RangeAcc(mn, mx, any) =>
-              if (!any) Some(null: Any)
-              else rangeValue(if (kind == 1) mn else mx, dt)
+              if (!any) Some(null)
+              else typedLong(if (kind == 1) mn else mx, dt)
           }
         }
-        val partialsClean: Seq[Option[Any]] =
-          shapes.zipWithIndex.map {
-            case (Some((3, _, _)), _)  => Some(0L: Any)
-            case (Some((8, _, _)), i)  => Some(litVals(i).value)
-            case (Some((k, a, dt)), i) => partialOf(k, a, dt, i)
-            case (None, _)             => None
-          }
+        // decode every group up front — one corrupted stamp refuses
+        // the whole rewrite
+        val decoded = groups.map { case (k, (n, cs)) =>
+          (k, n, cs, shapes.zipWithIndex.map { case (sh, ei) =>
+            decode(k, n, cs, sh.get, ei)
+          })
+        }
         val hasCount = shapes.exists(_.exists(_._1 == 3))
-        if (scan.size == m.files.size) None
+        if (!contradiction && scan.size == m.files.size) None
         else if (hasCount && !rowsOk) None
-        else if (partialsClean.exists(_.isEmpty)) None // corrupted
-        else if (scan.isEmpty)
-          // every file answered from stamps: one local row. This arm
-          // also serves the unfiltered shapes rewrite #6 declines
-          // (count(col)/avg outputs, mixes #6's per-output table
-          // lacks) — sumRewrite runs LAST in the orElse chain, so no
-          // overlap.
-          shapes.zip(partialsClean).zipWithIndex.map {
-            case ((Some((3, _, _)), _), ei) => finish(ei, stampedRows)
-            case ((Some((8, _, _)), Some(v)), _) => Some(v)
-            case ((_, Some(v)), ei)         => finish(ei, v)
-            case _ => return None // unreachable by the guards
-          } match {
-            case vs if vs.forall(_.isDefined) =>
-              Some(LocalRelation(agg.output,
-                Seq(InternalRow.fromSeq(vs.map(_.get)))))
-            case _ => None
+        else if (decoded.exists(_._4.exists(_.isEmpty))) None
+        else if (scan.isEmpty) {
+          // every file answered from stamps: one local row per group
+          val rows = decoded.map { case (_, _, _, vs) =>
+            InternalRow.fromSeq(shapes.zip(vs).zipWithIndex.map {
+              case ((Some((4 | 8, _, _)), Some(v)), _) => v
+              case ((_, Some(v)), ei) =>
+                finish(ei, v).getOrElse(return None) // wrapper refused
+              case _ => return None // unreachable by the guard
+            })
           }
-        else {
+          Some(LocalRelation(agg.output, rows))
+        } else {
           // hybrid: one scan aggregate + one local partial per
-          // NON-count output (a shared count pair first; an avg
-          // occupies TWO partial slots — double sum + non-null
-          // count; a variance occupies THREE — exact Σx, Σx², n),
-          // merged by an outer aggregate of each shape's own
-          // kind. DECIMAL avg partials merge too (round 20): the
-          // scan side sums the decimal child exactly at the buffer
-          // dtype and the widened union total is bound back by
-          // Spark's own CheckOverflowInSum below. Variance
-          // moments (kind 7) merge EXACTLY (round 20 — the r19
-          // verdict's task 5): the scan side aggregates Σx and Σx² as
-          // DECIMAL(38,0) integers — never a float partial that would
-          // re-introduce the order-dependence the stamps eliminate —
-          // but ONLY when every degraded file still CARRIES its sq:
-          // stamp (present-but-unusable: DV'd files, windowed
-          // straddlers). The stamp's per-row try_multiply gate proves
-          // every scanned |x| ≤ ~3.04e9, so each x² ≤ 9.3e18 and the
-          // Decimal(38,0) partials stay exact short of 10¹⁹ scanned
-          // rows. A file MISSING the stamp (overflowing row, pre-sq
-          // write, opted-out session) proves nothing and refuses
-          // whole — degraded-never-wrong.
+          // NON-count output (an avg occupies TWO partial slots —
+          // buffer sum + non-null count; a variance THREE — exact Σx,
+          // Σx², n), merged by an outer aggregate of each shape's own
+          // kind. Variance moments (round 20) merge EXACTLY: the scan
+          // side aggregates Σx and Σx² as DECIMAL(38,0) integers —
+          // never a float partial that would re-introduce the
+          // order-dependence the stamps eliminate — but ONLY when every
+          // degraded file still CARRIES its sq: stamp (present but
+          // unusable: DV'd files, windowed straddlers). The stamp's
+          // per-row try_multiply gate proves every scanned |x| ≤
+          // ~3.04e9, so each x² ≤ 9.3e18 and the Decimal(38,0)
+          // partials stay exact short of 10¹⁹ scanned rows. A file
+          // MISSING the stamp proves nothing and refuses whole.
           locally {
-            val momAttrs = shapes.zipWithIndex.collect {
-              case (Some((7, a, _)), _) => a
-            }
+            val momAttrs = shapes.collect { case Some((7, a, _)) => a }
             if (momAttrs.nonEmpty && scan.exists(f => momAttrs.exists(
                 a => !m.colStats.contains((f.path,
                   Snapshot.SqPfx + Snapshot.physicalName(m, a.name))))))
               return None
           }
-          // avg hybrids (round 20 — the r19 ADVICE low (b) lifted):
-          // DOUBLE buffers merge as running double sums; DECIMAL
-          // buffers merge as exact decimal sums whose widened union
-          // total is bound back to the buffer dtype by Spark's OWN
-          // CheckOverflowInSum (mode-matched at the output arm below:
-          // legacy null / ANSI raise — the same contract the scan's
-          // final sum evaluation applies). Any other buffer dtype
-          // refuses.
-          if (shapes.zipWithIndex.exists {
-                case (Some((5, _, _)), ei) =>
-                  val bt = avgFns(ei).aggBufferAttributes.head.dataType
-                  bt != org.apache.spark.sql.types.DoubleType &&
-                    !bt.isInstanceOf[DecimalType]
-                case _ => false
+          // avg hybrids (round 20): DOUBLE buffers merge as running
+          // double sums; DECIMAL buffers merge as exact decimal sums
+          // whose widened union total is bound back to the buffer
+          // dtype by Spark's OWN CheckOverflowInSum (mode-matched at
+          // the output arm below: legacy null / ANSI raise — the same
+          // contract the scan's final sum evaluation applies). Any
+          // other buffer dtype refuses.
+          if (avgFns.valuesIterator.exists { fn =>
+                val bt = fn.aggBufferAttributes.head.dataType
+                bt != DoubleType && !bt.isInstanceOf[DecimalType]
               }) return None
-          val cnt = Alias(AggregateExpression(
-            Count(Seq(Literal(1L))), Complete, isDistinct = false),
-            "gm_part_cnt")()
           val perShape = shapes.zipWithIndex.collect {
-            case (Some((k, a, dt)), i) if k != 3 && k != 8 =>
+            case (Some((k, a, dt)), i) if k != 3 && k != 4 && k != 8 =>
               (k, a, dt, i)
           }
           // slot layout over the partial columns
@@ -1085,8 +1135,7 @@ case class MetadataOnlyCountRule(session: SparkSession)
               // buffer dtype), plus the non-null count
               val sumChild: Expression =
                 if (avgFns(i).aggBufferAttributes.head.dataType ==
-                    org.apache.spark.sql.types.DoubleType)
-                  Cast(a, org.apache.spark.sql.types.DoubleType)
+                    DoubleType) Cast(a, DoubleType)
                 else a
               Seq(
                 Alias(AggregateExpression(Sum(sumChild), Complete,
@@ -1095,9 +1144,7 @@ case class MetadataOnlyCountRule(session: SparkSession)
                   isDistinct = false), "gm_partc")())
             } else if (k == 7) {
               // exact integer moments: Σx and Σx² as DECIMAL(38,0)
-              // (each x² ≤ 9.3e18 under the sq:-stamp guard above, so
-              // both sums stay exact) plus the non-null count — never
-              // a float partial
+              // plus the non-null count — never a float partial
               val dx = Cast(a, DecimalType(38, 0))
               Seq(
                 Alias(AggregateExpression(Sum(dx), Complete,
@@ -1111,9 +1158,8 @@ case class MetadataOnlyCountRule(session: SparkSession)
               // child so the union sides agree on dtype (sum result
               // dtypes already match the codec's; counts are Longs)
               val child: Expression =
-                if (k == 1 || k == 2) {
-                  if (a.dataType != dt) Cast(a, dt) else a
-                } else a
+                if ((k == 1 || k == 2) && a.dataType != dt) Cast(a, dt)
+                else a
               val fn = k match {
                 case 0 => Sum(child); case 1 => Min(child)
                 case 2 => Max(child); case _ => Count(Seq(child))
@@ -1122,138 +1168,127 @@ case class MetadataOnlyCountRule(session: SparkSession)
                 isDistinct = false), "gm_part")())
             }
           }
-          val newChild = agg.child.transformUp {
-            case l: LogicalRelation if l eq lr =>
-              l.copy(relation = gr.restrictedTo(scan.map(_.path).toSet))
+          val partialOut = perShape.flatMap { case (k, _, dt, i) =>
+            if (k == 5)
+              Seq(AttributeReference(s"gm_p$i",
+                  avgFns(i).aggBufferAttributes.head.dataType)(),
+                AttributeReference(s"gm_p${i}c", LongType,
+                  nullable = false)())
+            else if (k == 7)
+              Seq(AttributeReference(s"gm_p$i", DecimalType(38, 0))(),
+                AttributeReference(s"gm_p${i}q", DecimalType(38, 0))(),
+                AttributeReference(s"gm_p${i}c", LongType,
+                  nullable = false)())
+            else Seq(AttributeReference(s"gm_p$i", dt)())
           }
-          val scanAgg = Aggregate(Nil, cnt +: scanAggs, newChild)
-          val localOut =
-            AttributeReference("gm_n", LongType, nullable = false)() +:
-              perShape.flatMap { case (k, _, dt, i) =>
-                if (k == 5)
-                  Seq(AttributeReference(s"gm_p$i",
-                      avgFns(i).aggBufferAttributes.head.dataType)(),
-                    AttributeReference(s"gm_p${i}c", LongType,
-                      nullable = false)())
-                else if (k == 7)
-                  Seq(AttributeReference(s"gm_p$i", DecimalType(38, 0))(),
-                    AttributeReference(s"gm_p${i}q", DecimalType(38, 0))(),
-                    AttributeReference(s"gm_p${i}c", LongType,
-                      nullable = false)())
-                else Seq(AttributeReference(s"gm_p$i", dt)())
-              }
-          val localVals: Seq[Any] = (stampedRows: Any) +:
-            perShape.flatMap { case (k, a, _, i) =>
-              if (k == 5) {
-                val (sv, c) = avgPartOf(a, i).get // clean by the guard
-                Seq(sv, c: Any)
-              } else if (k == 7) {
-                val (sx, sq, c) = momPartOf(a)
-                Seq(sx, sq, c: Any)
-              } else Seq(partialsClean(i).get)
-            }
-          val local = LocalRelation(localOut,
-            Seq(InternalRow.fromSeq(localVals)))
-          val un = Union(Seq(scanAgg, local))
-          val uc = un.output.head
-          def colOf(i: Int): Attribute = un.output(1 + slotOf(i))
-          def colOf2(i: Int): Attribute = un.output(2 + slotOf(i))
-          def colOf3(i: Int): Attribute = un.output(3 + slotOf(i))
+          val keys = key.toSeq
+          val un = hybridUnion(agg.child, lr, gr, scan, keys, scanAggs,
+            partialOut, decoded.map { case (k, n, cs, vs) =>
+              keys.map(_ => keyOf(k)) ++ ((n: Any) +:
+                perShape.flatMap { case (kk, a, _, i) =>
+                  // clean by the guard: a decoded avg/variance proves
+                  // its raw partials decode too
+                  if (kk == 5) {
+                    val (sv, c) = avgPartOf(cs, a, i).get
+                    Seq(sv, c: Any)
+                  } else if (kk == 7) {
+                    val (sx, sq, c) = momPartOf(cs, a).get
+                    Seq(sx, sq, c: Any)
+                  } else Seq(vs(i).get)
+                })
+            })
+          // union columns: [key], rows, then each output's slots
+          val uk = un.output.head
+          val uc = un.output(keys.size)
+          def colOf(i: Int, j: Int = 0): Attribute =
+            un.output(keys.size + 1 + slotOf(i) + j)
+          def merged(fn: AggregateFunction): Expression =
+            AggregateExpression(fn, Complete, isDistinct = false)
           val outs = agg.aggregateExpressions.zip(shapes).zipWithIndex
             .map {
-              case ((e, Some((3, _, _))), i) =>
-                Alias(finishExpr(i, Coalesce(Seq(AggregateExpression(
-                  Sum(uc), Complete, isDistinct = false), Literal(0L)))),
-                  e.name)(exprId = e.exprId)
-              case ((e, Some((0, _, dt))), i) =>
-                // the union-merge Sum widens (decimal +10 precision);
-                // cast back — exact unless the original sum itself
-                // would have overflowed, where the session's own
-                // overflow contract takes over
-                Alias(finishExpr(i, Cast(AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false), dt)),
-                  e.name)(exprId = e.exprId)
-              case ((e, Some((6, _, _))), i) =>
-                // count partials add like count-star cells
-                Alias(finishExpr(i, Coalesce(Seq(AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false),
-                  Literal(0L)))), e.name)(exprId = e.exprId)
+              case ((e, Some((4, _, _))), _) =>
+                Alias(uk, e.name)(exprId = e.exprId)
               case ((e, Some((8, _, _))), i) =>
                 Alias(litVals(i), e.name)(exprId = e.exprId)
-              case ((e, Some((5, _, _))), i) =>
-                // Average's OWN final-value tree over the merged
-                // (sum, count) — division typing and rounding are
-                // Spark's code, not a re-implementation
-                val fn = avgFns(i)
-                val buf = fn.aggBufferAttributes
-                val rawSum: Expression = AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false)
-                val sumAgg: Expression = buf(0).dataType match {
-                  case dt: DecimalType =>
-                    // bind the widened union total back to the buffer
-                    // dtype with the scan's own overflow contract —
-                    // Spark's CheckOverflowInSum, mode-matched
-                    org.apache.spark.sql.catalyst.expressions
-                      .CheckOverflowInSum(rawSum, dt,
-                        !session.sessionState.conf.ansiEnabled, null)
-                  case _ => rawSum
+              case ((e, Some((k, _, dt))), i) =>
+                val m2e: Expression = k match {
+                  case 3 => // count-star cells add up
+                    Coalesce(Seq(merged(Sum(uc)), Literal(0L)))
+                  case 6 => // count partials add like count-star cells
+                    Coalesce(Seq(merged(Sum(colOf(i))), Literal(0L)))
+                  case 0 =>
+                    // the union-merge Sum widens (decimal +10
+                    // precision); cast back — exact unless the original
+                    // sum itself would have overflowed, where the
+                    // session's own overflow contract takes over
+                    Cast(merged(Sum(colOf(i))), dt)
+                  case 1 => merged(Min(colOf(i)))
+                  case 2 => merged(Max(colOf(i)))
+                  case 5 =>
+                    // Average's OWN final-value tree over the merged
+                    // (sum, count) — division typing and rounding are
+                    // Spark's code, not a re-implementation
+                    val fn = avgFns(i)
+                    val buf = fn.aggBufferAttributes
+                    val rawSum = merged(Sum(colOf(i)))
+                    val sumAgg: Expression = buf(0).dataType match {
+                      case bt: DecimalType =>
+                        // bind the widened union total back to the
+                        // buffer dtype with the scan's own overflow
+                        // contract — Spark's CheckOverflowInSum
+                        org.apache.spark.sql.catalyst.expressions
+                          .CheckOverflowInSum(rawSum, bt,
+                            !session.sessionState.conf.ansiEnabled, null)
+                      case _ => rawSum
+                    }
+                    val cntAgg = Coalesce(Seq(merged(Sum(colOf(i, 1))),
+                      Literal(0L)))
+                    (fn: DeclarativeAggregate).evaluateExpression
+                      .transform {
+                        case r: AttributeReference
+                            if r.exprId == buf(0).exprId => sumAgg
+                        case r: AttributeReference
+                            if r.exprId == buf(1).exprId => cntAgg
+                      }
+                  case _ =>
+                    // the merged exact moments run the SAME
+                    // deterministic chain as the full-metadata driver
+                    // fold: BigInt difference, ONE double conversion,
+                    // and the aggregate's OWN evaluation divides once
+                    // ([[graft.expressions.MomentM2]] — byte-identical
+                    // to metaMomentEval by construction)
+                    val fn = momFns(i)
+                    val buf = fn.aggBufferAttributes
+                    val zeroD = Literal.create(
+                      org.apache.spark.sql.types.Decimal(0L, 38, 0),
+                      DecimalType(38, 0))
+                    val sxAgg = Coalesce(Seq(merged(Sum(colOf(i))), zeroD))
+                    val sqAgg = Coalesce(Seq(merged(Sum(colOf(i, 1))),
+                      zeroD))
+                    val cntAgg = Coalesce(Seq(merged(Sum(colOf(i, 2))),
+                      Literal(0L)))
+                    val nD = Cast(cntAgg, DoubleType)
+                    val avgE = If(EqualTo(cntAgg, Literal(0L)),
+                      Literal(0.0), Divide(Cast(sxAgg, DoubleType), nD))
+                    val m2E = graft.expressions.MomentM2(cntAgg, sxAgg,
+                      sqAgg)
+                    (fn: DeclarativeAggregate).evaluateExpression
+                      .transform {
+                        case r: AttributeReference
+                            if r.exprId == buf(0).exprId => nD
+                        case r: AttributeReference
+                            if r.exprId == buf(1).exprId => avgE
+                        case r: AttributeReference
+                            if r.exprId == buf(2).exprId => m2E
+                      }
                 }
-                val cntAgg: Expression = Coalesce(Seq(
-                  AggregateExpression(Sum(colOf2(i)), Complete,
-                    isDistinct = false), Literal(0L)))
-                val ev = (fn: DeclarativeAggregate).evaluateExpression
-                  .transform {
-                    case r: AttributeReference
-                        if r.exprId == buf(0).exprId => sumAgg
-                    case r: AttributeReference
-                        if r.exprId == buf(1).exprId => cntAgg
-                  }
-                Alias(finishExpr(i, ev), e.name)(exprId = e.exprId)
-              case ((e, Some((7, _, _))), i) =>
-                // the merged exact moments run the SAME deterministic
-                // chain as the full-metadata driver fold: BigInt
-                // difference, ONE double conversion, and the
-                // aggregate's OWN evaluation divides once
-                // ([[graft.expressions.MomentM2]] — byte-identical to
-                // metaMomentEval by construction)
-                val fn = momFns(i)
-                val buf = fn.aggBufferAttributes
-                val zeroD = Literal.create(
-                  org.apache.spark.sql.types.Decimal(0L, 38, 0),
-                  DecimalType(38, 0))
-                val sxAgg: Expression = Coalesce(Seq(AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false), zeroD))
-                val sqAgg: Expression = Coalesce(Seq(AggregateExpression(
-                  Sum(colOf2(i)), Complete, isDistinct = false), zeroD))
-                val cntAgg: Expression = Coalesce(Seq(AggregateExpression(
-                  Sum(colOf3(i)), Complete, isDistinct = false),
-                  Literal(0L)))
-                val nD = Cast(cntAgg, DoubleType)
-                val avgE = If(EqualTo(cntAgg, Literal(0L)),
-                  Literal(0.0), Divide(Cast(sxAgg, DoubleType), nD))
-                val m2E = graft.expressions.MomentM2(cntAgg, sxAgg, sqAgg)
-                val ev = (fn: DeclarativeAggregate).evaluateExpression
-                  .transform {
-                    case r: AttributeReference
-                        if r.exprId == buf(0).exprId => nD
-                    case r: AttributeReference
-                        if r.exprId == buf(1).exprId => avgE
-                    case r: AttributeReference
-                        if r.exprId == buf(2).exprId => m2E
-                  }
-                Alias(finishExpr(i, ev), e.name)(exprId = e.exprId)
-              case ((e, Some((k, _, _))), i) =>
-                val fn: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction =
-                  if (k == 1) Min(colOf(i)) else Max(colOf(i))
-                Alias(finishExpr(i, AggregateExpression(fn, Complete,
-                  isDistinct = false)), e.name)(exprId = e.exprId)
+                Alias(finishExpr(i, m2e), e.name)(exprId = e.exprId)
               case ((_, None), _) => return None // unreachable
             }
-          Some(Aggregate(Nil, outs, un))
+          Some(Aggregate(keys.map(_ => uk), outs, un))
         }
       }
     }
-  }
 
   /** Is `e` an unfiltered `approx_count_distinct(col)` of a bare
     * relation attribute? Returns the attribute and the query's
@@ -1274,87 +1309,63 @@ case class MetadataOnlyCountRule(session: SparkSession)
     case _ => None
   }
 
-  /** '''Opt-in''': `approx_count_distinct(col)` answered from the HLL
-    * register sidecars ([[Snapshot.metaDistinctMeta]]), behind
-    * [[MetadataOnlyCountRule.ApproxDistinctSketchKey]] — default OFF,
-    * because swapping Spark's HLL++ estimate for the sidecar sketch's
-    * CHANGES answers: this is an explicit dashboard opt-in, never a
-    * silent rewrite (the q178 verb + fold remain the conf-free
+  /** '''7. Opt-in approx_count_distinct, global or GROUP BY one
+    * column''': `approx_count_distinct(col)` answered from the HLL
+    * register sidecars — [[Snapshot.metaDistinctMeta]] with zero keys,
+    * [[Snapshot.metaGroupDistinctMeta]]'s per-group register merge
+    * with one — behind [[MetadataOnlyCountRule.ApproxDistinctSketchKey]]
+    * (default OFF, because swapping Spark's HLL++ estimate for the
+    * sidecar sketch's CHANGES answers: an explicit dashboard opt-in,
+    * never a silent rewrite; the q178 verb + fold remain the conf-free
     * spelling). Serves only when the sidecar sketch is at least as
     * TIGHT as the query's requested relativeSD (p=12 ≈ 0.016 vs the
     * 0.05 default) and every file is provably accounted — the q178
-    * refusal ladder: DVs, unsketched/rewritten files, corrupt or
-    * mixed-precision payloads refuse to the plain scan. Count-star
-    * (exact, from the metadata count) and literal outputs mix. */
-  private def approxDistinctRewrite(agg: Aggregate): Option[LogicalPlan] = {
+    * refusal ladder: DVs, unsketched/rewritten or (grouped)
+    * mixed-valued files, corrupt or mixed-precision payloads refuse
+    * whole (a sketch cannot be split across groups). Key and literal
+    * outputs mix, the NULL-key group is first-class; count-star
+    * (exact, from the metadata count) mixes with zero keys only — the
+    * register merge carries no per-group row counts. */
+  private def approxDistinctRewrite(agg: Aggregate,
+      key: Option[AttributeReference]): Option[LogicalPlan] = {
     if (!session.conf.get(MetadataOnlyCountRule.ApproxDistinctSketchKey,
         "false").toBoolean) return None
     relationOf(agg.child).flatMap { case (lr, gr) =>
       val m = gr.pinnedManifest
+      if (key.exists(g => !groupableDtype(g.dataType) ||
+          !lr.output.exists(_.exprId == g.exprId))) return None
+      // per output: Left = (sketched attr, requested relativeSD);
+      // Right(0) count-star, Right(1) literal, Right(2) the key
+      type Shape = Either[(AttributeReference, Double), Int]
       val lits = scala.collection.mutable.Map.empty[Int, Literal]
-      val shapes: Seq[Option[Either[(AttributeReference, Double), Int]]] =
+      val shapes: Seq[Option[Shape]] =
         agg.aggregateExpressions.zipWithIndex.map { case (e, i) =>
-          approxHllOf(e, lr).map(Left(_))
-            .orElse(if (isCountStar(e)) Some(Right(0)) else None)
+          if (key.exists(isKeyOutput(e, _))) Some(Right(2))
+          else approxHllOf(e, lr).map(Left(_): Shape)
+            .orElse(if (key.isEmpty && isCountStar(e)) Some(Right(0))
+              else None)
             .orElse(litOf(e).map { l => lits(i) = l; Right(1) })
         }
       if (shapes.exists(_.isEmpty) || !shapes.exists(_.exists(_.isLeft)))
         return None
       val rowsOpt = metaCountOf(agg.child)
-      if (shapes.exists(_.contains(Right(0))) && rowsOpt.isEmpty)
-        return None
-      val vals: Seq[Any] = agg.aggregateExpressions.indices.map { i =>
-        shapes(i).get match {
-          case Left((a, reqRsd)) =>
-            Snapshot.metaDistinctMeta(m,
-              Snapshot.physicalName(m, a.name)) match {
-              case Some((est, rsd)) if rsd <= reqRsd => est: Any
+      if (shapes.contains(Some(Right(0))) && rowsOpt.isEmpty) return None
+      // one register merge per sketched column, at its tightest request
+      val perCol: Map[Long, Map[Option[Long], Long]] =
+        shapes.flatten.collect { case Left(ar) => ar }
+          .groupBy(_._1.exprId.id).map { case (id, as) =>
+            val phys = Snapshot.physicalName(m, as.head._1.name)
+            (key match {
+              case None => Snapshot.metaDistinctMeta(m, phys)
+                .map { case (est, rsd) => (Map((None: Option[Long]) -> est), rsd) }
+              case Some(g) => Snapshot.metaGroupDistinctMeta(m,
+                Snapshot.physicalName(m, g.name),
+                isClusteringAttr(g, lr, gr), phys)
+            }) match {
+              case Some((ests, rsd)) if rsd <= as.map(_._2).min => id -> ests
               case _ => return None
             }
-          case Right(0) => rowsOpt.get: Any
-          case Right(_) => lits(i).value
-        }
-      }
-      Some(LocalRelation(agg.output, Seq(InternalRow.fromSeq(vals))))
-    }
-  }
-
-  /** The grouped twin — `g, approx_count_distinct(col) GROUP BY g`
-    * from [[Snapshot.metaGroupDistinctMeta]]'s per-group register
-    * merge: same conf gate and tightness guard, ALL-OR-NOTHING per
-    * that merge's contract (a sketch cannot be split across groups —
-    * any DV, mixed-valued file, or missing sketch refuses whole).
-    * Key and literal outputs mix; the NULL-key group is first-class. */
-  private def groupedApproxDistinctRewrite(agg: Aggregate,
-      g: AttributeReference): Option[LogicalPlan] = {
-    if (!session.conf.get(MetadataOnlyCountRule.ApproxDistinctSketchKey,
-        "false").toBoolean) return None
-    relationOf(agg.child).flatMap { case (lr, gr) =>
-      val m = gr.pinnedManifest
-      if (!groupableDtype(g.dataType) ||
-          !lr.output.exists(_.exprId == g.exprId)) return None
-      val lits = scala.collection.mutable.Map.empty[Int, Literal]
-      val shapes: Seq[Option[Either[(AttributeReference, Double), Int]]] =
-        agg.aggregateExpressions.zipWithIndex.map { case (e, i) =>
-          (if (isKeyOutput(e, g)) Some(Right(2))
-           else None: Option[Either[(AttributeReference, Double), Int]])
-            .orElse(approxHllOf(e, lr).map(Left(_)))
-            .orElse(litOf(e).map { l => lits(i) = l; Right(1) })
-        }
-      if (shapes.exists(_.isEmpty) || !shapes.exists(_.exists(_.isLeft)))
-        return None
-      val physG = Snapshot.physicalName(m, g.name)
-      val cluster = isClusteringAttr(g, lr, gr)
-      val attrs = shapes.flatten.collect { case Left((a, r)) => (a, r) }
-      val perCol: Map[Long, Map[Option[Long], Long]] =
-        attrs.groupBy(_._1.exprId.id).map { case (id, as) =>
-          val minReq = as.map(_._2).min
-          Snapshot.metaGroupDistinctMeta(m, physG, cluster,
-            Snapshot.physicalName(m, as.head._1.name)) match {
-            case Some((ests, rsd)) if rsd <= minReq => id -> ests
-            case _ => return None
           }
-        }
       // every per-column merge derives its groups from the SAME file
       // verdicts — differing keysets mean an inconsistency: refuse
       val groups = perCol.values.head.keySet
@@ -1363,8 +1374,9 @@ case class MetadataOnlyCountRule(session: SparkSession)
         InternalRow.fromSeq(agg.aggregateExpressions.indices.map { i =>
           shapes(i).get match {
             case Left((a, _)) => perCol(a.exprId.id)(grp): Any
-            case Right(2) => grp.map(typedKey(_, g.dataType)).orNull
-            case Right(_) => lits(i).value
+            case Right(0) => rowsOpt.get: Any
+            case Right(1) => lits(i).value
+            case Right(_) => keyValue(grp, key.get.dataType)
           }
         })
       }
@@ -1422,30 +1434,14 @@ case class MetadataOnlyCountRule(session: SparkSession)
           keyed.map(_._1.exprId).distinct.size != 1) None
       else {
         val g = keyed.head._1
-        def typed(v: Long): Any = typedKey(v, g.dataType)
         val m = gr.pinnedManifest
         val (sums, scan) = groupSplitOf(gr, g)
         if (scan.nonEmpty) {
           if (scan.size == m.files.size) return None
           // stamped groups + one restricted grouped scan, merged by a
-          // global aggregate over the union (same scaffold as the
-          // grouped rewrite, global outputs instead of per-group)
-          val cnt = Alias(AggregateExpression(
-            Count(Seq(Literal(1L))), Complete, isDistinct = false),
-            "gm_part_cnt")()
-          val newChild = agg.child.transformUp {
-            case l: LogicalRelation if l eq lr =>
-              l.copy(relation = gr.restrictedTo(scan.map(_.path).toSet))
-          }
-          val scanAgg = Aggregate(Seq(g), Seq(g, cnt), newChild)
-          val localOut = Seq(
-            AttributeReference("gm_k", g.dataType)(),
-            AttributeReference("gm_c", LongType, nullable = false)())
-          val local = LocalRelation(localOut,
-            sums.toSeq.map { case (k, n) =>
-              InternalRow.fromSeq(Seq(k.map(typed).orNull, n))
-            })
-          val un = Union(Seq(scanAgg, local))
+          // global aggregate over the union (the grouped count's
+          // scaffold, global outputs instead of per-group)
+          val un = countUnion(agg.child, lr, gr, g, sums, scan)
           val uk = un.output.head
           val uc = un.output(1)
           def sumOf(term: Expression) = Coalesce(Seq(AggregateExpression(
@@ -1457,8 +1453,7 @@ case class MetadataOnlyCountRule(session: SparkSession)
             case ((e, Some(None)), _) => // count(*): every underlying row
               Alias(sumOf(uc), e.name)(exprId = e.exprId)
             case ((e, Some(Some((_, false)))), _) => // count(col)
-              Alias(sumOf(org.apache.spark.sql.catalyst.expressions.If(
-                IsNotNull(uk), uc, Literal(0L))),
+              Alias(sumOf(If(IsNotNull(uk), uc, Literal(0L))),
                 e.name)(exprId = e.exprId)
             case ((e, Some(Some((_, true)))), _) => // count(DISTINCT)
               Alias(AggregateExpression(Count(Seq(uk)), Complete,
@@ -1485,463 +1480,6 @@ case class MetadataOnlyCountRule(session: SparkSession)
       }
     }
 
-  /** '''7. GROUP BY g — counts, sums, mins, maxes, and avgs from
-    * stamps'''
-    * (round 18): the q171/q173 grouped-count discipline extended to
-    * `sum(c)` / `min(c)` / `max(c)` outputs via
-    * [[Snapshot.metaGroupAggSplitCols]] — a file feeds its group's
-    * accumulators when the GROUPING column is provably single-valued
-    * there (clustering stamps + kNulls, or sidecar stamps + witness)
-    * AND every requested measure is provable (sum stamp / exact
-    * [min,max] stamp present, or witnessed all-NULL: contributing
-    * nothing with the NULL-ness flag down, so an all-NULL group
-    * answers NULL). Files with DVs, g-nulls in valued files, or
-    * missing stamps degrade into one restricted grouped scan merged
-    * by an outer aggregate of each shape's own kind. Range-filter
-    * composition stays count-only (rewrite #2's machinery). None =
-    * guards refuse. */
-  private def groupedSumRewrite(agg: Aggregate,
-      g: AttributeReference): Option[LogicalPlan] = {
-    val unfiltered = relationOf(agg.child)
-      .map(r => (r, None: Option[(Long, Long)]))
-    def filtered = filteredRelationOf(agg.child).flatMap {
-      case (fil, lr, gr) =>
-        boundsOf(splitConjunctivePredicates(fil.condition), lr, gr)
-          .map(b => ((lr, gr), Some(b): Option[(Long, Long)]))
-    }
-    unfiltered.orElse(filtered).flatMap { case ((lr, gr), bounds) =>
-      val m = gr.pinnedManifest
-      // per-output: kind 4 = the key, 3 = count-star; 0 sum / 1 min /
-      // 2 max / 5 avg / 6 count(col) with their attribute and OUTPUT
-      // dtype; avg records its re-rooted Average by output position
-      val avgFns = scala.collection.mutable.Map.empty[Int, Average]
-      val momFns = scala.collection.mutable.Map.empty[Int, CentralMomentAgg]
-      val litVals = scala.collection.mutable.Map.empty[Int, Literal]
-      // scalar-wrapped single-aggregate outputs — see sumRewrite
-      val wrappers =
-        scala.collection.mutable.Map.empty[Int, (Expression,
-          AggregateExpression)]
-      def shapeOf(e: NamedExpression, ei: Int)
-          : Option[(Int, AttributeReference, DataType)] =
-        if (isCountStar(e))
-          Some((3, null: AttributeReference, LongType))
-        else sumKeyOf(e, lr, gr)
-          .map(a => (0, a, sumCodecOf(a).get._1))
-          .orElse(rangeKeyOf(e, lr, gr).map { case (a, isMin, dt) =>
-            (if (isMin) 1 else 2, a, dt)
-          })
-          .orElse(countColKeyOf(e, lr, gr).map(a => (6, a, LongType)))
-          .orElse(avgKeyOf(e, lr, gr).map { case (a, fn) =>
-            avgFns(ei) = fn; (5, a, fn.dataType)
-          })
-          .orElse(momentKeyOf(e, lr, gr).map { case (a, fn) =>
-            momFns(ei) = fn
-            (7, a, org.apache.spark.sql.types.DoubleType)
-          })
-      val shapes: Seq[Option[(Int, AttributeReference, DataType)]] =
-        agg.aggregateExpressions.zipWithIndex.map { case (e, ei) =>
-          if (isKeyOutput(e, g))
-            Some((4, null: AttributeReference, g.dataType))
-          else shapeOf(e, ei)
-            .orElse(litOf(e).map { l =>
-              litVals(ei) = l; (8, null: AttributeReference, l.dataType)
-            })
-            .orElse(e match {
-              case Alias(body, _)
-                  if !body.isInstanceOf[AggregateExpression] &&
-                    body.deterministic =>
-                body.collect { case ae: AggregateExpression => ae } match {
-                  case Seq(ae)
-                      // the wrapper itself may reference NOTHING
-                      // beyond its aggregate (a grouping-attribute
-                      // reference could neither fold on the driver
-                      // nor resolve against the hybrid merge). The
-                      // subset check alone is NOT enough: in
-                      // `sum(g) + g GROUP BY g` the references
-                      // coincide, yet substituting the merged Sum
-                      // tree leaves a bare `g` the hybrid Aggregate
-                      // cannot resolve — so additionally require the
-                      // body reference-free once the aggregate is
-                      // removed
-                      if body.references.subsetOf(ae.references) &&
-                        body.transform {
-                          case x: AggregateExpression if x eq ae =>
-                            Literal(null, ae.dataType)
-                        }.references.isEmpty =>
-                    shapeOf(Alias(ae, "gm_w")(), ei).map { sh =>
-                      wrappers(ei) = (body, ae); sh
-                    }
-                  case _ => None
-                }
-              case _ => None
-            })
-        }
-      def finish(ei: Int, v: Any): Option[Any] = wrappers.get(ei) match {
-        case Some((body, ae)) =>
-          try Some(body.transform {
-            case x: AggregateExpression if x eq ae =>
-              Literal(v, ae.dataType)
-          }.eval(InternalRow.empty))
-          catch { case scala.util.control.NonFatal(_) => None }
-        case None => Some(v)
-      }
-      def finishExpr(ei: Int, m2e: Expression): Expression =
-        wrappers.get(ei) match {
-          case Some((body, ae)) => body.transform {
-            case x: AggregateExpression if x eq ae => m2e
-          }
-          case None => m2e
-        }
-      val keyed = shapes.flatten.filter(k => k._1 <= 2 || k._1 == 5 ||
-        k._1 == 6 || k._1 == 7)
-      if (shapes.exists(_.isEmpty) || keyed.isEmpty ||
-          !groupableDtype(g.dataType) ||
-          !lr.output.exists(_.exprId == g.exprId) ||
-          // a range FILTER composes only when the grouped column IS
-          // the clustering column (bounds and grouping must speak
-          // about the same stamps — the q171 discipline)
-          (bounds.isDefined && !isClusteringAttr(g, lr, gr))) None
-      else if (bounds.exists(b => b._1 > b._2))
-        // contradictory range: zero rows, hence zero groups
-        Some(LocalRelation(agg.output, Nil))
-      else {
-        def dedup(as: Seq[AttributeReference]) =
-          as.foldLeft(Seq.empty[AttributeReference])((acc, a) =>
-            if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
-        val sumAttrs = dedup(keyed
-          .filter(k => k._1 == 0 || k._1 == 5 || k._1 == 7).map(_._2))
-        val rngAttrs = dedup(keyed.filter(k => k._1 == 1 || k._1 == 2)
-          .map(_._2))
-        val cntAttrs = dedup(keyed
-          .filter(k => k._1 == 6 || k._1 == 5 || k._1 == 7).map(_._2))
-        val sqAttrs = dedup(keyed.filter(_._1 == 7).map(_._2))
-        val specs: Seq[Snapshot.StampSpec] =
-          sumAttrs.map(a => Snapshot.SumSpec(
-            Snapshot.physicalName(m, a.name))) ++
-            rngAttrs.map(a => Snapshot.RangeSpec(
-              Snapshot.physicalName(m, a.name),
-              cluster = isClusteringAttr(a, lr, gr))) ++
-            cntAttrs.map(a => Snapshot.CountSpec(
-              Snapshot.physicalName(m, a.name),
-              cluster = isClusteringAttr(a, lr, gr))) ++
-            sqAttrs.map(a => Snapshot.SumSpec(
-              Snapshot.physicalName(m, a.name), Snapshot.SqPfx))
-        def sumIdxOf(a: AttributeReference): Int =
-          sumAttrs.indexWhere(_.exprId == a.exprId)
-        def cntIdxOf(a: AttributeReference): Int =
-          sumAttrs.length + rngAttrs.length +
-            cntAttrs.indexWhere(_.exprId == a.exprId)
-        def sqIdxOf(a: AttributeReference): Int =
-          sumAttrs.length + rngAttrs.length + cntAttrs.length +
-            sqAttrs.indexWhere(_.exprId == a.exprId)
-        def specIdx(kind: Int, a: AttributeReference): Int =
-          if (kind == 0) sumIdxOf(a)
-          else if (kind == 6) cntIdxOf(a)
-          else sumAttrs.length + rngAttrs.indexWhere(_.exprId == a.exprId)
-        val physG = Snapshot.physicalName(m, g.name)
-        val (sums, scan) = Snapshot.metaGroupAggSplitCols(m, physG,
-          isClusteringAttr(g, lr, gr), specs, bounds)
-        def typed(v: Long): Any = typedKey(v, g.dataType)
-        // the raw stamped (sum-buffer, non-null count) pair for an avg
-        // OUTPUT within one group's accumulators (hybrid merges these
-        // undivided)
-        def avgPartOf(cs: Seq[Snapshot.StampAcc], a: AttributeReference,
-            ei: Int): Option[(Any, Long)] =
-          (cs(sumIdxOf(a)), cs(cntIdxOf(a))) match {
-            case (Snapshot.SumAcc(st, any), Snapshot.SumAcc(cnt, _)) =>
-              avgSumBuffer(avgFns(ei), a, st, any).map(sv => (sv, cnt))
-            case _ => None
-          }
-        // raw per-group stamped (Σx, Σx², n) triple for a variance
-        // OUTPUT — exact integers the hybrid merges undivided
-        def momPartOf(cs: Seq[Snapshot.StampAcc], a: AttributeReference)
-            : Option[(Any, Any, Long)] =
-          (cs(sumIdxOf(a)), cs(cntIdxOf(a)), cs(sqIdxOf(a))) match {
-            case (Snapshot.SumAcc(sx, anyX), Snapshot.SumAcc(cnt, _),
-                Snapshot.SumAcc(sq, anyQ)) =>
-              Some((if (anyX) org.apache.spark.sql.types.Decimal(
-                  scala.math.BigDecimal(sx), 38, 0) else null,
-                if (anyQ) org.apache.spark.sql.types.Decimal(
-                  scala.math.BigDecimal(sq), 38, 0) else null,
-                cnt))
-            case _ => None
-          }
-        // decode every group's stamped measures up front — one
-        // corrupted stamp refuses the whole rewrite
-        def decode(cs: Seq[Snapshot.StampAcc], kind: Int,
-            a: AttributeReference, dt: DataType, ei: Int): Option[Any] =
-          kind match {
-            case 5 => avgPartOf(cs, a, ei).flatMap { case (sv, c) =>
-              metaAvgEval(avgFns(ei), sv, c)
-            }
-            case 7 =>
-              (cs(sumIdxOf(a)), cs(cntIdxOf(a)), cs(sqIdxOf(a))) match {
-                case (Snapshot.SumAcc(sx, _), Snapshot.SumAcc(cnt, _),
-                    Snapshot.SumAcc(sq, _)) =>
-                  metaMomentEval(momFns(ei), cnt, sx, sq)
-                case _ => None
-              }
-            case _ => cs(specIdx(kind, a)) match {
-              case Snapshot.SumAcc(t, _) if kind == 6 => Some(t: Any)
-              case Snapshot.SumAcc(t, any) =>
-                if (any) sumCodecOf(a).get._2(t) else Some(null: Any)
-              case Snapshot.RangeAcc(mn, mx, any) =>
-                if (!any) Some(null: Any)
-                else rangeValue(if (kind == 1) mn else mx, dt)
-            }
-          }
-        // RAW per-group cells (wrappers apply at the serving arms: the
-        // full arm pushes values through them, the hybrid substitutes
-        // the merged trees — locals must stay raw partials)
-        val decoded = sums.map { case (k, (n, cs)) =>
-          k -> (n, shapes.zipWithIndex.map {
-            case (Some((4, _, _)), _) => Some(null: Any) // key: below
-            case (Some((3, _, _)), _) => Some(n: Any)
-            case (Some((8, _, _)), ei) => Some(litVals(ei).value)
-            case (Some((kk, a, dt)), ei) => decode(cs, kk, a, dt, ei)
-            case (None, _) => None
-          }, shapes.zipWithIndex.collect {
-            case (Some((5, a, _)), ei) => ei -> avgPartOf(cs, a, ei)
-          }.toMap, shapes.zipWithIndex.collect {
-            case (Some((7, a, _)), ei) => ei -> momPartOf(cs, a)
-          }.toMap)
-        }
-        if (decoded.valuesIterator.exists(t => t._2.exists(_.isEmpty) ||
-            t._3.valuesIterator.exists(_.isEmpty) ||
-            t._4.valuesIterator.exists(_.isEmpty))) None
-        else if (scan.size == m.files.size) None
-        else if (scan.isEmpty) {
-          val rows = decoded.toSeq.map { case (k, (_, vs, _, _)) =>
-            shapes.zip(vs).zipWithIndex.map {
-              case ((Some((4, _, _)), _), _) =>
-                Some(k.map(typed).orNull: Any)
-              case ((Some((8, _, _)), Some(v)), _) => Some(v)
-              case ((_, Some(v)), ei) => finish(ei, v)
-              case _ => return None // unreachable by the guard
-            } match {
-              case cells if cells.forall(_.isDefined) =>
-                InternalRow.fromSeq(cells.map(_.get))
-              case _ => return None // a wrapper refused to fold
-            }
-          }
-          Some(LocalRelation(agg.output, rows))
-        } else {
-          // DECIMAL avg partials merge exactly, and GROUPED variance
-          // moments merge exactly too — see sumRewrite's identical
-          // notes (round 20): exact DECIMAL(38,0) per-group scan
-          // partials under the sq:-stamp-present guard. Wrapped
-          // shapes ride the union as RAW partials and the merge
-          // substitutes each merged tree into its wrapper.
-          locally {
-            val momAttrs = shapes.zipWithIndex.collect {
-              case (Some((7, a, _)), _) => a
-            }
-            if (momAttrs.nonEmpty && scan.exists(f => momAttrs.exists(
-                a => !m.colStats.contains((f.path,
-                  Snapshot.SqPfx + Snapshot.physicalName(m, a.name))))))
-              return None
-          }
-          // avg hybrids (round 20 — the r19 ADVICE low (b) lifted):
-          // DOUBLE buffers merge as running double sums; DECIMAL
-          // buffers merge as exact decimal sums whose widened union
-          // total is bound back to the buffer dtype by Spark's OWN
-          // CheckOverflowInSum (mode-matched at the output arm below:
-          // legacy null / ANSI raise — the same contract the scan's
-          // final sum evaluation applies). Any other buffer dtype
-          // refuses.
-          if (shapes.zipWithIndex.exists {
-                case (Some((5, _, _)), ei) =>
-                  val bt = avgFns(ei).aggBufferAttributes.head.dataType
-                  bt != org.apache.spark.sql.types.DoubleType &&
-                    !bt.isInstanceOf[DecimalType]
-                case _ => false
-              }) return None
-          val cnt = Alias(AggregateExpression(
-            Count(Seq(Literal(1L))), Complete, isDistinct = false),
-            "gm_part_cnt")()
-          val perShape = shapes.zipWithIndex.collect {
-            case (Some((k, a, dt)), i)
-                if k <= 2 || k == 5 || k == 6 || k == 7 =>
-              (k, a, dt, i)
-          }
-          // slot layout over the partial columns (avg takes two,
-          // variance three)
-          val slotOf: Map[Int, Int] = {
-            var off = 0
-            perShape.map { case (k, _, _, i) =>
-              val s = i -> off
-              off += (if (k == 5) 2 else if (k == 7) 3 else 1); s
-            }.toMap
-          }
-          val scanAggs = perShape.flatMap { case (k, a, dt, i) =>
-            if (k == 5) {
-              // buffer-typed running sum: DOUBLE for integral
-              // children, the exact DECIMAL(p+10, s) for decimal
-              // children — see sumRewrite's identical note (round 20)
-              val sumChild: Expression =
-                if (avgFns(i).aggBufferAttributes.head.dataType ==
-                    org.apache.spark.sql.types.DoubleType)
-                  Cast(a, org.apache.spark.sql.types.DoubleType)
-                else a
-              Seq(
-                Alias(AggregateExpression(Sum(sumChild), Complete,
-                  isDistinct = false), "gm_part")(),
-                Alias(AggregateExpression(Count(Seq(a)), Complete,
-                  isDistinct = false), "gm_partc")())
-            } else if (k == 7) {
-              // exact per-group integer moments — see sumRewrite's
-              // identical kind-7 note
-              val dx = Cast(a, DecimalType(38, 0))
-              Seq(
-                Alias(AggregateExpression(Sum(dx), Complete,
-                  isDistinct = false), "gm_part")(),
-                Alias(AggregateExpression(Sum(Multiply(dx, dx)),
-                  Complete, isDistinct = false), "gm_partq")(),
-                Alias(AggregateExpression(Count(Seq(a)), Complete,
-                  isDistinct = false), "gm_partc")())
-            } else {
-              val child: Expression =
-                if ((k == 1 || k == 2) && a.dataType != dt) Cast(a, dt)
-                else a
-              val fn = k match {
-                case 0 => Sum(child); case 1 => Min(child)
-                case 2 => Max(child); case _ => Count(Seq(child))
-              }
-              Seq(Alias(AggregateExpression(fn, Complete,
-                isDistinct = false), "gm_part")())
-            }
-          }
-          val newChild = agg.child.transformUp {
-            case l: LogicalRelation if l eq lr =>
-              l.copy(relation = gr.restrictedTo(scan.map(_.path).toSet))
-          }
-          val scanAgg = Aggregate(Seq(g), g +: cnt +: scanAggs, newChild)
-          val localOut =
-            AttributeReference("gm_k", g.dataType)() +:
-              AttributeReference("gm_c", LongType, nullable = false)() +:
-              perShape.flatMap { case (k, _, dt, i) =>
-                if (k == 5)
-                  Seq(AttributeReference(s"gm_p$i",
-                      avgFns(i).aggBufferAttributes.head.dataType)(),
-                    AttributeReference(s"gm_p${i}c", LongType,
-                      nullable = false)())
-                else if (k == 7)
-                  Seq(AttributeReference(s"gm_p$i", DecimalType(38, 0))(),
-                    AttributeReference(s"gm_p${i}q", DecimalType(38, 0))(),
-                    AttributeReference(s"gm_p${i}c", LongType,
-                      nullable = false)())
-                else Seq(AttributeReference(s"gm_p$i", dt)())
-              }
-          val local = LocalRelation(localOut,
-            decoded.toSeq.map { case (k, (n, vs, ps, ms)) =>
-              InternalRow.fromSeq(
-                k.map(typed).orNull +: (n: Any) +:
-                  perShape.flatMap { case (kk, _, _, i) =>
-                    if (kk == 5) {
-                      val (sv, c) = ps(i).get // clean by the guard
-                      Seq(sv, c: Any)
-                    } else if (kk == 7) {
-                      val (sx, sq, c) = ms(i).get // clean by the guard
-                      Seq(sx, sq, c: Any)
-                    } else Seq(vs(i).get)
-                  })
-            })
-          val un = Union(Seq(scanAgg, local))
-          val uk = un.output.head
-          val uc = un.output(1)
-          def colOf(i: Int): Attribute = un.output(2 + slotOf(i))
-          def colOf2(i: Int): Attribute = un.output(3 + slotOf(i))
-          def colOf3(i: Int): Attribute = un.output(4 + slotOf(i))
-          val outs = agg.aggregateExpressions.zip(shapes).zipWithIndex
-            .map {
-              case ((e, Some((4, _, _))), _) =>
-                Alias(uk, e.name)(exprId = e.exprId)
-              case ((e, Some((3, _, _))), i) =>
-                Alias(finishExpr(i, Coalesce(Seq(AggregateExpression(
-                  Sum(uc), Complete, isDistinct = false), Literal(0L)))),
-                  e.name)(exprId = e.exprId)
-              case ((e, Some((0, _, dt))), i) =>
-                // cast the widened union-merge Sum back — see
-                // sumRewrite's identical note
-                Alias(finishExpr(i, Cast(AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false), dt)),
-                  e.name)(exprId = e.exprId)
-              case ((e, Some((6, _, _))), i) =>
-                Alias(finishExpr(i, Coalesce(Seq(AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false),
-                  Literal(0L)))), e.name)(exprId = e.exprId)
-              case ((e, Some((8, _, _))), i) =>
-                Alias(litVals(i), e.name)(exprId = e.exprId)
-              case ((e, Some((5, _, _))), i) =>
-                // Average's OWN final-value tree over the merged
-                // per-group (sum, count) — see sumRewrite
-                val fn = avgFns(i)
-                val buf = fn.aggBufferAttributes
-                val rawSum: Expression = AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false)
-                val sumAgg: Expression = buf(0).dataType match {
-                  case dt: DecimalType =>
-                    // bind the widened union total back to the buffer
-                    // dtype with the scan's own overflow contract —
-                    // Spark's CheckOverflowInSum, mode-matched
-                    org.apache.spark.sql.catalyst.expressions
-                      .CheckOverflowInSum(rawSum, dt,
-                        !session.sessionState.conf.ansiEnabled, null)
-                  case _ => rawSum
-                }
-                val cntAgg: Expression = Coalesce(Seq(
-                  AggregateExpression(Sum(colOf2(i)), Complete,
-                    isDistinct = false), Literal(0L)))
-                val ev = (fn: DeclarativeAggregate).evaluateExpression
-                  .transform {
-                    case r: AttributeReference
-                        if r.exprId == buf(0).exprId => sumAgg
-                    case r: AttributeReference
-                        if r.exprId == buf(1).exprId => cntAgg
-                  }
-                Alias(finishExpr(i, ev), e.name)(exprId = e.exprId)
-              case ((e, Some((7, _, _))), i) =>
-                // per-group merged exact moments through the SAME
-                // deterministic chain — see sumRewrite's kind-7 arm
-                val fn = momFns(i)
-                val buf = fn.aggBufferAttributes
-                val zeroD = Literal.create(
-                  org.apache.spark.sql.types.Decimal(0L, 38, 0),
-                  DecimalType(38, 0))
-                val sxAgg: Expression = Coalesce(Seq(AggregateExpression(
-                  Sum(colOf(i)), Complete, isDistinct = false), zeroD))
-                val sqAgg: Expression = Coalesce(Seq(AggregateExpression(
-                  Sum(colOf2(i)), Complete, isDistinct = false), zeroD))
-                val cntAgg: Expression = Coalesce(Seq(AggregateExpression(
-                  Sum(colOf3(i)), Complete, isDistinct = false),
-                  Literal(0L)))
-                val nD = Cast(cntAgg, DoubleType)
-                val avgE = If(EqualTo(cntAgg, Literal(0L)),
-                  Literal(0.0), Divide(Cast(sxAgg, DoubleType), nD))
-                val m2E = graft.expressions.MomentM2(cntAgg, sxAgg, sqAgg)
-                val ev2 = (fn: DeclarativeAggregate).evaluateExpression
-                  .transform {
-                    case r: AttributeReference
-                        if r.exprId == buf(0).exprId => nD
-                    case r: AttributeReference
-                        if r.exprId == buf(1).exprId => avgE
-                    case r: AttributeReference
-                        if r.exprId == buf(2).exprId => m2E
-                  }
-                Alias(finishExpr(i, ev2), e.name)(exprId = e.exprId)
-              case ((e, Some((k, _, _))), i) =>
-                val fn: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction =
-                  if (k == 1) Min(colOf(i)) else Max(colOf(i))
-                Alias(finishExpr(i, AggregateExpression(fn, Complete,
-                  isDistinct = false)), e.name)(exprId = e.exprId)
-              case ((_, None), _) => return None // unreachable
-            }
-          Some(Aggregate(Seq(uk), outs, un))
-        }
-      }
-    }
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(Nil, exprs, child, _) if exprs.nonEmpty &&
         exprs.forall(e => isCountStar(e) || litOf(e).isDefined) &&
@@ -1952,8 +1490,8 @@ case class MetadataOnlyCountRule(session: SparkSession)
       }
     case agg @ Aggregate(Nil, exprs, _, _) if exprs.nonEmpty =>
       minMaxRewrite(agg).orElse(distinctCountRewrite(agg))
-        .orElse(approxDistinctRewrite(agg))
-        .orElse(sumRewrite(agg)).getOrElse(agg)
+        .orElse(approxDistinctRewrite(agg, None))
+        .orElse(aggRewrite(agg, None)).getOrElse(agg)
     case agg @ Aggregate(Seq(g: AttributeReference), exprs, _, _)
         if exprs.nonEmpty &&
           exprs.forall(e => isKeyOutput(e, g) || isCountStar(e) ||
@@ -1961,8 +1499,8 @@ case class MetadataOnlyCountRule(session: SparkSession)
       groupedCountRewrite(agg, g).getOrElse(agg)
     case agg @ Aggregate(Seq(g: AttributeReference), exprs, _, _)
         if exprs.nonEmpty =>
-      groupedApproxDistinctRewrite(agg, g)
-        .orElse(groupedSumRewrite(agg, g)).getOrElse(agg)
+      approxDistinctRewrite(agg, Some(g))
+        .orElse(aggRewrite(agg, Some(g))).getOrElse(agg)
   }
 }
 

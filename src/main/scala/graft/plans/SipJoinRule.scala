@@ -65,9 +65,10 @@ import graft.sources.GraftRelation
   * per-row tax with no file-skip payoff. Convergence: before
   * injecting, the rule checks the join side's existing Filter
   * conjuncts for a semantically equal predicate and skips it — the
-  * fixed-point batch settles in one extra pass. Kill switch:
-  * `spark.graft.sipRule.enabled=false` (SipRuleSpec A/Bs both settings
-  * to identical answers).
+  * fixed-point batch settles in one extra pass. Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.SipJoinRule` turns
+  * the rule off for a session (SipRuleSpec A/Bs both settings to
+  * identical answers).
   *
   * DYNAMIC mode additionally lets the rule run the verb's bounded dim
   * job ([[graft.ops.SipJoin.dimKeys]] — `InListMax + 1` distinct
@@ -88,9 +89,6 @@ case class SipJoinRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
   import SipJoinRule._
-
-  private def enabled: Boolean =
-    session.conf.get("spark.graft.sipRule.enabled", "true") == "true"
 
   /** Name equality under the session's case-sensitivity setting (the
     * analyzer's own resolver) — see MetadataOnlyCountRule.sameName:
@@ -754,7 +752,6 @@ case class SipJoinRule(session: SparkSession)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.transformUp {
       // `key IN (SELECT dk FROM dim)` BEFORE its semi-join rewrite —
       // RewritePredicateSubquery runs in a later batch than injected

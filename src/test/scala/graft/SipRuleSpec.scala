@@ -46,9 +46,10 @@ class SipRuleSpec extends SparkSpec with PredicateHelper {
     }
 
   private def withRuleOff[A](body: => A): A = {
-    spark.conf.set("spark.graft.sipRule.enabled", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "graft.plans.SipJoinRule")
     try body
-    finally spark.conf.set("spark.graft.sipRule.enabled", "true")
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   /** A small graft dim: dk = 300..324, clustering stamps exact. */

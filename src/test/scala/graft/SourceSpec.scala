@@ -1348,7 +1348,7 @@ class SourceSpec extends SparkSpec {
       "/graft_metasum_" + java.util.UUID.randomUUID().toString.take(8)
     // clustered on k; b single-valued per file except the mixed tail;
     // v: valued, partially-NULL, all-NULL, and mixed-b files — every
-    // fold arm of metaGroupSumSplitCol
+    // fold arm of metaGroupAggSplitCols
     def slice(ks: Range, b: Long => Option[Long], v: Long => Option[Long]) =
       ks.map(k => (k.toLong, b(k.toLong), v(k.toLong)))
         .toDF("k", "b", "v")
@@ -2290,7 +2290,7 @@ class SourceSpec extends SparkSpec {
     assert(isLocal(g2), s"grouped counts+lits:\n${g2.queryExecution.optimizedPlan}")
     assert(g2.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2))).toSet == Set(("g", 100L, 10L), ("g", 200L, 10L)))
-    // 5. grouped sums/avg + literal (groupedSumRewrite)
+    // 5. grouped sums/avg + literal (aggRewrite with one key)
     val g3 = spark.read.format("graft").load(d2)
       .groupBy(col("b")).agg(sum(col("v")).as("sv"),
         avg(col("v")).as("av"))
