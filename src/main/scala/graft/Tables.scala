@@ -41,7 +41,7 @@ object Tables {
     * Canonical types are exactly what the current fixtures arrive as
     * (µs-without-UTC-flag parquet timestamps read as TIMESTAMP_NTZ under
     * Spark's default inferTimestampNTZ), except `events.ts`, whose
-    * canonical form is BIGINT epoch-nanos (see [[normEventTs]]). */
+    * canonical form is BIGINT epoch-nanos (see [[events]]). */
   private[graft] val contracts: Map[String, Seq[(String, DataType)]] = Map(
     "region" -> Seq("r_regionkey" -> IntegerType, "r_name" -> StringType),
     "nation" -> Seq("n_nationkey" -> IntegerType, "n_name" -> StringType,
@@ -159,20 +159,6 @@ object Tables {
     * oracles are already encoding-agnostic (`epoch_us(ts)` works on both).
     */
   def events(s: SparkSession, d: String): DataFrame = t(s, d, "events")
-
-  /** Normalize a frame's `ts` column to BIGINT epoch-nanos regardless of
-    * physical encoding — the events.ts slice of [[conform]], kept as a
-    * named entry point for the STREAMING read path (the file-stream source
-    * takes the raw footer schema, so its frames arrive un-conformed).
-    * TIMESTAMP_NTZ (naive wall-clock, what parquet µs-without-UTC-flag
-    * reads as) is interpreted as UTC — exact because every graft session
-    * pins `spark.sql.session.timeZone=UTC`, making the NTZ→TIMESTAMP cast
-    * the identity on the underlying micros. Stateless projection — works
-    * on batch AND streaming frames. */
-  def normEventTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
-    case LongType => df
-    case other    => df.withColumn("ts", normalize("events", "ts", other, LongType))
-  }
 
   /** events.ts (epoch ns, BIGINT) -> TimestampType at µs precision.
     * Exact decimal division, NOT double: epoch-ns values (~1.7e18) exceed

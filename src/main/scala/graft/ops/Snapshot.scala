@@ -3907,7 +3907,7 @@ object Snapshot {
     val cur = currentVersion(spark, dir)
     require(cur > 0, s"stageAppend needs an existing table at $dir")
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"append against a z-ordered snapshot (note='${m.note}'): blind " +
         "appends would break its layout contract — re-OPTIMIZE after")
     require(m.basePath.isEmpty,
@@ -3964,7 +3964,7 @@ object Snapshot {
       val cur = currentVersion(spark, dir)
       val (m, mChain) = manifestWithChain(spark, dir, cur)
       try {
-        if (m.note.startsWith("zorder")) {
+        if (isZOrdered(m)) {
           cleanup()
           throw new IllegalStateException(
             s"head of $dir became z-ordered (v$cur) while the append was " +
@@ -4119,7 +4119,7 @@ object Snapshot {
     // holding the pre-images, and an "update" would silently DUPLICATE
     // its rows. Fail loudly instead — merge against the pre-z layout (or
     // a key-clustered table) and re-run OPTIMIZE ZORDER after.
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"mergeCow against a z-ordered snapshot (note='${m.note}'): the " +
         "stats column is the z interleave, not the merge key — merge on a " +
         "key-clustered version and re-optimize")
@@ -4183,7 +4183,7 @@ object Snapshot {
     require(nFiles >= 1, s"deleteWhere needs nFiles >= 1, got nFiles=$nFiles")
     val cur = currentVersion(spark, dir)
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"deleteWhere against a z-ordered snapshot (note='${m.note}'): the " +
         "stats column is the z interleave, not the key — delete on a " +
         "key-clustered version and re-optimize")
@@ -4226,7 +4226,7 @@ object Snapshot {
                     note: String = ""): Int = {
     val cur = currentVersion(spark, dir)
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"deleteWhereDV against a z-ordered snapshot (note='${m.note}'): " +
         "delete on a key-clustered version and re-optimize")
     val touch = m.files.filter(f => f.min <= hi && f.max >= lo)
@@ -4389,7 +4389,7 @@ object Snapshot {
       s"updateWhereDV needs nFiles >= 1, got nFiles=$nFiles")
     val cur = currentVersion(spark, dir)
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"updateWhereDV against a z-ordered snapshot (note='${m.note}'): " +
         "update on a key-clustered version and re-optimize")
     // unlike the DV DELETE (manifest-only), a DV UPDATE always appends
@@ -4481,7 +4481,7 @@ object Snapshot {
     require(nFiles >= 1, s"updateWhere needs nFiles >= 1, got nFiles=$nFiles")
     val cur = currentVersion(spark, dir)
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"updateWhere against a z-ordered snapshot (note='${m.note}'): the " +
         "stats column is the z interleave, not the key — update on a " +
         "key-clustered version and re-optimize")
@@ -4534,7 +4534,7 @@ object Snapshot {
     // maintenance marker instead — the dataChange=false bit that lets
     // [[changeFeed]] skip maintenance-only ranges without a diff.
     val layoutNote =
-      if (m.note.startsWith("zorder")) m.note else "optimize:compact"
+      if (isZOrdered(m)) m.note else "optimize:compact"
     commit(read(spark, dir, cur), dir, cur, m.statsCol, Nil, nFiles,
       note = layoutNote)
   }
@@ -4563,7 +4563,7 @@ object Snapshot {
                    smallBytes: Long, targetBytes: Long = 128L << 20): Int = {
     val cur = currentVersion(spark, dir)
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"compactSmall against a z-ordered snapshot (note='${m.note}'): " +
         "re-cluster the tail with the layout-preserving compactVersion")
     val sized = m.files.map(f => f -> entryLen(spark, dir, f.path))
@@ -4592,7 +4592,7 @@ object Snapshot {
                       maxValues: Int = 256): Int = {
     val cur = currentVersion(spark, dir)
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"optimizeByValue against a z-ordered snapshot (note='${m.note}'): " +
         "the rewrite would drop the layout note — re-cluster deliberately")
     commitByValue(read(spark, dir, cur), dir, cur,
@@ -4749,7 +4749,7 @@ object Snapshot {
     val cur = currentVersion(spark, dir)
     require(cur > 0, s"no table at $dir")
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"renameColumn on a z-ordered snapshot (note='${m.note}'): the " +
         "layout note records axis names — rename pre-z and re-optimize")
     val logicalCols = read(spark, dir, cur).schema.fieldNames
@@ -4808,7 +4808,7 @@ object Snapshot {
     val cur = currentVersion(spark, dir)
     require(cur > 0, s"no table at $dir")
     val m = manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"dropColumn on a z-ordered snapshot (note='${m.note}'): " +
         "drop pre-z and re-optimize")
     val logicalCols = read(spark, dir, cur).schema.fieldNames
@@ -4862,7 +4862,7 @@ object Snapshot {
     require(toVersion >= 1, s"cannot restore to v$toVersion")
     if (toVersion == cur) return cur
     val m = manifest(spark, dir, toVersion)
-    require(!m.note.startsWith("zorder"),
+    require(!isZOrdered(m),
       s"restore target v$toVersion is z-ordered (note='${m.note}') — " +
         "restore the pre-z version and re-run OPTIMIZE ZORDER")
     // the restore is total: files, sidecars, the constraint set AND the
@@ -4918,7 +4918,7 @@ object Snapshot {
       (dataPath(qualifiedSrc, p), c) -> s }
     val dvs = m.dvs.map { case (p, v) => dataPath(qualifiedSrc, p) -> v }
     val note =
-      if (m.note.startsWith("zorder")) m.note else s"clone:$srcDir@v$src"
+      if (isZOrdered(m)) m.note else s"clone:$srcDir@v$src"
     publish(spark, dstDir,
       Manifest(1, m.statsCol, files, note, blooms = blooms,
         checks = m.checks, addedCols = m.addedCols, colStats = colStats,
@@ -5249,7 +5249,7 @@ object Snapshot {
     // table keeps its axis constants so box serving stays live; either
     // spelling reads as maintenance to changeFeed
     val note =
-      if (m.note.startsWith("zorder")) m.note else s"optimize:bloom:$bloomCol"
+      if (isZOrdered(m)) m.note else s"optimize:bloom:$bloomCol"
     publish(spark, dir, m.copy(version = cur + 1, note = note, ts = 0L,
       blooms = m.blooms ++ rel ++ empties))
     cur + 1
@@ -5341,7 +5341,7 @@ object Snapshot {
           s"${autoStatsMaxStrBytes(spark)} bytes in some file and were " +
           "not stamped there; those files stay scan candidates")
     val note =
-      if (m.note.startsWith("zorder")) m.note
+      if (isZOrdered(m)) m.note
       else s"optimize:stats:${cols.mkString(",")}" +
         (if (gated.isEmpty) "" else s" gated:${gated.mkString(",")}")
     publish(spark, dir, m.copy(version = cur + 1, note = note, ts = 0L,
@@ -5656,7 +5656,7 @@ object Snapshot {
     * idempotency tokens must avoid these prefixes (enforced nowhere —
     * they are namespaced spellings no job tag would collide with). */
   private[graft] def isMaintenanceNote(n: String): Boolean =
-    n.startsWith("zorder") || n.startsWith("optimize:") ||
+    ZLayout.isNote(n) || n.startsWith("optimize:") ||
       n.startsWith("constraint:") || n.startsWith("schema:")
 
   /** Default vacuum grace age (1 h): a data directory younger than this
@@ -5715,195 +5715,6 @@ object Snapshot {
       .map(_.getPath.getName)
     dead.foreach(d => fs.delete(new Path(new Path(dir, "data"), d), true))
     dead.sorted
-  }
-
-  // ── Z-order clustering: multi-dimensional OPTIMIZE ──────────────────
-  //
-  // Range-clustering on ONE column ([[commit]]'s repartitionByRange on
-  // the stats column) prunes one axis: a predicate on any OTHER column
-  // overlaps every file. The lakehouse answer (Delta's OPTIMIZE ZORDER,
-  // the UB-tree literature) is to cluster on the MORTON INTERLEAVE of
-  // two dimensions: nearby (a,b) points get nearby z values, so each
-  // file's [zmin,zmax] range occupies a compact region of the (a,b)
-  // plane and a 2-D box predicate overlaps only the files whose region
-  // touches the box — BOTH axes prune, at file level via the manifest
-  // and at row-group level via parquet's own stats (z-sorted files are
-  // locally coherent in a AND b). At 100 TB this is the difference
-  // between a point-in-time-per-customer query opening every file of a
-  // date-sorted table and opening a handful.
-
-  /** Spread the low 31 bits of `x` so bit i lands at position 2i — the
-    * binary-magic-numbers interleave, pure bitwise column arithmetic
-    * (codegen'd end to end; no UDF). Caller contract: 0 <= x < 2^31. */
-  private def spreadBits(x: Column): Column =
-    Seq(16 -> 0x0000FFFF0000FFFFL, 8 -> 0x00FF00FF00FF00FFL,
-        4  -> 0x0F0F0F0F0F0F0F0FL, 2 -> 0x3333333333333333L,
-        1  -> 0x5555555555555555L)
-      .foldLeft(x.cast("long")) { case (c, (s, m)) =>
-        c.bitwiseOR(shiftleft(c, s)).bitwiseAND(lit(m)) }
-
-  /** Morton (Z-order) code of two non-negative 31-bit dimensions: bit i
-    * of `a` at position 2i, bit i of `b` at 2i+1. Always in [0, 2^62) —
-    * sign-safe as a BIGINT stats column. */
-  def zValue(a: Column, b: Column): Column =
-    spreadBits(a).bitwiseOR(shiftleft(spreadBits(b), 1))
-
-  private def spreadL(x0: Long): Long = {
-    var v = x0
-    v = (v | (v << 16)) & 0x0000FFFF0000FFFFL
-    v = (v | (v << 8))  & 0x00FF00FF00FF00FFL
-    v = (v | (v << 4))  & 0x0F0F0F0F0F0F0F0FL
-    v = (v | (v << 2))  & 0x3333333333333333L
-    v = (v | (v << 1))  & 0x5555555555555555L
-    v
-  }
-
-  // ---- 3-D Morton (the q127 family's third axis, round 12) -------------
-  // Same construction one dimension up: bit i of each of THREE dims lands
-  // at 3i/3i+1/3i+2 (the standard 21-bit three-way magic-number spread),
-  // aligned CUBES map to contiguous z ranges, and the cover walk becomes
-  // an octree. 16-bit scaled dims → 48-bit codes, sign-safe BIGINTs.
-
-  /** Spread the low 21 bits of `x` so bit i lands at position 3i — pure
-    * bitwise column arithmetic (codegen'd; no UDF). Caller contract:
-    * 0 <= x < 2^21 (scaled dims are 16-bit, well inside). */
-  private def spreadBits3(x: Column): Column =
-    Seq(32 -> 0x1F00000000FFFFL, 16 -> 0x1F0000FF0000FFL,
-        8  -> 0x100F00F00F00F00FL, 4 -> 0x10C30C30C30C30C3L,
-        2  -> 0x1249249249249249L)
-      .foldLeft(x.cast("long").bitwiseAND(lit(0x1FFFFFL))) {
-        case (c, (s, m)) => c.bitwiseOR(shiftleft(c, s)).bitwiseAND(lit(m)) }
-
-  /** Morton code of three non-negative 21-bit dimensions. */
-  def zValue3(a: Column, b: Column, c: Column): Column =
-    spreadBits3(a)
-      .bitwiseOR(shiftleft(spreadBits3(b), 1))
-      .bitwiseOR(shiftleft(spreadBits3(c), 2))
-
-  private def spreadL3(x0: Long): Long = {
-    var v = x0 & 0x1FFFFFL
-    v = (v | (v << 32)) & 0x1F00000000FFFFL
-    v = (v | (v << 16)) & 0x1F0000FF0000FFL
-    v = (v | (v << 8))  & 0x100F00F00F00F00FL
-    v = (v | (v << 4))  & 0x10C30C30C30C30C3L
-    v = (v | (v << 2))  & 0x1249249249249249L
-    v
-  }
-
-  /** Driver-side twin of [[zValue3]] (identical bit spelling — spec-pinned
-    * against each other like the 2-D pair). */
-  private[graft] def zPoint3(a: Long, b: Long, c: Long): Long =
-    spreadL3(a) | (spreadL3(b) << 1) | (spreadL3(c) << 2)
-
-  /** Driver-side twin of [[zValue]] (identical bit spelling — the spec
-    * pins the two against each other). */
-  private[graft] def zPoint(a: Long, b: Long): Long =
-    spreadL(a) | (spreadL(b) << 1)
-
-  /** Conservative set of z ranges covering the box [aLo,aHi]×[bLo,bHi],
-    * ascending and disjoint, at most `maxRanges` of them.
-    *
-    * Quad-tree walk over ALIGNED square cells: a cell aligned to its own
-    * 2^level size maps to ONE contiguous z range (the defining property
-    * of Morton order), so cells fully inside the box emit their range,
-    * disjoint cells prune, and partial overlaps split into 4 children.
-    * Recursion stops `refine` levels below the box's own scale — the
-    * emitted cover is a superset of the box (never a subset; pruning
-    * stays lossless and the exact predicate applies as a residual), with
-    * O(perimeter/cellSize) ≈ 4·2^refine ranges before the merge step
-    * packs the smallest inter-range gaps down to `maxRanges`. Pure
-    * driver-side arithmetic on manifest-scale data — no Spark job. */
-  private[graft] def zCover(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-                            maxRanges: Int = 64): Seq[(Long, Long)] = {
-    require(0 <= aLo && aLo <= aHi && aHi < (1L << 31) &&
-            0 <= bLo && bLo <= bHi && bHi < (1L << 31),
-      s"box [$aLo,$aHi]x[$bLo,$bHi] must sit inside [0, 2^31)^2")
-    require(maxRanges >= 4, s"maxRanges must be >= 4, got $maxRanges")
-    // stop splitting ~16 cells across the box's longer side: cover
-    // granularity scales WITH the box, so range count stays bounded
-    // whatever the box size
-    val span = math.max(aHi - aLo, bHi - bLo) + 1
-    val cut = math.max(0, (63 - java.lang.Long.numberOfLeadingZeros(span)) - 4)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def walk(ca: Long, cb: Long, level: Int): Unit = {
-      val hi = (1L << level) - 1
-      if (ca + hi < aLo || ca > aHi || cb + hi < bLo || cb > bHi) return
-      if (level <= cut ||
-          (ca >= aLo && ca + hi <= aHi && cb >= bLo && cb + hi <= bHi)) {
-        out += ((zPoint(ca, cb), zPoint(ca + hi, cb + hi)))
-        return
-      }
-      val h = 1L << (level - 1)
-      // children in ascending-z order (b is the odd/high bit), so the
-      // emitted ranges arrive already sorted and disjoint
-      walk(ca, cb, level - 1);     walk(ca + h, cb, level - 1)
-      walk(ca, cb + h, level - 1); walk(ca + h, cb + h, level - 1)
-    }
-    walk(0L, 0L, 31)
-    packRanges(out.toSeq, maxRanges)
-  }
-
-  /** Pack an ascending disjoint range list to `maxRanges`: keep the
-    * (maxRanges-1) WIDEST gaps as splits and bridge the rest — bridging
-    * only ever grows the cover (still a superset), and wide gaps are
-    * exactly the z-space a bridge would spuriously match. */
-  private def packRanges(r: Seq[(Long, Long)],
-                         maxRanges: Int): Seq[(Long, Long)] =
-    if (r.length <= maxRanges) r
-    else {
-      val gaps = r.sliding(2).zipWithIndex
-        .map { case (Seq(p, n), i) => (n._1 - p._2, i) }.toSeq
-      val keep = gaps.sortBy(g => (-g._1, g._2)).take(maxRanges - 1)
-        .map(_._2).toSet
-      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long)](r.head)
-      r.tail.zipWithIndex.foreach { case (cur, i) =>
-        if (keep(i)) acc += cur
-        else acc(acc.length - 1) = (acc.last._1, cur._2)
-      }
-      acc.toSeq
-    }
-
-  /** [[zCover]] one dimension up: conservative z-range cover of the box
-    * [aLo,aHi]×[bLo,bHi]×[cLo,cHi] by octree walk over aligned CUBES (an
-    * aligned 2^level cube is one contiguous 3-D Morton range). Recursion
-    * stops ~32 cells across the box's longest side, with a 2048-range
-    * budget — BOTH deliberately bigger than 2-D's 16-cell/64-range
-    * tuning: a box thin in one LOW-interleaved axis is a slab whose
-    * cover is O(cells²) small chunks dispersed through z space, and at
-    * 2-D's granularity the pack step bridges the chunks into
-    * near-full-space ranges and pruning vanishes (measured in the
-    * rank-3D duel). The walk stays a few thousand driver-side nodes and
-    * cover ∩ manifest a ~2048 × files comparison — microseconds against
-    * any manifest. Children walk in ascending-z order (c is the highest
-    * interleaved bit), so ranges arrive sorted and disjoint. */
-  private[graft] def zCover3(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-                             cLo: Long, cHi: Long,
-                             maxRanges: Int = 2048): Seq[(Long, Long)] = {
-    val lim = 1L << 21
-    require(0 <= aLo && aLo <= aHi && aHi < lim &&
-            0 <= bLo && bLo <= bHi && bHi < lim &&
-            0 <= cLo && cLo <= cHi && cHi < lim,
-      s"box [$aLo,$aHi]x[$bLo,$bHi]x[$cLo,$cHi] must sit inside [0, 2^21)^3")
-    require(maxRanges >= 8, s"maxRanges must be >= 8, got $maxRanges")
-    val span = Seq(aHi - aLo, bHi - bLo, cHi - cLo).max + 1
-    val cut = math.max(0, (63 - java.lang.Long.numberOfLeadingZeros(span)) - 5)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def walk(ca: Long, cb: Long, cc: Long, level: Int): Unit = {
-      val hi = (1L << level) - 1
-      if (ca + hi < aLo || ca > aHi || cb + hi < bLo || cb > bHi ||
-          cc + hi < cLo || cc > cHi) return
-      if (level <= cut ||
-          (ca >= aLo && ca + hi <= aHi && cb >= bLo && cb + hi <= bHi &&
-           cc >= cLo && cc + hi <= cHi)) {
-        out += ((zPoint3(ca, cb, cc), zPoint3(ca + hi, cb + hi, cc + hi)))
-        return
-      }
-      val h = 1L << (level - 1)
-      for (dc <- 0 to 1; db <- 0 to 1; da <- 0 to 1)
-        walk(ca + da * h, cb + db * h, cc + dc * h, level - 1)
-    }
-    walk(0L, 0L, 0L, 21)
-    packRanges(out.toSeq, maxRanges)
   }
 
   /** CHANGE DATA FEED by snapshot diff: the row-level changes between
@@ -6027,383 +5838,301 @@ object Snapshot {
         .unionByName(image("pre", Seq("D", "U"), "U-"))
   }
 
-  /** Scaling constants of a z-ordered version, persisted in the manifest
-    * note — reads must translate boxes with EXACTLY the constants the
-    * write interleaved with. Two normalizations share the interface:
-    * both are MONOTONE maps onto a bounded z dimension (monotonicity is
-    * what makes a raw box's edges translate to a scaled box that covers
-    * every row of the raw box — pruning stays lossless by construction
-    * either way; only file-level SELECTIVITY differs under skew). */
-  private[graft] sealed trait ZScale {
-    def aCol: String; def bCol: String
-    def aMin: Long; def aMax: Long; def bMin: Long; def bMax: Long
-    def scaleA(x: Long): Long
-    def scaleB(x: Long): Long
-    def note: String
-  }
+  // ── Z-order clustering: multi-dimensional OPTIMIZE ──────────────────
+  //
+  // Range-clustering on ONE column prunes one axis: a predicate on any
+  // other column overlaps every file. Clustering on the MORTON
+  // INTERLEAVE of 2 or 3 columns (Delta's OPTIMIZE ZORDER, the UB-tree
+  // idea) gives each file's [zmin,zmax] a compact region of the space,
+  // so a box predicate opens only the files whose region touches it —
+  // EVERY axis prunes, at file level via the manifest and at row-group
+  // level inside each z-sorted file. The arities differ only in their
+  // [[ZCurve]] constants.
 
-  /** Min-max map onto the 16-bit z dimension: equal bit width for both
-    * columns no matter how unequal their raw domains — raw interleaving
-    * would let the wider column's high bits dominate the code and the
-    * narrow axis would stop pruning. One agg's cost; an outlier-skewed
-    * column stretches its scale and compresses the data's mass into few
-    * distinct scaled values — weakened (never broken) pruning, which is
-    * what [[ZRankMeta]] exists for. */
-  private[graft] final case class ZMeta(aCol: String, bCol: String,
-                                        aMin: Long, aMax: Long,
-                                        bMin: Long, bMax: Long)
-      extends ZScale {
-    def scaleA(x: Long): Long = (x - aMin) * 65535L / math.max(1L, aMax - aMin)
-    def scaleB(x: Long): Long = (x - bMin) * 65535L / math.max(1L, bMax - bMin)
-    def note: String = s"zorder($aCol,$bCol,$aMin,$aMax,$bMin,$bMax)"
-  }
+  /** Per-arity constants of the Morton interleave: `bits` per axis (31
+    * or 21 — codes stay sign-safe BIGINTs), the magic-number
+    * `(shift, mask)` spread putting bit i of an axis at d·i, shared by
+    * the executor-side [[value]] and the driver-side [[point]] so they
+    * cannot drift, and the cover tuning. 3-D's cover is finer (~32 cells
+    * across the box, 2048 ranges vs 16 cells, 64): a slab thin in a
+    * LOW-interleaved axis covers as O(cells²) dispersed chunks, which
+    * 2-D's budget bridges into near-full-space ranges (the rank-3D duel
+    * measured pruning vanish). */
+  private[graft] final case class ZCurve(bits: Int, spread: Seq[(Int, Long)],
+                                         refine: Int, maxRanges: Int) {
+    private val mask = (1L << bits) - 1
 
-  /** Rank (quantile-bucket) map: value -> number of quantile boundaries
-    * at or below it, so each bucket carries ~equal ROW MASS regardless
-    * of the value distribution — the skew-robust normalization (Delta's
-    * range-partition-id recipe). A Zipfian column whose min-max scale
-    * collapses 99% of rows into one scaled value spreads evenly across
-    * all buckets here, keeping BOTH axes selective. Boundaries ride the
-    * manifest note ('|'-separated; tab/newline-free contract holds), so
-    * reads translate boxes with exactly the write's buckets. */
-  private[graft] final case class ZRankMeta(aCol: String, bCol: String,
-                                            aMin: Long, aMax: Long,
-                                            bMin: Long, bMax: Long,
-                                            aBounds: Seq[Long],
-                                            bBounds: Seq[Long])
-      extends ZScale {
-    def scaleA(x: Long): Long = aBounds.count(_ <= x).toLong
-    def scaleB(x: Long): Long = bBounds.count(_ <= x).toLong
-    def note: String = s"zorderq($aCol,$bCol,$aMin,$aMax,$bMin,$bMax," +
-      s"${aBounds.mkString("|")},${bBounds.mkString("|")})"
-  }
+    private def spreadCol(x: Column): Column =
+      spread.foldLeft(x.cast("long").bitwiseAND(lit(mask))) {
+        case (c, (s, m)) => c.bitwiseOR(shiftleft(c, s)).bitwiseAND(lit(m)) }
 
-  private val ZNote = """zorder\(([^,]+),([^,]+),(-?\d+),(-?\d+),(-?\d+),(-?\d+)\)""".r
-  private val ZQNote = """zorderq\(([^,]+),([^,]+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),([0-9|-]*),([0-9|-]*)\)""".r
-  private def parseBounds(s: String): Seq[Long] =
-    if (s.isEmpty) Seq.empty else s.split('|').toSeq.map(_.toLong)
-  private def zMetaOf(m: Manifest): ZScale = m.note match {
-    case ZNote(a, b, a0, a1, b0, b1) =>
-      ZMeta(a, b, a0.toLong, a1.toLong, b0.toLong, b1.toLong)
-    case ZQNote(a, b, a0, a1, b0, b1, ab, bb) =>
-      ZRankMeta(a, b, a0.toLong, a1.toLong, b0.toLong, b1.toLong,
-        parseBounds(ab), parseBounds(bb))
-    case other => throw new IllegalArgumentException(
-      s"v${m.version} is not a z-ordered snapshot (note='$other') — " +
-        "run optimizeZorder first")
-  }
+    private def spreadLong(x: Long): Long =
+      spread.foldLeft(x & mask) { case (v, (s, m)) => (v | (v << s)) & m }
 
-  /** 3-D scaling constants — [[ZScale]]'s shape one dimension up, with
-    * the same min-max/rank split ([[ZMeta3]]/[[ZRank3Meta]]). */
-  private[graft] sealed trait ZScale3 {
-    def aMin: Long; def aMax: Long; def bMin: Long; def bMax: Long
-    def cMin: Long; def cMax: Long
-    def scaleA(x: Long): Long; def scaleB(x: Long): Long
-    def scaleC(x: Long): Long
-    def note: String
-  }
+    /** Morton code column: bit i of axis j at position d·i + j — pure
+      * bitwise column arithmetic, codegen'd end to end (no UDF). Caller
+      * contract: every dimension in [0, 2^bits). */
+    def value(dims: Column*): Column =
+      dims.zipWithIndex.map { case (x, j) =>
+        if (j == 0) spreadCol(x) else shiftleft(spreadCol(x), j)
+      }.reduce(_.bitwiseOR(_))
 
-  private[graft] final case class ZMeta3(aCol: String, bCol: String,
-                                         cCol: String,
-                                         aMin: Long, aMax: Long,
-                                         bMin: Long, bMax: Long,
-                                         cMin: Long, cMax: Long)
-      extends ZScale3 {
-    def scaleA(x: Long): Long = (x - aMin) * 65535L / math.max(1L, aMax - aMin)
-    def scaleB(x: Long): Long = (x - bMin) * 65535L / math.max(1L, bMax - bMin)
-    def scaleC(x: Long): Long = (x - cMin) * 65535L / math.max(1L, cMax - cMin)
-    def note: String =
-      s"zorder3($aCol,$bCol,$cCol,$aMin,$aMax,$bMin,$bMax,$cMin,$cMax)"
-  }
+    /** Driver-side twin of [[value]] (the spec pins the two together). */
+    def point(dims: Seq[Long]): Long =
+      dims.zipWithIndex.foldLeft(0L) { case (z, (x, j)) => z | (spreadLong(x) << j) }
 
-  /** Rank (quantile-bucket) normalization per axis — [[ZRankMeta]] one
-    * dimension up, for the triple-filter class with a skewed axis. */
-  private[graft] final case class ZRank3Meta(aCol: String, bCol: String,
-                                             cCol: String,
-                                             aMin: Long, aMax: Long,
-                                             bMin: Long, bMax: Long,
-                                             cMin: Long, cMax: Long,
-                                             aBounds: Seq[Long],
-                                             bBounds: Seq[Long],
-                                             cBounds: Seq[Long])
-      extends ZScale3 {
-    def scaleA(x: Long): Long = aBounds.count(_ <= x).toLong
-    def scaleB(x: Long): Long = bBounds.count(_ <= x).toLong
-    def scaleC(x: Long): Long = cBounds.count(_ <= x).toLong
-    def note: String =
-      s"zorderq3($aCol,$bCol,$cCol,$aMin,$aMax,$bMin,$bMax,$cMin,$cMax," +
-        s"${aBounds.mkString("|")},${bBounds.mkString("|")},${cBounds.mkString("|")})"
-  }
-
-  private val ZNote3 =
-    """zorder3\(([^,]+),([^,]+),([^,]+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),(-?\d+)\)""".r
-  private val ZQNote3 =
-    """zorderq3\(([^,]+),([^,]+),([^,]+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),([0-9|-]*),([0-9|-]*),([0-9|-]*)\)""".r
-  private def zMeta3Of(m: Manifest): ZScale3 = m.note match {
-    case ZNote3(a, b, c, a0, a1, b0, b1, c0, c1) =>
-      ZMeta3(a, b, c, a0.toLong, a1.toLong, b0.toLong, b1.toLong,
-        c0.toLong, c1.toLong)
-    case ZQNote3(a, b, c, a0, a1, b0, b1, c0, c1, ab, bb, cb) =>
-      ZRank3Meta(a, b, c, a0.toLong, a1.toLong, b0.toLong, b1.toLong,
-        c0.toLong, c1.toLong,
-        parseBounds(ab), parseBounds(bb), parseBounds(cb))
-    case other => throw new IllegalArgumentException(
-      s"v${m.version} is not a 3-D z-ordered snapshot (note='$other') — " +
-        "run optimizeZorder3 first")
-  }
-
-  /** OPTIMIZE ZORDER as a commit: rewrite the current snapshot clustered
-    * by [[zValue]] over two integral columns — each min-max scaled to 16
-    * bits first (one stats job; the constants ride the manifest note) —
-    * and publish it as a new version: same rows, new layout, with the
-    * materialized `_z` column as the stats column [[readPrunedBox]]
-    * prunes on. Rides the normal commit protocol (readers undisturbed,
-    * concurrent writers race fairly, the old layout stays
-    * time-travelable). Min-max scaling keeps the map monotone per column
-    * (so box edges translate exactly) at one agg's cost; a heavily
-    * outlier-skewed column stretches its scale and weakens — never
-    * breaks — pruning, which is where a production system graduates to
-    * rank-based normalization (Delta's range_partition_id recipe) at the
-    * price of a per-column sort. */
-  def optimizeZorder(spark: SparkSession, dir: String,
-                     aCol: String, bCol: String, nFiles: Int): Int = {
-    val cur = currentVersion(spark, dir)
-    val df = read(spark, dir, cur)
-    val lim = 1L << 31
-    val g = df.agg(min(col(aCol)).cast("long"), max(col(aCol)).cast("long"),
-                   min(col(bCol)).cast("long"), max(col(bCol)).cast("long"))
-      .head
-    val zm = ZMeta(aCol, bCol, g.getLong(0), g.getLong(1),
-                   g.getLong(2), g.getLong(3))
-    require(zm.aMin >= 0 && zm.aMax < lim && zm.bMin >= 0 && zm.bMax < lim,
-      s"z-order dimensions must be in [0, 2^31): " +
-        s"$aCol=[${zm.aMin},${zm.aMax}] $bCol=[${zm.bMin},${zm.bMax}]")
-    // `/` on longs is double division; the cast back to long truncates.
-    // That IS ZMeta's integer division for this domain: the numerator is
-    // < 2^47 (exact in double) and the true quotient sits >= 1/d above
-    // any integer it doesn't hit, dwarfing double's ~7e-12 rounding at
-    // this magnitude — so executor and driver floor identically.
-    def scaled(c: String, mn: Long, mx: Long): Column =
-      (col(c).cast("long") - lit(mn)) * lit(65535L) / lit(math.max(1L, mx - mn))
-    commit(
-      df.withColumn("_z", zValue(
-        scaled(aCol, zm.aMin, zm.aMax).cast("long"),
-        scaled(bCol, zm.bMin, zm.bMax).cast("long"))),
-      dir, cur, "_z", Nil, nFiles, note = zm.note)
-  }
-
-  /** OPTIMIZE ZORDER with RANK (quantile-bucket) normalization — the
-    * skew-robust variant of [[optimizeZorder]]. One approx-quantile pass
-    * per column (`approxQuantile`, the Greenwald-Khanna single-scan
-    * sketch — no per-column sort even at 100 TB) yields `buckets`-1
-    * boundaries; each row's dimension becomes the COUNT of boundaries at
-    * or below its value, computed executor-side as a HOF over the
-    * boundary-array literal (`size(filter(...))` — codegen'd, no UDF)
-    * and driver-side by the identical [[ZRankMeta]] count, so write and
-    * read translate with the same map by spelling. Equal row mass per
-    * bucket means a Zipfian axis keeps discriminating where min-max
-    * collapses it into one scaled value (spec: the x10-Zipf duel pins
-    * rank's file-pruning win; SCALE.md records the numbers). Buckets
-    * default to 256 — file-level pruning needs granularity ~nFiles, not
-    * 2^16, and the boundary array rides the manifest note. */
-  def optimizeZorderRank(spark: SparkSession, dir: String,
-                         aCol: String, bCol: String, nFiles: Int,
-                         buckets: Int = 256): Int = {
-    require(buckets >= 2 && buckets <= 65536,
-      s"buckets must be in [2, 65536], got $buckets")
-    val cur = currentVersion(spark, dir)
-    val df = read(spark, dir, cur)
-    val lim = 1L << 31
-    val g = df.agg(min(col(aCol)).cast("long"), max(col(aCol)).cast("long"),
-                   min(col(bCol)).cast("long"), max(col(bCol)).cast("long"))
-      .head
-    require(g.getLong(0) >= 0 && g.getLong(1) < lim &&
-            g.getLong(2) >= 0 && g.getLong(3) < lim,
-      s"z-order dimensions must be in [0, 2^31): " +
-        s"$aCol=[${g.getLong(0)},${g.getLong(1)}] " +
-        s"$bCol=[${g.getLong(2)},${g.getLong(3)}]")
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    // distinct+sorted: a heavy hitter occupies many quantile positions —
-    // collapsing duplicates keeps the map strictly monotone in the
-    // boundary LIST (scale values stay monotone either way, but smaller
-    // notes and fewer per-row comparisons)
-    val Seq(aB, bB) = Seq(aCol, bCol).map { c =>
-      df.stat.approxQuantile(c, probs, 0.001)
-        .map(_.toLong).distinct.sorted.toSeq
+    /** Conservative z ranges covering `box` (one `(lo, hi)` per axis, in
+      * interleave order), ascending, disjoint, at most `maxRanges`. A
+      * 2^d-tree walk over ALIGNED cells, each one contiguous z range:
+      * inside cells emit, disjoint cells prune, partial ones split into
+      * 2^d children in ascending-z order (axis j's offset is bit j of the
+      * child index). Recursion stops `refine` levels below the box's own
+      * scale, so the cover is a superset (the exact predicate stays a
+      * residual) before [[packRanges]] bridges it to `maxRanges`. Pure
+      * driver-side arithmetic — no Spark job. */
+    def cover(box: Seq[(Long, Long)],
+              maxRanges: Int = this.maxRanges): Seq[(Long, Long)] = {
+      val d = box.size
+      require(box.forall { case (lo, hi) => 0 <= lo && lo <= hi && hi <= mask },
+        s"box ${box.map { case (lo, hi) => s"[$lo,$hi]" }.mkString("x")} " +
+          s"must sit inside [0, 2^$bits)^$d")
+      require(maxRanges >= (1 << d),
+        s"maxRanges must be >= ${1 << d}, got $maxRanges")
+      val lo = box.map(_._1).toArray
+      val hi = box.map(_._2).toArray
+      // cover granularity scales WITH the box, so the range count stays
+      // bounded whatever the box size
+      val span = box.map { case (l, h) => h - l }.max + 1
+      val cut = math.max(0,
+        (63 - java.lang.Long.numberOfLeadingZeros(span)) - refine)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def walk(corner: Array[Long], level: Int): Unit = {
+        val ext = (1L << level) - 1
+        if ((0 until d).exists(j => corner(j) + ext < lo(j) || corner(j) > hi(j)))
+          return
+        if (level <= cut ||
+            (0 until d).forall(j => corner(j) >= lo(j) && corner(j) + ext <= hi(j))) {
+          out += ((point(corner.toSeq), point(corner.toSeq.map(_ + ext))))
+          return
+        }
+        val h = 1L << (level - 1)
+        for (child <- 0 until (1 << d))
+          walk(Array.tabulate(d)(j => corner(j) + ((child >> j) & 1) * h),
+            level - 1)
+      }
+      walk(new Array[Long](d), bits)
+      packRanges(out.toSeq, maxRanges)
     }
-    val zm = ZRankMeta(aCol, bCol, g.getLong(0), g.getLong(1),
-                       g.getLong(2), g.getLong(3), aB, bB)
-    def bucketed(c: String, bounds: Seq[Long]): Column =
-      if (bounds.isEmpty) lit(0L)
-      else size(filter(lit(bounds.toArray),
-        b => col(c).cast("long") >= b)).cast("long")
-    commit(
-      df.withColumn("_z", zValue(bucketed(aCol, zm.aBounds),
-                                 bucketed(bCol, zm.bBounds))),
-      dir, cur, "_z", Nil, nFiles, note = zm.note)
   }
 
-  /** OPTIMIZE ZORDER over THREE integral columns — [[optimizeZorder]]'s
-    * shape with the 21-bit three-way interleave ([[zValue3]]). The use
-    * case is the canonical three-filter warehouse query (customer ×
-    * date × region, user × time × shard): two-axis layouts leave the
-    * third filter a residual over every matched file; the 3-D interleave
-    * gives each axis ~16 of the code's 48 bits, so all three prune.
-    * Per-axis granularity COSTS: at equal file count each axis's
-    * effective resolution is file_count^(1/3) — worth it only when
-    * queries genuinely constrain all three dimensions (the 2-D layout
-    * stays the default, same rule as 1-D sort vs 2-D z-order).
-    *
-    * AXIS ORDERING matters: `cCol` owns the highest interleaved bit, so
-    * a box constrained ONLY in c maps to one contiguous z slab and
-    * prunes cleanly, while a box constrained only in `aCol` (the lowest
-    * bit) recurs densely through z space and no contiguous file span
-    * avoids it (measured in the rank-3D duel spec — the same data
-    * pruned 0 files with the selective axis low and most files with it
-    * high). Put the most-selective / most-often-singly-queried column
-    * LAST; ties broken by skew (the skewed axis benefits most from the
-    * high slot + rank scaling). */
-  def optimizeZorder3(spark: SparkSession, dir: String,
-                      aCol: String, bCol: String, cCol: String,
-                      nFiles: Int): Int = {
-    val cur = currentVersion(spark, dir)
-    val df = read(spark, dir, cur)
-    val lim = 1L << 31
-    val g = df.agg(
-      min(col(aCol)).cast("long"), max(col(aCol)).cast("long"),
-      min(col(bCol)).cast("long"), max(col(bCol)).cast("long"),
-      min(col(cCol)).cast("long"), max(col(cCol)).cast("long")).head
-    val zm = ZMeta3(aCol, bCol, cCol, g.getLong(0), g.getLong(1),
-      g.getLong(2), g.getLong(3), g.getLong(4), g.getLong(5))
-    require(zm.aMin >= 0 && zm.aMax < lim && zm.bMin >= 0 && zm.bMax < lim &&
-            zm.cMin >= 0 && zm.cMax < lim,
-      s"z-order dimensions must be in [0, 2^31): " +
-        s"$aCol=[${zm.aMin},${zm.aMax}] $bCol=[${zm.bMin},${zm.bMax}] " +
-        s"$cCol=[${zm.cMin},${zm.cMax}]")
-    def scaled(c: String, mn: Long, mx: Long): Column =
-      (col(c).cast("long") - lit(mn)) * lit(65535L) / lit(math.max(1L, mx - mn))
-    commit(
-      df.withColumn("_z", zValue3(
-        scaled(aCol, zm.aMin, zm.aMax).cast("long"),
-        scaled(bCol, zm.bMin, zm.bMax).cast("long"),
-        scaled(cCol, zm.cMin, zm.cMax).cast("long"))),
-      dir, cur, "_z", Nil, nFiles, note = zm.note)
-  }
-
-  /** [[optimizeZorderRank]] for the 3-axis interleave: one approxQuantile
-    * pass per column, boundaries in the manifest note, the same
-    * codegen'd HOF bucketing per row — for the triple-filter class when
-    * an axis is Zipf-shaped (user × time × item-popularity). */
-  def optimizeZorder3Rank(spark: SparkSession, dir: String,
-                          aCol: String, bCol: String, cCol: String,
-                          nFiles: Int, buckets: Int = 256): Int = {
-    require(buckets >= 2 && buckets <= 65536,
-      s"buckets must be in [2, 65536], got $buckets")
-    val cur = currentVersion(spark, dir)
-    val df = read(spark, dir, cur)
-    val lim = 1L << 31
-    val g = df.agg(
-      min(col(aCol)).cast("long"), max(col(aCol)).cast("long"),
-      min(col(bCol)).cast("long"), max(col(bCol)).cast("long"),
-      min(col(cCol)).cast("long"), max(col(cCol)).cast("long")).head
-    require(g.getLong(0) >= 0 && g.getLong(1) < lim &&
-            g.getLong(2) >= 0 && g.getLong(3) < lim &&
-            g.getLong(4) >= 0 && g.getLong(5) < lim,
-      s"z-order dimensions must be in [0, 2^31)")
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val Seq(aB, bB, cB) = Seq(aCol, bCol, cCol).map { c =>
-      df.stat.approxQuantile(c, probs, 0.001)
-        .map(_.toLong).distinct.sorted.toSeq
+  /** Pack an ascending disjoint range list to `maxRanges`: keep the
+    * (maxRanges-1) WIDEST gaps as splits and bridge the rest — bridging
+    * only ever grows the cover (still a superset), and wide gaps are
+    * exactly the z-space a bridge would spuriously match. */
+  private def packRanges(r: Seq[(Long, Long)],
+                         maxRanges: Int): Seq[(Long, Long)] =
+    if (r.length <= maxRanges) r
+    else {
+      val gaps = r.sliding(2).zipWithIndex
+        .map { case (Seq(p, n), i) => (n._1 - p._2, i) }.toSeq
+      val keep = gaps.sortBy(g => (-g._1, g._2)).take(maxRanges - 1)
+        .map(_._2).toSet
+      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long)](r.head)
+      r.tail.zipWithIndex.foreach { case (cur, i) =>
+        if (keep(i)) acc += cur
+        else acc(acc.length - 1) = (acc.last._1, cur._2)
+      }
+      acc.toSeq
     }
-    val zm = ZRank3Meta(aCol, bCol, cCol, g.getLong(0), g.getLong(1),
-      g.getLong(2), g.getLong(3), g.getLong(4), g.getLong(5), aB, bB, cB)
-    def bucketed(c: String, bounds: Seq[Long]): Column =
-      if (bounds.isEmpty) lit(0L)
-      else size(filter(lit(bounds.toArray),
-        b => col(c).cast("long") >= b)).cast("long")
-    commit(
-      df.withColumn("_z", zValue3(bucketed(aCol, aB), bucketed(bCol, bB),
-                                  bucketed(cCol, cB))),
-      dir, cur, "_z", Nil, nFiles, note = zm.note)
+
+  /** One axis of a z-ordered version: its column, raw [min, max] at
+    * OPTIMIZE time and, under rank scaling, its quantile boundaries. Both
+    * scales are MONOTONE maps onto a 16-bit dimension, so a raw box's
+    * edges translate to a scaled box covering every in-box row — pruning
+    * is lossless either way; only selectivity differs under skew.
+    * Min-max gives every column equal bit width but lets an outlier
+    * compress the mass into few values; rank (value -> boundaries at or
+    * below it, Delta's range-partition-id recipe) gives each bucket
+    * ~equal row mass, so a Zipfian axis stays selective. */
+  private[graft] final case class ZAxis(name: String, min: Long, max: Long,
+                                        rankBounds: Option[Seq[Long]]) {
+    /** Driver-side: a raw value's z dimension. */
+    def scale(x: Long): Long = rankBounds match {
+      case Some(bounds) => bounds.count(_ <= x).toLong
+      case None => (x - min) * 65535L / math.max(1L, max - min)
+    }
+
+    /** Executor-side twin of [[scale]]. Min-max: double `/` then a
+      * truncating cast floors exactly like the driver (numerator < 2^47;
+      * a missed integer sits >= 1/d away). Rank: a codegen'd HOF over the
+      * boundary-array literal, the same count by spelling. */
+    def scaled: Column = rankBounds match {
+      case Some(bounds) if bounds.isEmpty => lit(0L)
+      case Some(bounds) =>
+        size(filter(lit(bounds.toArray), b => col(name).cast("long") >= b))
+          .cast("long")
+      case None =>
+        ((col(name).cast("long") - lit(min)) * lit(65535L) /
+          lit(math.max(1L, max - min))).cast("long")
+    }
   }
 
-  private[graft] def prunedFilesBox3(spark: SparkSession, dir: String,
-                                     aLo: Long, aHi: Long,
-                                     bLo: Long, bHi: Long,
-                                     cLo: Long, cHi: Long,
-                                     version: Int = 0): Seq[FileEntry] = {
-    val v = if (version > 0) version else currentVersion(spark, dir)
-    val m = manifest(spark, dir, v)
-    val zm = zMeta3Of(m)
-    if (aHi < zm.aMin || aLo > zm.aMax || bHi < zm.bMin || bLo > zm.bMax ||
-        cHi < zm.cMin || cLo > zm.cMax)
+  /** A z-ordered version's layout, in interleave order (the last axis
+    * owns the highest bit), persisted as the manifest note so reads scale
+    * boxes with the write's own constants. Four spellings:
+    * `zorder(`/`zorderq(` (2-D min-max/rank), `zorder3(`/`zorderq3(`:
+    * names, each axis's min and max, then (rank) '|'-joined bounds. */
+  private[graft] final case class ZLayout(axes: Seq[ZAxis]) {
+    val curve: ZCurve = ZLayout.curve(axes.map(_.name))
+
+    def note: String = {
+      val tag = "zorder" + (if (axes.head.rankBounds.isDefined) "q" else "") +
+        (if (axes.size == 3) "3" else "")
+      val fields = axes.map(_.name) ++
+        axes.flatMap(a => Seq(a.min, a.max)) ++
+        axes.flatMap(_.rankBounds.map(_.mkString("|")))
+      s"$tag(${fields.mkString(",")})"
+    }
+  }
+
+  private[graft] object ZLayout {
+    private val Curves = Map(
+      2 -> ZCurve(31, Seq(16 -> 0x0000FFFF0000FFFFL, 8 -> 0x00FF00FF00FF00FFL,
+        4 -> 0x0F0F0F0F0F0F0F0FL, 2 -> 0x3333333333333333L,
+        1 -> 0x5555555555555555L), refine = 4, maxRanges = 64),
+      3 -> ZCurve(21, Seq(32 -> 0x1F00000000FFFFL, 16 -> 0x1F0000FF0000FFL,
+        8 -> 0x100F00F00F00F00FL, 4 -> 0x10C30C30C30C30C3L,
+        2 -> 0x1249249249249249L), refine = 5, maxRanges = 2048))
+
+    /** The curve for a z-order over `cols` — the one place the arity rule
+      * lives (OPTIMIZE ZORDER BY in SQL and in Scala both land here). */
+    def curve(cols: Seq[String]): ZCurve = {
+      require(Curves.contains(cols.size),
+        s"ZORDER BY takes 2 or 3 columns, got ${cols.size}: " +
+          cols.mkString("(", ", ", ")"))
+      require(cols.distinct.size == cols.size,
+        s"ZORDER BY columns must be distinct: ${cols.mkString("(", ", ", ")")}")
+      Curves(cols.size)
+    }
+
+    /** Every z-layout note starts with this. */
+    def isNote(note: String): Boolean = note.startsWith("zorder")
+
+    private val Note = """zorder(q?)(3?)\((.*)\)""".r
+
+    /** The layout a note spells, or None for any other note. */
+    def parse(note: String): Option[ZLayout] = note match {
+      case Note(q, three, body) =>
+        val d = if (three.isEmpty) 2 else 3
+        val f = body.split(",", -1).toSeq
+        val rank = q.nonEmpty
+        if (f.size != d * (if (rank) 4 else 3) || f.take(d).exists(_.isEmpty))
+          None
+        else scala.util.Try(ZLayout((0 until d).map { j =>
+          ZAxis(f(j), f(d + 2 * j).toLong, f(d + 2 * j + 1).toLong,
+            if (!rank) None
+            else Some(f(3 * d + j).split('|').toSeq.filter(_.nonEmpty).map(_.toLong)))
+        })).toOption
+      case _ => None
+    }
+  }
+
+  /** Whether a version carries a z layout: its stats column is the
+    * interleave, not a key, which every key-clustered verb refuses. */
+  def isZOrdered(m: Manifest): Boolean = ZLayout.isNote(m.note)
+
+  /** OPTIMIZE ZORDER as a commit: the current snapshot re-clustered by
+    * the Morton interleave of `cols` (2 or 3 integral columns in
+    * [0, 2^31)), with the `_z` column as the stats column
+    * [[readPrunedBox]] prunes on — same rows, new layout, normal commit
+    * protocol (the old layout stays time-travelable). Axes are min-max
+    * scaled (one stats job) or, with `rankBuckets` (256 is plenty: file
+    * pruning needs ~nFiles granularity), rank-scaled from one
+    * single-scan `approxQuantile` pass per column — the x10-Zipf duel in
+    * SCALE.md. Three axes serve the triple-filter class at per-axis
+    * resolution file_count^(1/3). AXIS ORDER matters: a box constrained
+    * only in the LAST column is one contiguous z slab, while the first
+    * column's slab recurs through z space (the rank-3D duel pruned 0
+    * files with the selective axis first, most with it last) — put the
+    * most-selective or skewed column last. */
+  def optimizeZorder(spark: SparkSession, dir: String, cols: Seq[String],
+                     nFiles: Int, rankBuckets: Option[Int] = None): Int = {
+    val curve = ZLayout.curve(cols)
+    rankBuckets.foreach(b => require(b >= 2 && b <= 65536,
+      s"buckets must be in [2, 65536], got $b"))
+    val cur = currentVersion(spark, dir)
+    val df = read(spark, dir, cur)
+    val stats = cols.flatMap(c =>
+      Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
+    val g = df.agg(stats.head, stats.tail: _*).head
+    val ranges = cols.indices.map { j =>
+      require(!g.isNullAt(2 * j), s"z-order column '${cols(j)}' has no " +
+        "non-NULL value to scale (empty table or all-NULL column)")
+      (g.getLong(2 * j), g.getLong(2 * j + 1))
+    }
+    require(ranges.forall { case (lo, hi) => lo >= 0 && hi < (1L << 31) },
+      "z-order dimensions must be in [0, 2^31): " + cols.zip(ranges)
+        .map { case (c, (lo, hi)) => s"$c=[$lo,$hi]" }.mkString(" "))
+    val probs = rankBuckets.map(b => (1 until b).map(_.toDouble / b).toArray)
+    val layout = ZLayout(cols.zip(ranges).map { case (c, (lo, hi)) =>
+      // distinct+sorted: a heavy hitter occupies many quantile positions —
+      // collapsing duplicates keeps the boundary LIST strictly monotone
+      // (smaller notes and fewer per-row comparisons)
+      ZAxis(c, lo, hi, probs.map(p => df.stat.approxQuantile(c, p, 0.001)
+        .map(_.toLong).distinct.sorted.toSeq))
+    })
+    commit(df.withColumn("_z", curve.value(layout.axes.map(_.scaled): _*)),
+      dir, cur, "_z", Nil, nFiles, note = layout.note)
+  }
+
+  /** The files of manifest `m` a named box (one `(column, lo, hi)` per
+    * layout axis, in any order) can touch: the box's edges translate
+    * through the version's own axis scales, [[ZCurve.cover]] turns the
+    * scaled box into z ranges, and the manifest's per-file [zmin,zmax]
+    * intersect them — all driver-side, manifest-scale. Empty when the
+    * box misses the data's domain. */
+  private def boxFiles(spark: SparkSession, m: Manifest,
+                       box: Seq[(String, Long, Long)]): Seq[FileEntry] = {
+    val layout = ZLayout.parse(m.note).getOrElse(
+      throw new IllegalArgumentException(s"v${m.version} is not a " +
+        s"z-ordered snapshot (note='${m.note}') — run optimizeZorder first"))
+    val resolver = spark.sessionState.conf.resolver
+    val named = layout.axes.map(a => box.filter(b => resolver(b._1, a.name)))
+    require(box.size == layout.axes.size && named.forall(_.size == 1),
+      s"v${m.version} is z-ordered on " +
+        s"${layout.axes.map(_.name).mkString("(", ", ", ")")}; a box must " +
+        s"bound exactly those axes, got ${box.map(_._1).mkString("(", ", ", ")")}")
+    val edges = layout.axes.zip(named.map(_.head))
+    if (edges.exists { case (a, (_, lo, hi)) => hi < a.min || lo > a.max })
       return Seq.empty
-    val cover = zCover3(
-      zm.scaleA(math.max(aLo, zm.aMin)), zm.scaleA(math.min(aHi, zm.aMax)),
-      zm.scaleB(math.max(bLo, zm.bMin)), zm.scaleB(math.min(bHi, zm.bMax)),
-      zm.scaleC(math.max(cLo, zm.cMin)), zm.scaleC(math.min(cHi, zm.cMax)))
+    val cover = layout.curve.cover(edges.map { case (a, (_, lo, hi)) =>
+      (a.scale(math.max(lo, a.min)), a.scale(math.min(hi, a.max)))
+    })
     m.files.filter(f => cover.exists(r => r._1 <= f.max && r._2 >= f.min))
   }
 
-  /** 3-D box read over an [[optimizeZorder3]]'d snapshot: manifest ∩
-    * driver-side octree cover, exact predicate as residual —
-    * [[readPrunedBox]] one dimension up. */
-  def readPrunedBox3(spark: SparkSession, dir: String,
-                     aCol: String, bCol: String, cCol: String,
-                     aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-                     cLo: Long, cHi: Long, version: Int = 0): DataFrame = {
-    val hit = prunedFilesBox3(spark, dir, aLo, aHi, bLo, bHi, cLo, cHi,
-      version)
-    val v = if (version > 0) version else currentVersion(spark, dir)
-    val m = manifest(spark, dir, v)
-    require(hit.nonEmpty || m.schemaJson.nonEmpty,
-      s"no snapshot file overlaps the box — this legacy manifest has " +
-        "no schema source for an empty result; read() and filter instead")
-    readEntries(spark, dir, m, hit)
-      .filter(col(aCol).between(aLo, aHi) && col(bCol).between(bLo, bHi) &&
-              col(cCol).between(cLo, cHi))
-  }
-
-  /** The files of a z-ordered snapshot a 2-D box predicate can touch:
-    * the box's corners translate through the version's own scaling
-    * constants, [[zCover]] turns the scaled box into z ranges, and the
-    * manifest's per-file [zmin,zmax] intersect them — all driver-side,
-    * manifest-scale. Empty when the box misses the data's domain. */
   private[graft] def prunedFilesBox(spark: SparkSession, dir: String,
-                                    aLo: Long, aHi: Long,
-                                    bLo: Long, bHi: Long,
+                                    box: Seq[(String, Long, Long)],
                                     version: Int = 0): Seq[FileEntry] = {
     val v = if (version > 0) version else currentVersion(spark, dir)
-    val m = manifest(spark, dir, v)
-    val zm = zMetaOf(m)
-    if (aHi < zm.aMin || aLo > zm.aMax || bHi < zm.bMin || bLo > zm.bMax)
-      return Seq.empty
-    val cover = zCover(
-      zm.scaleA(math.max(aLo, zm.aMin)), zm.scaleA(math.min(aHi, zm.aMax)),
-      zm.scaleB(math.max(bLo, zm.bMin)), zm.scaleB(math.min(bHi, zm.bMax)))
-    m.files.filter(f => cover.exists(r => r._1 <= f.max && r._2 >= f.min))
+    boxFiles(spark, manifest(spark, dir, v), box)
   }
 
-  /** Box read over a z-ordered snapshot: only cover-overlapping files
-    * reach the scan (file-level pruning on BOTH axes — the thing no
-    * single-column clustering can give), then the exact box predicate
-    * applies as a residual; inside each file the z sort keeps rows
-    * locally coherent in a AND b, so the pushed-down residual also
-    * prunes at parquet row-group level. Value-equal to filtering a full
-    * scan, spec-pinned. The scaled-edge translation is conservative by
-    * monotonicity: every in-box row's z lands inside the cover, so
-    * pruning never drops a result row. */
+  /** Box read over a z-ordered snapshot: only the [[boxFiles]] reach the
+    * scan, then the exact box predicate applies as a residual (which
+    * also prunes row groups inside each z-sorted file). `box` names each
+    * layout axis once, in any order. Value-equal to filtering a full
+    * scan, spec-pinned: scaling is monotone, so no result row is lost. */
   def readPrunedBox(spark: SparkSession, dir: String,
-                    aCol: String, bCol: String,
-                    aLo: Long, aHi: Long, bLo: Long, bHi: Long,
+                    box: Seq[(String, Long, Long)],
                     version: Int = 0): DataFrame = {
-    val hit = prunedFilesBox(spark, dir, aLo, aHi, bLo, bHi, version)
     val v = if (version > 0) version else currentVersion(spark, dir)
     val m = manifest(spark, dir, v)
+    val hit = boxFiles(spark, m, box)
     require(hit.nonEmpty || m.schemaJson.nonEmpty,
       s"no snapshot file overlaps the box — this legacy manifest has " +
         "no schema source for an empty result; read() and filter instead")
-    readEntries(spark, dir, m, hit)
-      .filter(col(aCol).between(aLo, aHi) && col(bCol).between(bLo, bHi))
+    readEntries(spark, dir, m, hit).filter(box
+      .map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _))
   }
 }

@@ -131,14 +131,15 @@ object Warehouse extends QueryModule {
             datediff(col("o_orderdate"), lit("1992-01-01")).as("dday"),
             F.dec2(col("o_totalprice")).as("price"))
           Snapshot.commit(base, dir, 0, "o_custkey", nFiles = 16)
-          Snapshot.optimizeZorder(s, dir, "o_custkey", "dday", nFiles = 16)
+          Snapshot.optimizeZorder(s, dir, Seq("o_custkey", "dday"), nFiles = 16)
           dir
         })
     }
 
   /** [[zOrders]] one axis up: the same orders projection with price in
     * exact integer CENTS as the third integral dimension, committed then
-    * rewritten by [[Snapshot.optimizeZorder3]] — the q130 serving table.
+    * rewritten by [[Snapshot.optimizeZorder]] on three axes — the q130
+    * serving table.
     * Memoized per (session, dir) beside the 2-D layout (distinct cache
     * key — both tables coexist for the q127-vs-q130 comparison). */
   private[graft] def zOrders3(s: SparkSession, d: String): String =
@@ -153,7 +154,7 @@ object Warehouse extends QueryModule {
             datediff(col("o_orderdate"), lit("1992-01-01")).as("dday"),
             F.cents(col("o_totalprice")).as("price_c"))
           Snapshot.commit(base, dir, 0, "o_custkey", nFiles = 16)
-          Snapshot.optimizeZorder3(s, dir, "o_custkey", "dday", "price_c",
+          Snapshot.optimizeZorder(s, dir, Seq("o_custkey", "dday", "price_c"),
             nFiles = 16)
           dir
         })
@@ -1678,8 +1679,8 @@ object Warehouse extends QueryModule {
       // oracle = the same box on the raw table. 1996-01-01/12-31 are
       // days 1461/1826 since the 1992-01-01 epoch (the fixture's dates
       // run ~1995-2001).
-      Snapshot.readPrunedBox(s, zOrders(s, d), "o_custkey", "dday",
-          100L, 1100L, 1461L, 1826L)
+      Snapshot.readPrunedBox(s, zOrders(s, d),
+          Seq(("o_custkey", 100L, 1100L), ("dday", 1461L, 1826L)))
         .select(col("o_orderkey"), col("o_custkey"),
           col("dday").cast("long").as("dday"),
           F.od(col("price")).as("price"))
@@ -1689,7 +1690,7 @@ object Warehouse extends QueryModule {
     "q130_zorder3_box" -> ((s, d) => {
       // 3-D box query over the THREE-column z-ordered snapshot: customer
       // range × order-date range × PRICE range (exact integer cents)
-      // served through [[Snapshot.readPrunedBox3]] — file pruning on ALL
+      // served through [[Snapshot.readPrunedBox]] — file pruning on ALL
       // THREE axes via the manifest's z stats + the octree cover, exact
       // predicate as residual. q127's query class with the third filter
       // a 2-D layout must leave as a residual over every matched file;
@@ -1698,8 +1699,8 @@ object Warehouse extends QueryModule {
       // the same box on the raw table. Price band 50k-200k dollars in
       // cents; date box = 1996 (days 1461-1826 since the 1992-01-01
       // epoch, q127's constants).
-      Snapshot.readPrunedBox3(s, zOrders3(s, d), "o_custkey", "dday",
-          "price_c", 100L, 1100L, 1461L, 1826L, 5000000L, 20000000L)
+      Snapshot.readPrunedBox(s, zOrders3(s, d), Seq(("o_custkey", 100L, 1100L),
+          ("dday", 1461L, 1826L), ("price_c", 5000000L, 20000000L)))
         .select(col("o_orderkey"), col("o_custkey"),
           col("dday").cast("long").as("dday"), col("price_c"))
         .orderBy(col("o_orderkey"))

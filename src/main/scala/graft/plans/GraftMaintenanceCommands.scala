@@ -69,13 +69,7 @@ final case class GraftOptimizeCommand(name: String, zorderBy: Seq[String],
         val bytes = m.files.map(f => Snapshot.entryLen(session, dir, f.path)).sum
         val nFiles = math.max(1,
           math.ceil(bytes.toDouble / GraftMaintenance.TargetFileBytes).toInt)
-        cols match {
-          case Seq(a, b) => Snapshot.optimizeZorder(session, dir, a, b, nFiles)
-          case Seq(a, b, c) =>
-            Snapshot.optimizeZorder3(session, dir, a, b, c, nFiles)
-          case other => throw new IllegalArgumentException(
-            s"OPTIMIZE ZORDER BY takes 2 or 3 columns, got ${other.size}")
-        }
+        Snapshot.optimizeZorder(session, dir, cols, nFiles)
     }
     Seq(Row(v.toLong))
   }

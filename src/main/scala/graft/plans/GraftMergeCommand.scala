@@ -77,7 +77,7 @@ final case class GraftMergeCommand(dir: String,
     val cur = Snapshot.currentVersion(session, dir)
     require(cur > 0, s"cannot MERGE into an uncommitted table: $dir")
     val m = Snapshot.manifest(session, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!Snapshot.isZOrdered(m),
       s"MERGE into a z-ordered snapshot (note='${m.note}'): merge on a " +
         "key-clustered version and re-optimize")
     val fields = Snapshot.read(session, dir, cur).schema.fields.toSeq

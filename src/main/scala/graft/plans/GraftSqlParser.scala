@@ -39,7 +39,10 @@ import graft.ops.Snapshot
   * untouched. `OPTIMIZE` / `VACUUM` / `RESTORE TABLE … TO VERSION AS
   * OF` are not Spark grammar at all, so a syntactic match always
   * intercepts and an unregistered name fails at RUN time with the
-  * engine's own message instead of a generic syntax error. Matching is
+  * engine's own message instead of a generic syntax error — so does a
+  * `ZORDER BY` list of the wrong length: the columns pass through to
+  * [[Snapshot.optimizeZorder]], whose layout owns the 2-or-3 rule and
+  * refuses before any job runs. Matching is
   * whole-statement anchored regex over ONE normalized form (trailing
   * semicolon stripped), so no prefix of a longer legitimate statement
   * can be swallowed. */
@@ -57,9 +60,6 @@ final class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     if (optimize.matches()) {
       val zcols = Option(optimize.group(2)).toSeq
         .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      if (zcols.nonEmpty && zcols.size != 2 && zcols.size != 3)
-        throw new IllegalArgumentException(
-          s"OPTIMIZE ZORDER BY takes 2 or 3 columns, got ${zcols.size}")
       return GraftOptimizeCommand(optimize.group(1), zcols,
         byValue = optimize.group(3) != null)
     }

@@ -68,7 +68,7 @@ final class GraftSink(spark: SparkSession, dir: String,
       val batch = StreamingFrame.unwrap(data)
       val cur = Snapshot.currentVersion(spark, dir)
       val prior = if (cur > 0) Some(Snapshot.manifest(spark, dir, cur)) else None
-      prior.foreach(m => require(!m.note.startsWith("zorder"),
+      prior.foreach(m => require(!Snapshot.isZOrdered(m),
         s"current version of $dir is z-ordered; blind streamed appends " +
           "would break its layout contract — re-OPTIMIZE after the drain"))
       val statsCol = statsColOpt.orElse(prior.map(_.statsCol))

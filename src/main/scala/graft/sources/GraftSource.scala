@@ -182,7 +182,7 @@ final class GraftSourceProvider extends RelationProvider
     val spark = sqlContext.sparkSession
     val cur = Snapshot.currentVersion(spark, dir)
     val prior = if (cur > 0) Some(Snapshot.manifest(spark, dir, cur)) else None
-    prior.foreach(m => require(!m.note.startsWith("zorder"),
+    prior.foreach(m => require(!Snapshot.isZOrdered(m),
       s"current version of $dir is z-ordered; blind writes would break " +
         "its layout contract — write pre-z or re-OPTIMIZE after"))
     val statsCol = opts.get("statscol").orElse(prior.map(_.statsCol))
@@ -281,7 +281,7 @@ object GraftRelation {
     require(cur > 0,
       s"cannot INSERT into a snapshot table with no committed version: $dir")
     val m = Snapshot.manifest(spark, dir, cur)
-    require(!m.note.startsWith("zorder"),
+    require(!Snapshot.isZOrdered(m),
       s"current version of $dir is z-ordered; blind writes would break " +
         "its layout contract — write pre-z or re-OPTIMIZE after")
     if (overwrite) Snapshot.commit(data, dir, cur, m.statsCol, Nil)

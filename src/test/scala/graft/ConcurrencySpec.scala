@@ -82,7 +82,7 @@ class ConcurrencySpec extends SparkSpec {
     assert(Snapshot.currentVersion(spark, dir) == 2)
     val dir2 = fresh()
     val staged2 = Snapshot.stageAppend(batch(21L, 22L), dir2, nFiles = 1)
-    Snapshot.optimizeZorder(spark, dir2, "k", "v", 1)
+    Snapshot.optimizeZorder(spark, dir2, Seq("k", "v"), 1)
     intercept[IllegalStateException](
       Snapshot.publishAppend(spark, dir2, staged2))
   }

@@ -655,6 +655,9 @@ class SnapshotSpec extends SparkSpec {
       (900L, "I", "val_900", "I")), s"got $full")
   }
 
+  private val z2 = Snapshot.ZLayout.curve(Seq("a", "b"))
+  private val z3 = Snapshot.ZLayout.curve(Seq("a", "b", "c"))
+
   test("zValue column expression and driver-side zPoint agree bit-for-bit") {
     import spark.implicits._
     // corners, bit walks, and a deterministic pseudo-random sample of the
@@ -667,11 +670,11 @@ class SnapshotSpec extends SparkSpec {
     val pts = (for { a <- edge ++ rnd.take(20); b <- edge.take(12) }
       yield (a, b)) ++ rnd.zip(rnd.reverse)
     val got = pts.toDF("a", "b")
-      .select(col("a"), col("b"), Snapshot.zValue(col("a"), col("b")).as("z"))
+      .select(col("a"), col("b"), z2.value(col("a"), col("b")).as("z"))
       .collect()
     got.foreach { r =>
       val (a, b, z) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      assert(z == Snapshot.zPoint(a, b), s"zValue($a,$b)=$z != zPoint")
+      assert(z == z2.point(Seq(a, b)), s"zValue($a,$b)=$z != zPoint")
       assert(z >= 0, "z codes must stay sign-safe")
     }
   }
@@ -686,12 +689,12 @@ class SnapshotSpec extends SparkSpec {
                     c <- edge.take(6) } yield (a, b, c)
     val got = pts.toDF("a", "b", "c")
       .select(col("a"), col("b"), col("c"),
-        Snapshot.zValue3(col("a"), col("b"), col("c")).as("z"))
+        z3.value(col("a"), col("b"), col("c")).as("z"))
       .collect()
     got.foreach { r =>
       val (a, b, c, z) =
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      assert(z == Snapshot.zPoint3(a, b, c), s"zValue3($a,$b,$c)=$z != zPoint3")
+      assert(z == z3.point(Seq(a, b, c)), s"zValue3($a,$b,$c)=$z != zPoint3")
       assert(z >= 0, "z codes must stay sign-safe")
     }
   }
@@ -704,7 +707,7 @@ class SnapshotSpec extends SparkSpec {
       (0L, (1L << 21) - 1, 0L, (1L << 21) - 1, 0L, (1L << 21) - 1),
       (100000L, 101000L, 3L, 2000000L, 65000L, 66000L))
     for ((aLo, aHi, bLo, bHi, cLo, cHi) <- boxes) {
-      val cover = Snapshot.zCover3(aLo, aHi, bLo, bHi, cLo, cHi, 64)
+      val cover = z3.cover(Seq(aLo -> aHi, bLo -> bHi, cLo -> cHi), 64)
       assert(cover.nonEmpty && cover.size <= 64, s"budget: ${cover.size}")
       cover.sliding(2).foreach {
         case Seq((_, e), (s2, _)) => assert(e < s2,
@@ -715,7 +718,7 @@ class SnapshotSpec extends SparkSpec {
         Seq(lo, hi, (lo + hi) / 2) ++ (1 to 4).map(i => lo + (hi - lo) * i / 4)
       for (a <- samples(aLo, aHi); b <- samples(bLo, bHi);
            c <- samples(cLo, cHi)) {
-        val z = Snapshot.zPoint3(a, b, c)
+        val z = z3.point(Seq(a, b, c))
         assert(cover.exists(r => r._1 <= z && z <= r._2),
           s"point ($a,$b,$c) z=$z escaped the cover")
       }
@@ -734,27 +737,29 @@ class SnapshotSpec extends SparkSpec {
     }
     val dir = freshDir()
     Snapshot.commit(rows.toDF("k", "x", "y", "t"), dir, 0, "k", nFiles = 4)
-    Snapshot.optimizeZorder3(spark, dir, "x", "y", "t", nFiles = 64)
+    Snapshot.optimizeZorder(spark, dir, Seq("x", "y", "t"), nFiles = 64)
     val m = Snapshot.manifest(spark, dir, 2)
     assert(m.statsCol == "_z" && m.files.size == 64)
     // each single-axis slice (~10% of its axis, all of the others) must
     // prune on its own — no 2-D layout gives all three
     val full = 1000L
-    val xOnly = Snapshot.prunedFilesBox3(spark, dir, 100, 199, 0, full, 0, full)
-    val yOnly = Snapshot.prunedFilesBox3(spark, dir, 0, full, 100, 199, 0, full)
-    val tOnly = Snapshot.prunedFilesBox3(spark, dir, 0, full, 0, full, 100, 199)
+    def box3(x: (Long, Long), y: (Long, Long), t: (Long, Long)) =
+      Snapshot.prunedFilesBox(spark, dir,
+        Seq(("x", x._1, x._2), ("y", y._1, y._2), ("t", t._1, t._2)))
+    val xOnly = box3((100, 199), (0, full), (0, full))
+    val yOnly = box3((0, full), (100, 199), (0, full))
+    val tOnly = box3((0, full), (0, full), (100, 199))
     for ((tag, hit) <- Seq("x" -> xOnly, "y" -> yOnly, "t" -> tOnly))
       assert(hit.nonEmpty && hit.size < 64,
         s"$tag-only slice must prune: ${hit.size}/64")
     // the 3-D box composes: strictly fewer files than any single axis
-    val box = Snapshot.prunedFilesBox3(spark, dir,
-      100, 299, 100, 299, 100, 299)
+    val box = box3((100, 299), (100, 299), (100, 299))
     assert(box.nonEmpty &&
       box.size < Seq(xOnly.size, yOnly.size, tOnly.size).min,
       s"3-D box ${box.size} vs slices ${xOnly.size}/${yOnly.size}/${tOnly.size}")
     // losslessness: box read == full-scan filter
-    val boxed = Snapshot.readPrunedBox3(spark, dir, "x", "y", "t",
-        100, 299, 100, 299, 100, 299)
+    val boxed = Snapshot.readPrunedBox(spark, dir,
+        Seq(("x", 100L, 299L), ("y", 100L, 299L), ("t", 100L, 299L)))
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     val fullScan = Snapshot.read(spark, dir, 2)
       .filter(col("x").between(100, 299) && col("y").between(100, 299) &&
@@ -782,18 +787,20 @@ class SnapshotSpec extends SparkSpec {
     // the skewed/most-selective axis goes in the HIGHEST interleave slot
     // (the c column): a slab constrained only in the LOWEST bits recurs
     // densely through z space and no contiguous file span avoids it —
-    // the axis-ordering rule optimizeZorder3's scaladoc documents
+    // the axis-ordering rule optimizeZorder's scaladoc documents
     val (mmDir, rkDir) = (mk(), mk())
-    Snapshot.optimizeZorder3(spark, mmDir, "y", "t", "x", nFiles = 32)
-    Snapshot.optimizeZorder3Rank(spark, rkDir, "y", "t", "x", nFiles = 32)
+    Snapshot.optimizeZorder(spark, mmDir, Seq("y", "t", "x"), nFiles = 32)
+    Snapshot.optimizeZorder(spark, rkDir, Seq("y", "t", "x"), nFiles = 32,
+      rankBuckets = Some(256))
     val full = 1000L
-    val mm = Snapshot.prunedFilesBox3(spark, mmDir, 0, full, 0, full, 10, 19)
-    val rk = Snapshot.prunedFilesBox3(spark, rkDir, 0, full, 0, full, 10, 19)
+    val slab = Seq(("y", 0L, full), ("t", 0L, full), ("x", 10L, 19L))
+    val mm = Snapshot.prunedFilesBox(spark, mmDir, slab)
+    val rk = Snapshot.prunedFilesBox(spark, rkDir, slab)
     assert(rk.size < mm.size,
       s"rank must out-prune min-max on the skewed axis: ${rk.size} vs ${mm.size} of 32")
     for (dir <- Seq(mmDir, rkDir)) {
-      val boxed = Snapshot.readPrunedBox3(spark, dir, "y", "t", "x",
-          100, 499, 100, 499, 10, 19)
+      val boxed = Snapshot.readPrunedBox(spark, dir,
+          Seq(("y", 100L, 499L), ("t", 100L, 499L), ("x", 10L, 19L)))
         .select("k").collect().map(_.getLong(0)).sorted.toSeq
       val fullScan = Snapshot.read(spark, dir)
         .filter(col("x").between(10, 19) && col("y").between(100, 499) &&
@@ -809,7 +816,7 @@ class SnapshotSpec extends SparkSpec {
       (5L, 5L, 7L, 7L), (0L, (1L << 31) - 1, 0L, (1L << 31) - 1),
       (1000000L, 1001000L, 3L, 2000000000L))
     for ((aLo, aHi, bLo, bHi) <- boxes) {
-      val cover = Snapshot.zCover(aLo, aHi, bLo, bHi, maxRanges = 64)
+      val cover = z2.cover(Seq(aLo -> aHi, bLo -> bHi), maxRanges = 64)
       assert(cover.nonEmpty && cover.size <= 64, s"budget: ${cover.size}")
       cover.sliding(2).foreach {
         case Seq((_, e), (s2, _)) => assert(e < s2,
@@ -822,10 +829,145 @@ class SnapshotSpec extends SparkSpec {
       val bs = Seq(bLo, bHi, (bLo + bHi) / 2) ++
         (1 to 7).map(i => bLo + (bHi - bLo) * i / 7)
       for (a <- as; b <- bs) {
-        val z = Snapshot.zPoint(a, b)
+        val z = z2.point(Seq(a, b))
         assert(cover.exists(r => r._1 <= z && z <= r._2),
           s"point ($a,$b) z=$z escaped the cover of [$aLo,$aHi]x[$bLo,$bHi]")
       }
+    }
+  }
+
+  test("the generic cover equals the frozen two- and three-axis walks on random boxes") {
+    // boxes at every scale: a log-uniform width per axis, a uniform
+    // origin, so thin slabs, cubes and near-full-domain boxes all occur
+    val rnd = new scala.util.Random(20261017L)
+    def randomBox(d: Int, bits: Int): Seq[(Long, Long)] = Seq.fill(d) {
+      val w = (1L << rnd.nextInt(bits)) + (rnd.nextLong() & 0xFFFFL) - 1
+      val width = math.min(w, (1L << bits) - 1)
+      val lo = (rnd.nextLong() & Long.MaxValue) % ((1L << bits) - width)
+      (lo, lo + width)
+    }
+    for (_ <- 1 to 200) {
+      val Seq((aLo, aHi), (bLo, bHi)) = randomBox(2, 31)
+      for (budget <- Seq(64, 4))
+        assert(z2.cover(Seq(aLo -> aHi, bLo -> bHi), budget) ==
+          FrozenZ.zCover(aLo, aHi, bLo, bHi, budget),
+          s"2-D box [$aLo,$aHi]x[$bLo,$bHi] at maxRanges=$budget")
+      val Seq((xLo, xHi), (yLo, yHi), (tLo, tHi)) = randomBox(3, 21)
+      for (budget <- Seq(2048, 8))
+        assert(z3.cover(Seq(xLo -> xHi, yLo -> yHi, tLo -> tHi), budget) ==
+          FrozenZ.zCover3(xLo, xHi, yLo, yHi, tLo, tHi, budget),
+          s"3-D box [$xLo,$xHi]x[$yLo,$yHi]x[$tLo,$tHi] at maxRanges=$budget")
+    }
+    assert(z2.maxRanges == 64 && z3.maxRanges == 2048, "default budgets")
+  }
+
+  test("z-layout notes keep the four spellings byte for byte") {
+    import Snapshot.{ZAxis, ZLayout}
+    val notes = Seq(
+      "zorder(o_custkey,dday,0,149,1096,3500)",
+      "zorderq(a,b,0,1073741823,0,9999,3|17|40,100|5000)",
+      "zorder3(o_custkey,dday,price_c,0,149,1096,3500,132051,49970505)",
+      "zorderq3(y,t,x,0,999,0,999,0,1073741823,,5|6,7)")
+    for (n <- notes) {
+      val layout = ZLayout.parse(n)
+      assert(layout.map(_.note).contains(n), s"$n round-tripped to $layout")
+    }
+    assert(ZLayout.parse("zorderq3(y,t,x,0,999,0,999,0,1073741823,,5|6,7)")
+      .map(_.axes) == Some(Seq(ZAxis("y", 0, 999, Some(Nil)),
+        ZAxis("t", 0, 999, Some(Seq(5L, 6L))),
+        ZAxis("x", 0, 1073741823L, Some(Seq(7L))))))
+    for (bad <- Seq("optimize:compact", "zorder(a,b,0,1,2)",
+                    "zorder3(a,b,0,1,2,3)", "zorder(a,b,x,1,2,3)"))
+      assert(ZLayout.parse(bad).isEmpty, bad)
+  }
+
+  test("a z-order box names its axes: every permutation reads the same rows") {
+    // The box is resolved by axis NAME against the layout note, so the
+    // caller's order cannot matter. The positional two-axis API this
+    // replaced pruned `readPrunedBox(dir, "b", "a", 0, 999, 10, 19)` with
+    // the bounds swapped onto the note's axes and returned 107 of these
+    // 403 rows; the three-axis twin returned 0 of 561 for (t, y, x).
+    import spark.implicits._
+    def check(dir: String, box: Seq[(String, Long, Long)]): Unit = {
+      val full = Snapshot.read(spark, dir)
+        .filter(box.map { case (c, lo, hi) => col(c).between(lo, hi) }
+          .reduce(_ && _))
+        .select("k").collect().map(_.getLong(0)).sorted.toSeq
+      assert(full.nonEmpty)
+      val files = Snapshot.prunedFilesBox(spark, dir, box).map(_.path).toSet
+      for (p <- box.permutations) {
+        val got = Snapshot.readPrunedBox(spark, dir, p)
+          .select("k").collect().map(_.getLong(0)).sorted.toSeq
+        assert(got == full, s"box named as ${p.map(_._1)}: " +
+          s"${got.size} rows, the full-scan filter has ${full.size}")
+        assert(Snapshot.prunedFilesBox(spark, dir, p).map(_.path).toSet == files)
+      }
+    }
+    val rows2 = (0 until 4000).map { i =>
+      val h = (i * 2654435761L) & 0x7FFFFFFFL
+      (i.toLong, h % 100, (h / 100) % 1000)
+    }
+    val d2 = freshDir()
+    Snapshot.commit(rows2.toDF("k", "a", "b"), d2, 0, "k", nFiles = 4)
+    Snapshot.optimizeZorder(spark, d2, Seq("a", "b"), nFiles = 16)
+    check(d2, Seq(("a", 10L, 19L), ("b", 0L, 999L)))
+    val rows3 = (0 until 30000).map { i =>
+      val h = (i * 2654435761L) & 0x7FFFFFFFL
+      (i.toLong, h % 1000, (h / 1000) % 1000, (h / 1000000) % 1000)
+    }
+    val d3 = freshDir()
+    Snapshot.commit(rows3.toDF("k", "x", "y", "t"), d3, 0, "k", nFiles = 4)
+    Snapshot.optimizeZorder(spark, d3, Seq("x", "y", "t"), nFiles = 64)
+    check(d3, Seq(("x", 100L, 299L), ("y", 0L, 999L), ("t", 500L, 599L)))
+  }
+
+  test("z-order refusals name the axes or the column at fault") {
+    import spark.implicits._
+    val dir = freshDir()
+    Snapshot.commit((0L until 200L).map(i => (i, i % 10, i % 7, i % 13))
+      .toDF("k", "x", "y", "t"), dir, 0, "k", nFiles = 2)
+    Snapshot.optimizeZorder(spark, dir, Seq("x", "y", "t"), nFiles = 4)
+    // a box of the wrong arity, or one naming a column the layout lacks
+    for (box <- Seq(Seq(("x", 0L, 5L), ("y", 0L, 5L)),
+                    Seq(("x", 0L, 5L), ("y", 0L, 5L), ("k", 0L, 5L)),
+                    Seq(("x", 0L, 5L), ("x", 0L, 5L), ("y", 0L, 5L)))) {
+      val e = intercept[IllegalArgumentException](
+        Snapshot.readPrunedBox(spark, dir, box))
+      assert(e.getMessage.contains("z-ordered on (x, y, t)") &&
+        e.getMessage.contains(box.map(_._1).mkString("(", ", ", ")")),
+        e.getMessage)
+    }
+    // a table that is not z-ordered at all says so
+    val plain = freshDir()
+    Snapshot.commit(baseRows(10), plain, 0, "k", nFiles = 1)
+    val notZ = intercept[IllegalArgumentException](
+      Snapshot.prunedFilesBox(spark, plain, Seq(("k", 0L, 5L))))
+    assert(notZ.getMessage.contains("not a z-ordered snapshot"), notZ.getMessage)
+    // an axis with nothing to scale: an empty table, an all-NULL column
+    val empty = freshDir()
+    Snapshot.commit(Seq.empty[(Long, Long, Long)].toDF("k", "a", "b"),
+      empty, 0, "k", nFiles = 1)
+    val nulls = freshDir()
+    Snapshot.commit((1L to 20L).map(i => (i, i, Option.empty[Long]))
+      .toDF("k", "a", "b"), nulls, 0, "k", nFiles = 1)
+    for ((d, column) <- Seq(empty -> "'a'", nulls -> "'b'")) {
+      val e = intercept[IllegalArgumentException](
+        Snapshot.optimizeZorder(spark, d, Seq("a", "b"), nFiles = 1))
+      assert(e.getMessage.contains(column), e.getMessage)
+      assert(Snapshot.currentVersion(spark, d) == 1, "nothing committed")
+    }
+  }
+
+  test("prunedFilesBox keeps the frozen file sets on the q127 and q130 boxes") {
+    val q127 = Seq(("o_custkey", 100L, 1100L), ("dday", 1461L, 1826L))
+    val q130 = q127 :+ (("price_c", 5000000L, 20000000L))
+    for ((dir, box) <- Seq(graft.ops.Warehouse.zOrders(spark, sf) -> q127,
+                           graft.ops.Warehouse.zOrders3(spark, sf) -> q130)) {
+      val m = Snapshot.manifest(spark, dir, 2)
+      val got = Snapshot.prunedFilesBox(spark, dir, box)
+      assert(got.nonEmpty && got.size < m.files.size,
+        s"${m.note}: ${got.size}/${m.files.size} files")
+      assert(got == FrozenZ.prunedFiles(m, box.map(b => (b._2, b._3))), m.note)
     }
   }
 
@@ -844,17 +986,19 @@ class SnapshotSpec extends SparkSpec {
     // a DATE-ONLY predicate: the v1 custkey-clustered layout has no
     // file-level mechanism at all (every file must be read); the
     // z-ordered v2 must prune on this axis too — 1996 = days 1461..1826
-    val dateOnly = Snapshot.prunedFilesBox(spark, dir, 0, aMax, 1461, 1826)
+    val dateOnly = Snapshot.prunedFilesBox(spark, dir,
+      Seq(("o_custkey", 0L, aMax), ("dday", 1461L, 1826L)))
     assert(dateOnly.nonEmpty && dateOnly.size < m2.files.size,
       s"date-only box must prune z files: ${dateOnly.size}/${m2.files.size}")
     // ...and a CUSTKEY-ONLY predicate prunes as well — no single-column
     // sort gives both
-    val custOnly = Snapshot.prunedFilesBox(spark, dir, 10, 40, 0, bMax)
+    val custOnly = Snapshot.prunedFilesBox(spark, dir,
+      Seq(("o_custkey", 10L, 40L), ("dday", 0L, bMax)))
     assert(custOnly.nonEmpty && custOnly.size < m2.files.size,
       s"custkey-only box must prune z files: ${custOnly.size}/${m2.files.size}")
     // value equality: the pruned box read IS the filtered full scan
-    val boxed = Snapshot.readPrunedBox(spark, dir, "o_custkey", "dday",
-        10, 60, 1461, 2191)
+    val boxed = Snapshot.readPrunedBox(spark, dir,
+        Seq(("o_custkey", 10L, 60L), ("dday", 1461L, 2191L)))
       .select("o_orderkey").collect().map(_.getLong(0)).sorted.toSeq
     val full = Snapshot.read(spark, dir, 2)
       .filter(col("o_custkey").between(10, 60) && col("dday").between(1461, 2191))
@@ -877,8 +1021,8 @@ class SnapshotSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(dir))
     val before = Snapshot.manifest(spark, dir, 2)
     assert(before.note.startsWith("zorder("), before.note)
-    val ref = Snapshot.readPrunedBox(spark, dir, "o_custkey", "dday",
-        10, 60, 1461, 2191)
+    val ref = Snapshot.readPrunedBox(spark, dir,
+        Seq(("o_custkey", 10L, 60L), ("dday", 1461L, 2191L)))
       .select("o_orderkey").collect().map(_.getLong(0)).sorted.toSeq
     val v = Snapshot.compactVersion(spark, dir, Long.MaxValue)
     assert(v == 3)
@@ -886,8 +1030,8 @@ class SnapshotSpec extends SparkSpec {
     assert(after.note == before.note,
       "compaction must carry the z layout note forward")
     assert(after.statsCol == "_z")
-    val got = Snapshot.readPrunedBox(spark, dir, "o_custkey", "dday",
-        10, 60, 1461, 2191)
+    val got = Snapshot.readPrunedBox(spark, dir,
+        Seq(("o_custkey", 10L, 60L), ("dday", 1461L, 2191L)))
       .select("o_orderkey").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == ref && got.nonEmpty,
       "box serving over the compacted current version is value-identical")
@@ -1008,23 +1152,24 @@ class SnapshotSpec extends SparkSpec {
       dir
     }
     val (mmDir, rkDir) = (mkTable(), mkTable())
-    Snapshot.optimizeZorder(spark, mmDir, "a", "b", nFiles = 16)
-    Snapshot.optimizeZorderRank(spark, rkDir, "a", "b", nFiles = 16)
+    Snapshot.optimizeZorder(spark, mmDir, Seq("a", "b"), nFiles = 16)
+    Snapshot.optimizeZorder(spark, rkDir, Seq("a", "b"), nFiles = 16,
+      rankBuckets = Some(256))
     // dense-region box: a in [10,20) x ALL of b — the query shape where
     // min-max has nothing: the whole Zipf mass scales to a=0, so an
     // a-predicate inside the dense region covers the entire dense slab
     // (~every file), while rank's equal-mass buckets make a in [10,20)
     // ~10% of the a dimension
     val (aLo, aHi, bLo, bHi) = (10L, 19L, 0L, 9999L)
-    val mmHit = Snapshot.prunedFilesBox(spark, mmDir, aLo, aHi, bLo, bHi)
-    val rkHit = Snapshot.prunedFilesBox(spark, rkDir, aLo, aHi, bLo, bHi)
+    val box = Seq(("a", aLo, aHi), ("b", bLo, bHi))
+    val mmHit = Snapshot.prunedFilesBox(spark, mmDir, box)
+    val rkHit = Snapshot.prunedFilesBox(spark, rkDir, box)
     assert(rkHit.size < mmHit.size,
       s"rank must out-prune min-max on the skewed axis: " +
         s"rank ${rkHit.size} vs min-max ${mmHit.size} of 16")
     // both layouts stay LOSSLESS: box read == full filter, value-equal
     for (dir <- Seq(mmDir, rkDir)) {
-      val boxed = Snapshot.readPrunedBox(spark, dir, "a", "b",
-          aLo, aHi, bLo, bHi)
+      val boxed = Snapshot.readPrunedBox(spark, dir, box)
         .select("id").collect().map(_.getLong(0)).sorted.toSeq
       val full = Snapshot.read(spark, dir)
         .filter(col("a").between(aLo, aHi) && col("b").between(bLo, bHi))
@@ -1033,8 +1178,8 @@ class SnapshotSpec extends SparkSpec {
     }
     // the outlier tail must also stay readable under rank (boundaries
     // cover it with its own sparse buckets)
-    val tail = Snapshot.readPrunedBox(spark, rkDir, "a", "b",
-        1000000L, (1L << 30), 0L, 9999L)
+    val tail = Snapshot.readPrunedBox(spark, rkDir,
+        Seq(("a", 1000000L, 1L << 30), ("b", 0L, 9999L)))
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     val tailFull = Snapshot.read(spark, rkDir)
       .filter(col("a").between(1000000L, 1L << 30) && col("b").between(0L, 9999L))
@@ -1226,7 +1371,7 @@ class SnapshotSpec extends SparkSpec {
     val zrows = (1 to 400).map(k => (k.toLong, k.toLong % 20, k.toLong % 30))
       .toDF("id", "a", "b")
     Snapshot.commit(zrows, zdir, 0, "a", nFiles = 4)
-    Snapshot.optimizeZorder(spark, zdir, "a", "b", nFiles = 4)
+    Snapshot.optimizeZorder(spark, zdir, Seq("a", "b"), nFiles = 4)
     intercept[IllegalArgumentException] {
       Snapshot.deleteWhere(spark, zdir, 1L, 10L)
     }
@@ -1262,7 +1407,7 @@ class SnapshotSpec extends SparkSpec {
     val zdir = freshDir()
     Snapshot.commit((1 to 100).map(k => (k.toLong, k.toLong % 7))
       .toDF("a", "b"), zdir, 0, "a", nFiles = 2)
-    Snapshot.optimizeZorder(spark, zdir, "a", "b", nFiles = 2)
+    Snapshot.optimizeZorder(spark, zdir, Seq("a", "b"), nFiles = 2)
     Snapshot.commit((1 to 120).map(k => (k.toLong, k.toLong % 7))
       .toDF("a", "b"), zdir, 2, "a", nFiles = 2)
     intercept[IllegalArgumentException] {
@@ -1858,7 +2003,7 @@ class SnapshotSpec extends SparkSpec {
     val zdir = freshDir()
     Snapshot.commit((1 to 100).map(i => (i.toLong, i.toLong * 3))
       .toDF("a", "b"), zdir, 0, "a", nFiles = 4)
-    Snapshot.optimizeZorder(spark, zdir, "a", "b", 4)
+    Snapshot.optimizeZorder(spark, zdir, Seq("a", "b"), 4)
     intercept[IllegalArgumentException](
       Snapshot.deleteWhereDV(spark, zdir, 1L, 10L))
     // a shallow clone of a DV'd table serves the DV'd state (vectors
@@ -2161,7 +2306,7 @@ class SnapshotSpec extends SparkSpec {
     import spark.implicits._
     Snapshot.commit((1 to 100).map(i => (i.toLong, i.toLong * 3))
       .toDF("a", "b"), dir, 0, "a", nFiles = 4)
-    Snapshot.optimizeZorder(spark, dir, "a", "b", 4)
+    Snapshot.optimizeZorder(spark, dir, Seq("a", "b"), 4)
     intercept[IllegalArgumentException](
       Snapshot.compactSmall(spark, dir, smallBytes = Long.MaxValue))
   }
@@ -2554,5 +2699,127 @@ class SnapshotSpec extends SparkSpec {
     // within bounds the single-commit DV path works as before
     Snapshot.deleteWhereDV(spark, dir, 1L, 1L, col("id") === 153L)
     assert(Snapshot.read(spark, dir).count() == 49)
+  }
+}
+
+/** The two- and three-axis z-order arithmetic as it stood before the
+  * arities shared one [[Snapshot.ZCurve]] — the spreads, cover walks and
+  * range packing verbatim, the min-max pruning restated over a
+  * positional box — kept as the reference the generic code must
+  * reproduce. */
+private object FrozenZ {
+  private def spreadL(x0: Long): Long = {
+    var v = x0
+    v = (v | (v << 16)) & 0x0000FFFF0000FFFFL
+    v = (v | (v << 8))  & 0x00FF00FF00FF00FFL
+    v = (v | (v << 4))  & 0x0F0F0F0F0F0F0F0FL
+    v = (v | (v << 2))  & 0x3333333333333333L
+    v = (v | (v << 1))  & 0x5555555555555555L
+    v
+  }
+
+  private def spreadL3(x0: Long): Long = {
+    var v = x0 & 0x1FFFFFL
+    v = (v | (v << 32)) & 0x1F00000000FFFFL
+    v = (v | (v << 16)) & 0x1F0000FF0000FFL
+    v = (v | (v << 8))  & 0x100F00F00F00F00FL
+    v = (v | (v << 4))  & 0x10C30C30C30C30C3L
+    v = (v | (v << 2))  & 0x1249249249249249L
+    v
+  }
+
+  def zPoint(a: Long, b: Long): Long = spreadL(a) | (spreadL(b) << 1)
+
+  def zPoint3(a: Long, b: Long, c: Long): Long =
+    spreadL3(a) | (spreadL3(b) << 1) | (spreadL3(c) << 2)
+
+  def zCover(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
+             maxRanges: Int = 64): Seq[(Long, Long)] = {
+    val span = math.max(aHi - aLo, bHi - bLo) + 1
+    val cut = math.max(0, (63 - java.lang.Long.numberOfLeadingZeros(span)) - 4)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def walk(ca: Long, cb: Long, level: Int): Unit = {
+      val hi = (1L << level) - 1
+      if (ca + hi < aLo || ca > aHi || cb + hi < bLo || cb > bHi) return
+      if (level <= cut ||
+          (ca >= aLo && ca + hi <= aHi && cb >= bLo && cb + hi <= bHi)) {
+        out += ((zPoint(ca, cb), zPoint(ca + hi, cb + hi)))
+        return
+      }
+      val h = 1L << (level - 1)
+      walk(ca, cb, level - 1);     walk(ca + h, cb, level - 1)
+      walk(ca, cb + h, level - 1); walk(ca + h, cb + h, level - 1)
+    }
+    walk(0L, 0L, 31)
+    packRanges(out.toSeq, maxRanges)
+  }
+
+  def zCover3(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
+              cLo: Long, cHi: Long,
+              maxRanges: Int = 2048): Seq[(Long, Long)] = {
+    val span = Seq(aHi - aLo, bHi - bLo, cHi - cLo).max + 1
+    val cut = math.max(0, (63 - java.lang.Long.numberOfLeadingZeros(span)) - 5)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def walk(ca: Long, cb: Long, cc: Long, level: Int): Unit = {
+      val hi = (1L << level) - 1
+      if (ca + hi < aLo || ca > aHi || cb + hi < bLo || cb > bHi ||
+          cc + hi < cLo || cc > cHi) return
+      if (level <= cut ||
+          (ca >= aLo && ca + hi <= aHi && cb >= bLo && cb + hi <= bHi &&
+           cc >= cLo && cc + hi <= cHi)) {
+        out += ((zPoint3(ca, cb, cc), zPoint3(ca + hi, cb + hi, cc + hi)))
+        return
+      }
+      val h = 1L << (level - 1)
+      for (dc <- 0 to 1; db <- 0 to 1; da <- 0 to 1)
+        walk(ca + da * h, cb + db * h, cc + dc * h, level - 1)
+    }
+    walk(0L, 0L, 0L, 21)
+    packRanges(out.toSeq, maxRanges)
+  }
+
+  private def packRanges(r: Seq[(Long, Long)],
+                         maxRanges: Int): Seq[(Long, Long)] =
+    if (r.length <= maxRanges) r
+    else {
+      val gaps = r.sliding(2).zipWithIndex
+        .map { case (Seq(p, n), i) => (n._1 - p._2, i) }.toSeq
+      val keep = gaps.sortBy(g => (-g._1, g._2)).take(maxRanges - 1)
+        .map(_._2).toSet
+      val acc = scala.collection.mutable.ArrayBuffer[(Long, Long)](r.head)
+      r.tail.zipWithIndex.foreach { case (cur, i) =>
+        if (keep(i)) acc += cur
+        else acc(acc.length - 1) = (acc.last._1, cur._2)
+      }
+      acc.toSeq
+    }
+
+  private val ZNote = """zorder\(([^,]+),([^,]+),(-?\d+),(-?\d+),(-?\d+),(-?\d+)\)""".r
+  private val ZNote3 =
+    """zorder3\(([^,]+),([^,]+),([^,]+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),(-?\d+),(-?\d+)\)""".r
+
+  /** Min-max file pruning of a box given positionally in the note's axis
+    * order: the box's edges clamp to each axis's domain, scale to 16
+    * bits, and the cover intersects the manifest's per-file z ranges. */
+  def prunedFiles(m: Snapshot.Manifest,
+                  box: Seq[(Long, Long)]): Seq[Snapshot.FileEntry] = {
+    val dom = m.note match {
+      case ZNote(_, _, a0, a1, b0, b1) => Seq(a0 -> a1, b0 -> b1)
+      case ZNote3(_, _, _, a0, a1, b0, b1, c0, c1) =>
+        Seq(a0 -> a1, b0 -> b1, c0 -> c1)
+    }
+    val axes = dom.map { case (lo, hi) => (lo.toLong, hi.toLong) }
+    if (box.zip(axes).exists { case ((lo, hi), (mn, mx)) => hi < mn || lo > mx })
+      return Seq.empty
+    val scaled = box.zip(axes).map { case ((lo, hi), (mn, mx)) =>
+      def scale(x: Long): Long = (x - mn) * 65535L / math.max(1L, mx - mn)
+      (scale(math.max(lo, mn)), scale(math.min(hi, mx)))
+    }
+    val cover = scaled match {
+      case Seq((aLo, aHi), (bLo, bHi)) => zCover(aLo, aHi, bLo, bHi)
+      case Seq((aLo, aHi), (bLo, bHi), (cLo, cHi)) =>
+        zCover3(aLo, aHi, bLo, bHi, cLo, cHi)
+    }
+    m.files.filter(f => cover.exists(r => r._1 <= f.max && r._2 >= f.min))
   }
 }

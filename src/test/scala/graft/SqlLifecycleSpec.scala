@@ -117,6 +117,17 @@ class SqlLifecycleSpec extends SparkSpec {
     assert(Snapshot.read(spark, dir).count() == 10)
   }
 
+  test("SQL OPTIMIZE ZORDER BY refuses 1 or 4 columns, version unchanged") {
+    val (dir, name) = freshRegistered()
+    for (cols <- Seq("k", "k, v, k2, v2")) {
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"OPTIMIZE $name ZORDER BY ($cols)").collect())
+      assert(e.getMessage.endsWith("ZORDER BY takes 2 or 3 columns, got " +
+        s"${cols.split(", ").length}: ($cols)"), e.getMessage)
+      assert(Snapshot.currentVersion(spark, dir) == 1)
+    }
+  }
+
   test("SQL OPTIMIZE BY VALUE re-clusters to single-valued files; " +
     "GROUP BY over the catalog table goes metadata-only") {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
