@@ -217,8 +217,9 @@ object Stages {
         ops.Snapshot.commit(pub, dir, 0, "ck", note = runTag)
       else
         // keep-incoming upsert: published rows replace same-key snapshot
-        // rows, unmatched snapshot rows carry — COW rewrites only the
-        // files the incoming key ranges touch
+        // rows, unmatched snapshot rows carry (key-local, as mergeCow
+        // requires); a re-published claims set matches most of the
+        // table, so the touched files rewrite copy-on-write
         ops.Snapshot.mergeCow(spark, dir, pub, "ck",
           (base, ch) => ch.unionByName(
             base.join(ch.select(col("ck").as("_k")),

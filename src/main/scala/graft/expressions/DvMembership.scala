@@ -20,8 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * partition, so the hash lookup happens once per file change, not per
   * row), then a min/max bounds check that rejects almost every row in
   * two long compares, then a binary search only inside the bounds. The
-  * positions map rides the serialized expression — bounded by
-  * `deleteWhereDV.maxPositions`, the same cap that bounds the manifest.
+  * positions map rides the serialized expression — each commit adds at
+  * most `Snapshot.DvMaxPositions`, the same cap that bounds the manifest.
   *
   * The key is the SCHEME-NORMALIZED full path ([[DvMembership.normKey]]
   * applied on both sides): a bare name is NOT table-unique — a

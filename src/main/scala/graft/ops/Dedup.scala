@@ -409,25 +409,6 @@ object Dedup extends QueryModule {
       .select(col("i"), col("j"), col("inter"), col("uni"), col("jac"))
   }
 
-  /** The naive batch-vs-base reference for the property test — the raw
-    * shingle equi-join q113 shipped through round 9, kept as the
-    * deliberately-dumbest correct spelling (the q61-vs-q106 pattern). */
-  private[graft] def crossJaccardNaive(shB: DataFrame, shC: DataFrame,
-                                       tau: Double): DataFrame = {
-    val szB = shB.groupBy(col("doc_id")).agg(count(lit(1)).as("ni"))
-    val szC = shC.groupBy(col("doc_id")).agg(count(lit(1)).as("nj"))
-    shB.select(col("doc_id").as("i"), col("sh"))
-      .join(shC.select(col("doc_id").as("j"), col("sh")), Seq("sh"))
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("inter"))
-      .join(szB.select(col("doc_id").as("i"), col("ni")), Seq("i"))
-      .join(szC.select(col("doc_id").as("j"), col("nj")), Seq("j"))
-      .withColumn("uni", col("ni") + col("nj") - col("inter"))
-      .withColumn("jac",
-        col("inter").cast(DoubleType) / col("uni").cast(DoubleType))
-      .filter(col("jac") >= tau)
-      .select(col("i"), col("j"), col("inter"), col("uni"), col("jac"))
-  }
-
   /** The verdict probe over an [[IncIndex]] — every join is batch-vs-base
     * with the BATCH side small: the fingerprint probe is batch-rows ×
     * 16-byte keys against the fp index, the near stage is
@@ -585,21 +566,6 @@ object Dedup extends QueryModule {
           (v1, ix2)
         })
     }
-
-  /** The naive all-pairs containment reference for the property test —
-    * deliberately the dumbest correct spelling (the q61-vs-q106 pattern). */
-  private[graft] def containmentPairsNaive(sh: DataFrame, tau: Double): DataFrame = {
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    sh.select(col("doc_id").as("i"), col("sh"))
-      .join(sh.select(col("doc_id").as("j"), col("sh")), Seq("sh"))
-      .filter(col("i") =!= col("j"))
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("inter"))
-      .join(sz.select(col("doc_id").as("i"), col("nsh").as("ni")), Seq("i"))
-      .withColumn("cont",
-        col("inter").cast(DoubleType) / col("ni").cast(DoubleType))
-      .filter(col("cont") >= tau)
-      .select(col("i"), col("j"), col("inter"), col("ni"), col("cont"))
-  }
 
   /** 60-bit tf-weighted SimHash signatures, one row per doc, in either of
     * two plan shapes (value-identical; pinned by SimilaritySpec, shape

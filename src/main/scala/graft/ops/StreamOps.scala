@@ -180,8 +180,9 @@ object StreamOps extends QueryModule {
     * concurrency) — Delta's txnVersion idempotent-sink recipe on this
     * repo's own commit protocol. A FUTURE batchId (a gap — some batch
     * was lost, not merely redelivered) fails loudly rather than
-    * committing a hole. Each applied batch merges COPY-ON-WRITE: only
-    * files whose user-key stats ranges the batch touches rewrite;
+    * committing a hole. Each applied batch merges through
+    * [[Snapshot.mergeCow]]: only files whose user-key stats ranges the
+    * batch touches change;
     * SnapshotSpec pins replay-idempotence, gap detection, and history
     * growth. */
   private[graft] def snapshotSinkBatch(dir: String, batchId: Long,
@@ -222,9 +223,10 @@ object StreamOps extends QueryModule {
           note = s"batch:$batchId")
       else {
         // Reduce the batch to its per-user delta ONCE and pin it
-        // (localCheckpoint): mergeCow evaluates its `changes` twice —
-        // the touched-file selection job and the COW merge itself — and
-        // both previously re-ran the full micro-batch scan + argmax.
+        // (localCheckpoint): mergeCow evaluates its `changes` in every
+        // job — the touched-file selection, the matched-position collect
+        // and the merge itself — and each would re-run the full
+        // micro-batch scan + argmax.
         // Measured (OPTIMIZATION_r22.md §3, sf0.1 warm): selection
         // 180-430 ms + merge-side re-eval per batch → selection ~30 ms
         // off the ~500-row pinned delta, one batch evaluation total.
@@ -275,7 +277,7 @@ object StreamOps extends QueryModule {
     * Per tick: resolve the upstream head; replay every DATA version step
     * since the cursor as a per-step [[Snapshot.changeFeed]] in pre/post-
     * image form (stepping version-by-version keeps each diff narrow —
-    * a COW commit's feed reads only its rewritten files — and makes
+    * a merge's feed reads only its masked or rewritten files — and makes
     * maintenance versions skippable individually, so an OPTIMIZE
     * interleaved mid-history never forces a whole-table diff); aggregate
     * the union into per-group deltas (I/U+ credit, D/U- debit — q129's
@@ -444,7 +446,7 @@ object StreamOps extends QueryModule {
   /** q133's transactional build as a ONCE-PER-(warehouse, sf) fixture
     * (round 19 — the q124 discipline applied to the subscription
     * lifecycle): the 4-tick STREAMED drain — tick 0 commits the
-    * initial load, tick 1 merges q42's CDC batch copy-on-write,
+    * initial load, tick 1 merges q42's CDC batch through mergeCow,
     * tick 2 runs OPTIMIZE compact (a maintenance commit the
     * subscription ticks over WITHOUT diffing), tick 3 is an idle
     * redelivery — each trigger calling [[viewMaintainTick]] with the

@@ -70,9 +70,10 @@ object Warehouse extends QueryModule {
     * join state×changes on the key, then per-row verdict — base-only rows
     * carry through keeping their lineage, U rows take the new price, D
     * rows drop, I rows (change-only by construction) append. Works on ANY
-    * subset of the state (COW hands it only the touched files' rows):
-    * correctness needs every change key's base row present IF one exists,
-    * which the stats-range file selection guarantees. */
+    * subset of the state ([[Snapshot.mergeCow]] hands it only the
+    * matched rows, or the touched files' rows): correctness needs every
+    * change key's base row present IF one exists, and base-only rows
+    * pass through unchanged — the key-local contract mergeCow states. */
   private[graft] def applyOrdersChanges(base: DataFrame,
                                         changes: DataFrame): DataFrame =
     base.join(changes, base("order_key") === changes("k"), "full_outer")
@@ -86,7 +87,7 @@ object Warehouse extends QueryModule {
 
   /** The snapshot-versioned orders table for a fixture dir, built once
     * per (session, dir): v1 = initial load, v2 = q42's CDC batch merged
-    * COPY-ON-WRITE through [[Snapshot.mergeCow]] — the atomic-manifest
+    * through [[Snapshot.mergeCow]] — the atomic-manifest
     * commit the round-9 VERDICT's "transactional MERGE target" gap asks
     * for. Weak session keys unpin stopped sessions (the q112/q115/q120
     * cache discipline); the table lives under the session-unique temp
@@ -1184,7 +1185,7 @@ object Warehouse extends QueryModule {
     * through SQL `MERGE INTO` — update/delete/insert clauses spelling
     * exactly [[applyOrdersChanges]]'s verdict semantics, so the final
     * state hash-matches the q42/q124 oracle VERBATIM (the fourth
-    * same-oracle twin: one-shot plan, API-level COW merge, foreachBatch
+    * same-oracle twin: one-shot plan, API-level merge, foreachBatch
     * sink, and now the SQL verb). */
   private[graft] def sqlMergeOrders(s: SparkSession, d: String): String =
     synchronized {
@@ -1463,7 +1464,7 @@ object Warehouse extends QueryModule {
       // file selection keyed by the ON clause's statsCol equi-conjunct
       // (SourceSpec pins the carried-file subset and all three clause
       // classes). Hash-matches q42's oracle VERBATIM: the fourth
-      // same-oracle twin — one-shot plan (q42), API COW merge (q124),
+      // same-oracle twin — one-shot plan (q42), API merge (q124),
       // streaming sink (q126 via q102's), and the SQL verb.
       Snapshot.read(s, sqlMergeOrders(s, d))
         .select(col("order_key"), col("cust_key"), col("status"),

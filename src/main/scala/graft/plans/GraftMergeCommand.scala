@@ -31,12 +31,15 @@ import graft.ops.Snapshot
   * belonged to, so same-named target/source columns stay unambiguous),
   * a single full-outer join on the rewritten merge condition classifies
   * every row, and per-column when-cascades materialize the clause
-  * logic. The COW discipline matches [[Snapshot.mergeCow]]: when the
+  * logic. The file selection matches [[Snapshot.mergeCow]]'s: when the
   * merge condition carries a `target.<statsCol> = <source expr>`
   * equi-conjunct, the source's key values select the stats-overlapping
   * files and ONLY those rewrite (everything else carries by reference
   * with its sidecars — at 100 TB the merge costs the touched files);
-  * without such a conjunct every file rewrites, honestly. Like
+  * without such a conjunct every file rewrites, honestly. The touched
+  * files always rewrite copy-on-write: WHEN NOT MATCHED BY SOURCE
+  * clauses act on target rows no source key names, so the key-local
+  * contract mergeCow's merge-on-read branch rests on does not hold. Like
   * mergeCow, the source must be key-unique on the join key — a source
   * row matching twice would double its target row (the CDC batch
   * contract; guard upstream).

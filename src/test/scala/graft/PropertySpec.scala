@@ -18,44 +18,92 @@ class PropertySpec extends SparkSpec {
     Gen.listOfN(20, Gen.oneOf("a", "b", "c", "a b", "b c", "a b c"))
 
   test("mergeCow == full-table merge for ANY base/batch/file-count shape") {
-    // q124's copy-on-write shortcut must be LOSSLESS: for every base key
-    // set, change batch (updates/deletes/inserts, in- and out-of-range
-    // keys, including keys absent from the base), and file layout, the
-    // COW result (touched files rewritten + carry-over) must equal the
-    // full-table merge of the same inputs. This is the snapshot family's
-    // analog of the prefix-filter lossless-∀ property: the file-range
-    // selection may only skip files the merge could not change.
+    // q124's upsert must be LOSSLESS: for every base key set, change
+    // batch (updates/deletes/inserts, in- and out-of-range keys,
+    // including keys absent from the base), file layout and table
+    // history (a prior deletion vector, an added or a renamed column),
+    // the merge must equal the full-table merge of the same inputs. This
+    // is the snapshot family's analog of the prefix-filter lossless-∀
+    // property: the file-range selection may only skip files the merge
+    // could not change. Both branches are drawn — narrow batches mask
+    // the matched rows merge-on-read, wide ones match more than half of
+    // the touched rows and rewrite copy-on-write — and the branch that
+    // ran must be the one the inputs predict.
     import spark.implicits._
     import graft.ops.Snapshot
     val bases = Gen.nonEmptyListOf(Gen.choose(1L, 60L)).map(_.distinct)
-    val ops = for {
-      k  <- Gen.choose(1L, 80L) // beyond the base range: inserts + misses
-      op <- Gen.oneOf("U", "D", "I")
-    } yield (k, op)
-    val batches = Gen.nonEmptyListOf(ops).map(_.distinctBy(_._1))
+    // a one-key batch matches at most one row of a file, which is at most
+    // half of its live rows once the table holds 20+ keys in 1..3 files
+    val narrowBases = Gen.choose(20, 60).flatMap(n => Gen.pick(n, 1L to 60L))
+      .map(_.toList)
+    val op = Gen.oneOf("U", "D", "I")
+    val narrow = for { k <- Gen.choose(1L, 80L); o <- op } yield List((k, o))
+    val wide = Gen.listOfN(80, op).map((1L to 80L).toList.zip(_))
+    val any = Gen.nonEmptyListOf(for {
+      k <- Gen.choose(1L, 80L) // beyond the base range: inserts + misses
+      o <- op
+    } yield (k, o)).map(_.distinctBy(_._1))
+    val histories = Gen.oneOf("plain", "dv", "added", "renamed")
     val layouts = Gen.choose(1, 5)
-    val apply = (base: org.apache.spark.sql.DataFrame,
-                 changes: org.apache.spark.sql.DataFrame) =>
-      base.join(changes, base("k") === changes("k"), "full_outer")
-        .filter(coalesce(col("op"), lit("K")) =!= "D")
-        .select(coalesce(changes("k"), base("k")).as("k"),
-          coalesce(concat(lit("c"), col("op")), col("v")).as("v"),
-          coalesce(col("op"), col("verdict")).as("verdict"))
+    val seen = scala.collection.mutable.Set.empty[String]
     var n = 0
-    check(Prop.forAll(bases, batches, layouts) { (ks, ch, nf) =>
-      n += 1
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_cowprop_$n").toString + "/t"
-      val base = ks.map(k => (k, s"v$k", "K")).toDF("k", "v", "verdict")
-      Snapshot.commit(base, dir, 0, "k", nFiles = nf)
-      val changes = ch.toDF("k", "op")
-      Snapshot.mergeCow(spark, dir, changes, "k", apply, nFiles = nf)
-      val cow = Snapshot.read(spark, dir, 2).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      val full = apply(Snapshot.read(spark, dir, 1), changes).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      cow == full
-    })
+    for ((kind, tables, batches, files) <- Seq(
+        ("narrow", narrowBases, narrow, Gen.choose(1, 3)),
+        ("wide", bases, wide, layouts), ("any", bases, any, layouts)))
+      check(Prop.forAll(tables, batches, histories, files, Gen.choose(1L, 58L)) {
+        (ks, ch, history, nf, dvLo) =>
+          n += 1
+          val dir = java.nio.file.Files
+            .createTempDirectory(s"graft_cowprop_$n").toString + "/t"
+          Snapshot.commit(ks.map(k => (k, s"v$k", "K")).toDF("k", "v", "verdict"),
+            dir, 0, "k", nFiles = nf)
+          history match {
+            case "dv" => Snapshot.deleteWhereDV(spark, dir, dvLo, dvLo + 2)
+            case "added" => Snapshot.addColumn(spark, dir, "score", "BIGINT")
+            case "renamed" => Snapshot.renameColumn(spark, dir, "v", "label")
+            case _ => ()
+          }
+          val vCol = if (history == "renamed") "label" else "v"
+          val extra = if (history == "added") Seq("score") else Nil
+          val apply = (base: org.apache.spark.sql.DataFrame,
+                       changes: org.apache.spark.sql.DataFrame) =>
+            base.join(changes, base("k") === changes("k"), "full_outer")
+              .filter(coalesce(col("op"), lit("K")) =!= "D")
+              .select(Seq(coalesce(changes("k"), base("k")).as("k"),
+                coalesce(concat(lit("c"), col("op")), col(vCol)).as(vCol),
+                coalesce(col("op"), col("verdict")).as("verdict")) ++
+                extra.map(base(_)): _*)
+          val v0 = Snapshot.currentVersion(spark, dir)
+          val m0 = Snapshot.manifest(spark, dir, v0)
+          val changes = ch.toDF("k", "op")
+          val v1 = Snapshot.mergeCow(spark, dir, changes, "k", apply, nFiles = nf)
+          val m1 = Snapshot.manifest(spark, dir, v1)
+          def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+          val merged = rows(Snapshot.read(spark, dir, v1))
+          val full = rows(apply(Snapshot.read(spark, dir, v0), changes))
+          // the branch the inputs predict: matched positions past half of
+          // the touched files' live rows rewrite
+          val keys = ch.map(_._1).toSet
+          val live = Snapshot.read(spark, dir, v0).select("k").as[Long].collect()
+          val matched = live.count(keys.contains)
+          val touched = m0.files.filter(f => keys.exists(k => f.min <= k && k <= f.max))
+          val liveTouched = touched.map(f =>
+            f.rows - m0.dvs.get(f.path).fold(0)(_.length)).sum
+          val masked = m1.dvs.values.map(_.length).sum -
+            m0.dvs.values.map(_.length).sum
+          val carriedAll = m0.files.forall(f => m1.files.exists(_.path == f.path))
+          val mor = 2L * matched <= liveTouched
+          val branchOk =
+            if (mor) carriedAll && masked == matched
+            else !carriedAll && m1.dvs.forall { case (p, v) =>
+              m0.dvs.get(p).exists(_.length == v.length) }
+          // a batch that matches no live row has nothing to mask or
+          // rewrite on either branch
+          if (matched > 0) seen += s"$kind:${if (mor) "mor" else "cow"}"
+          merged == full && branchOk
+      })
+    assert(seen.filterNot(_.startsWith("any")) == Set("narrow:mor", "wide:cow"),
+      s"matching narrow batches must mask and wide ones rewrite, saw $seen")
   }
 
   test("grouped metadata counts == plain GROUP BY for ANY " +
@@ -574,7 +622,7 @@ class PropertySpec extends SparkSpec {
         d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       canon(ops.Dedup.crossJaccardPrefix(shB, ix, tau)) ==
-        canon(ops.Dedup.crossJaccardNaive(shB, shC, tau))
+        canon(DedupOracles.crossJaccardNaive(shB, shC, tau))
     })
   }
 
@@ -595,7 +643,7 @@ class PropertySpec extends SparkSpec {
         d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       canon(ops.Dedup.containmentPairs(sh, tau)) ==
-        canon(ops.Dedup.containmentPairsNaive(sh, tau))
+        canon(DedupOracles.containmentPairsNaive(sh, tau))
     })
   }
 

@@ -30,9 +30,12 @@ class SnapshotSpec extends SparkSpec {
   test("bounds-known COW writes equal the sampling path: content, " +
     "disjoint ranges, honest fallback") {
     import spark.implicits._
-    // updates scattered across every file + inserts OUTSIDE the key
-    // range (the shape that exercises edge-bucket clamping)
-    def changes: DataFrame = ((50 to 750 by 50).map(k =>
+    // inserts OUTSIDE the key range (the shape that exercises edge-bucket
+    // clamping) plus either an update of every key — more than half of
+    // the touched rows, so the merge rewrites all 8 files copy-on-write —
+    // or updates scattered across every file, which the merge masks and
+    // appends merge-on-read
+    def changes(upd: Seq[Int]): DataFrame = (upd.map(k =>
       (k.toLong, "U", s"upd_$k")) ++ Seq((900L, "I", "ins_900"),
       (950L, "I", "ins_950"))).toDF("k", "op", "nv")
     def applyCh(base: DataFrame, ch: DataFrame): DataFrame =
@@ -40,26 +43,42 @@ class SnapshotSpec extends SparkSpec {
         .select(col("k"),
           coalesce(col("nv"), col("v")).as("v"),
           coalesce(col("verdict"), lit("K")).as("verdict"))
-    def runWith(bounded: Boolean): (Set[(Long, String, String)],
-        Seq[Snapshot.FileEntry]) = {
+    // the committed state, the files the merge wrote, and whether it
+    // laid a deletion vector
+    def runWith(bounded: Boolean, upd: Seq[Int]): (Set[(Long, String, String)],
+        Seq[Snapshot.FileEntry], Boolean) = {
       val dir = freshDir()
       Snapshot.commit(baseRows(), dir, 0, "k")
       spark.conf.set(Snapshot.BoundedWriteKey, bounded.toString)
-      try Snapshot.mergeCow(spark, dir, changes, "k", applyCh)
+      try Snapshot.mergeCow(spark, dir, changes(upd), "k", applyCh)
       finally spark.conf.unset(Snapshot.BoundedWriteKey)
+      val old = Snapshot.manifest(spark, dir, 1).files.map(_.path).toSet
       val m = Snapshot.manifest(spark, dir, 2)
-      (state(dir), m.files)
+      (state(dir), m.files.filterNot(f => old.contains(f.path)), m.dvs.nonEmpty)
     }
-    val (cb, fb) = runWith(bounded = true)
-    val (cs, _) = runWith(bounded = false)
+    // layout contract preserved: the files a write lays carry DISJOINT
+    // sorted key ranges (each bucket is a contiguous key interval)
+    def disjoint(fs: Seq[Snapshot.FileEntry]): Unit = {
+      val ranges = fs.map(f => (f.min, f.max)).sortBy(_._1)
+      assert(ranges.sliding(2).forall {
+        case Seq((_, aMax), (bMin, _)) => aMax < bMin
+        case _ => true
+      }, s"overlapping ranges under the bounded write: $ranges")
+    }
+    val every = 1 to 800
+    val (cb, fb, cbMasked) = runWith(bounded = true, every)
+    val (cs, fs, _) = runWith(bounded = false, every)
     assert(cb == cs, "bounded and sampling paths must commit the same state")
-    // layout contract preserved: files carry DISJOINT sorted key ranges
-    // (each bucket is a contiguous key interval)
-    val ranges = fb.map(f => (f.min, f.max)).sortBy(_._1)
-    assert(ranges.sliding(2).forall {
-      case Seq((_, aMax), (bMin, _)) => aMax < bMin
-      case _ => true
-    }, s"overlapping ranges under the bounded write: $ranges")
+    assert(!cbMasked && fb.size == 8 && fs.size == 8,
+      s"a majority-matched merge must rewrite all 8 files, no vector: " +
+        s"${fb.size}/${fs.size} files, masked=$cbMasked")
+    disjoint(fb)
+    val scattered = 50 to 750 by 50
+    val (nb, nfb, nbMasked) = runWith(bounded = true, scattered)
+    val (ns, _, nsMasked) = runWith(bounded = false, scattered)
+    assert(nb == ns, "bounded and sampling appends must commit the same state")
+    assert(nbMasked && nsMasked, "a scattered batch must mask, not rewrite")
+    disjoint(nfb)
     // a frame that already carries the bucket column's name must fall
     // back to sampling, not silently replace the user's column
     val trap = freshDir()
@@ -267,13 +286,13 @@ class SnapshotSpec extends SparkSpec {
     assert(e.getMessage.contains("graft_never_registered"), e.getMessage)
   }
 
-  test("mergeCow rewrites only stats-touched files and carries the rest") {
+  test("mergeCow masks the matched rows of stats-touched files and carries every file") {
     import spark.implicits._
     val dir = freshDir()
     Snapshot.commit(baseRows(), dir, 0, "k")
     val m1 = Snapshot.manifest(spark, dir, 1)
     // narrow CDC batch: keys 1..3 (one file's range) + one out-of-range
-    // insert — the COW selection must rewrite exactly one file
+    // insert — the merge masks exactly the 3 matched rows of one file
     val ch = Seq(
       (1L, "U", "upd_1"), (2L, "D", null), (3L, "U", "upd_3"),
       (9001L, "I", "ins_9001")).toDF("k", "op", "cv")
@@ -288,8 +307,15 @@ class SnapshotSpec extends SparkSpec {
     val m2 = Snapshot.manifest(spark, dir, 2)
     val carried = m2.files.map(_.path).toSet
       .intersect(m1.files.map(_.path).toSet)
-    assert(carried.size == 7,
-      s"7 of 8 v1 files must carry over by reference, got ${carried.size}")
+    assert(carried.size == 8,
+      s"all 8 v1 files must carry over by reference, got ${carried.size}")
+    val touched = m1.files.filter(f => f.min <= 1L && f.max >= 3L)
+    assert(touched.size == 1 && m2.dvs.keySet == Set(touched.head.path) &&
+      m2.dvs(touched.head.path).length == 3,
+      s"the 3 matched positions are masked in the one touched file: ${m2.dvs}")
+    val fresh = m2.files.filterNot(f => carried.contains(f.path))
+    assert(fresh.map(_.rows) == Seq(3L),
+      s"one fresh file holds the 3 post-images, got $fresh")
     // semantics: full replay equality against the one-shot merge
     val expected = apply(Snapshot.read(spark, dir, 1), ch)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
@@ -315,6 +341,8 @@ class SnapshotSpec extends SparkSpec {
     val m2 = Snapshot.manifest(spark, dir, 2)
     assert(m1.files.map(_.path).toSet.subsetOf(m2.files.map(_.path).toSet),
       "all 8 base files carry over; only the insert file is new")
+    assert(m2.files.size == 9 && m2.dvs.isEmpty,
+      s"one fresh file and no mask, got ${m2.files.size} files, ${m2.dvs.keySet}")
     assert(state(dir, 2).size == 801)
   }
 
@@ -611,7 +639,8 @@ class SnapshotSpec extends SparkSpec {
     Snapshot.commit(baseRows(), dir, 0, "k") // v1: 8 files over keys 1..800
     import spark.implicits._
     // narrow CDC batch: one file's range touched (k=5 update, k=10
-    // delete) plus an out-of-range insert — 7 of 8 base files carry
+    // delete) plus an out-of-range insert — every base file carries,
+    // the touched one with k=5 and k=10 masked
     val ch = Seq((5L, "U"), (10L, "D"), (900L, "I")).toDF("k", "op")
     Snapshot.mergeCow(spark, dir, ch, "k", (base, changes) =>
       base.join(changes.withColumnRenamed("k", "ck"),
@@ -624,14 +653,19 @@ class SnapshotSpec extends SparkSpec {
           coalesce(col("op"), col("verdict")).as("verdict")))
     val m1 = Snapshot.manifest(spark, dir, 1)
     val m2 = Snapshot.manifest(spark, dir, 2)
-    val shared = m1.files.map(_.path).toSet & m2.files.map(_.path).toSet
-    assert(shared.size == 7, s"narrow merge must carry 7 files, ${shared.size}")
+    val carried = m1.files.map(_.path).toSet & m2.files.map(_.path).toSet
+    assert(carried.size == 8, s"narrow merge must carry 8 files, ${carried.size}")
+    assert(m2.dvs.size == 1 && m2.dvs.values.head.length == 2,
+      s"k=5 and k=10 masked in the touched file, got ${m2.dvs.keySet}")
+    // a file cancels in the diff when it is carried with an equal mask
+    val shared = carried.filterNot(m2.dvs.contains)
+    assert(shared.size == 7, s"7 unmasked files cancel, ${shared.size}")
     val feed = Snapshot.changeFeed(spark, dir, 1, 2, "k")
     val rows = feed.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3))).toSet
-    // exact change set — the ~99 unchanged neighbors the rewrite
-    // carried along must NOT surface
+    // exact change set — the ~98 unmasked neighbors in the masked file
+    // must NOT surface
     assert(rows == Set(
       (5L, "U", "updated", "U"),
       (10L, "D", "val_10", "K"),
@@ -653,6 +687,84 @@ class SnapshotSpec extends SparkSpec {
       (5L, "U+", "updated", "U"),
       (10L, "D", "val_10", "K"),
       (900L, "I", "val_900", "I")), s"got $full")
+  }
+
+  test("changeFeed after a merge-on-read merge equals the COW merge's feed") {
+    import spark.implicits._
+    // the same history twice (8 files, then k in [20,25] DV-deleted); the
+    // second copy's row stamps are stripped, and a touched file without
+    // a stamp sends the merge down the copy-on-write branch
+    def table(): String = {
+      val dir = freshDir()
+      Snapshot.commit(baseRows(), dir, 0, "k")
+      Snapshot.deleteWhereDV(spark, dir, 20L, 25L)
+      dir
+    }
+    val mor = table()
+    val cow = table()
+    val m2 = Snapshot.manifest(spark, cow, 2)
+    Snapshot.publishManifestForTest(spark, cow,
+      m2.copy(version = 3, files = m2.files.map(_.copy(rows = -1L))))
+    // update k=5; "update" k=6 to its own pre-image; delete k=10; insert
+    // into the masked hole (k=22) and past every range (k=900)
+    val ch = Seq((5L, "U", "upd_5"), (6L, "U", "val_6"), (10L, "D", null),
+      (22L, "I", "ins_22"), (900L, "I", "ins_900")).toDF("k", "op", "nv")
+    val apply = (base: DataFrame, changes: DataFrame) =>
+      base.join(changes, base("k") === changes("k"), "full_outer")
+        .filter(coalesce(col("op"), lit("K")) =!= "D")
+        .select(coalesce(changes("k"), base("k")).as("k"),
+          coalesce(col("nv"), col("v")).as("v"),
+          coalesce(col("verdict"), lit("I")).as("verdict"))
+    assert(Snapshot.mergeCow(spark, mor, ch, "k", apply) == 3)
+    assert(Snapshot.mergeCow(spark, cow, ch, "k", apply) == 4)
+    val morM = Snapshot.manifest(spark, mor, 3)
+    assert(morM.dvs.values.map(_.length).sum == 6 + 3,
+      "merge-on-read: k=5, 6 and 10 masked next to the prior 6 positions")
+    assert(Snapshot.manifest(spark, cow, 4).dvs.isEmpty,
+      "COW: the touched file rewrote, its vector materialized, none added")
+    assert(state(mor) == state(cow))
+    def feed(dir: String, v: Int, pre: Boolean) =
+      Snapshot.changeFeed(spark, dir, v, v + 1, "k", preImages = pre)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
+          r.getString(3))).toSet
+    assert(feed(mor, 2, pre = false) == Set(
+      (5L, "U", "upd_5", "K"), (10L, "D", "val_10", "K"),
+      (22L, "I", "ins_22", "I"), (900L, "I", "ins_900", "I")))
+    assert(feed(mor, 2, pre = false) == feed(cow, 3, pre = false))
+    assert(feed(mor, 2, pre = true) == Set(
+      (5L, "U-", "val_5", "K"), (5L, "U+", "upd_5", "K"),
+      (10L, "D", "val_10", "K"), (22L, "I", "ins_22", "I"),
+      (900L, "I", "ins_900", "I")))
+    assert(feed(mor, 2, pre = true) == feed(cow, 3, pre = true))
+  }
+
+  test("commitOnce: a merge-on-read upsert redriven after success lands once") {
+    import spark.implicits._
+    val dir = freshDir()
+    Snapshot.commit(baseRows(), dir, 0, "k", note = "day0")
+    // Stages.merge's keep-incoming upsert of 10 published rows
+    val pub = (1 to 10).map(k => (k.toLong, s"day1_$k", "U"))
+      .toDF("k", "v", "verdict")
+    def run(): Int = Snapshot.commitOnce(spark, dir, "day1") {
+      Snapshot.mergeCow(spark, dir, pub, "k",
+        (base, ch) => ch.unionByName(
+          base.join(ch.select(col("k").as("_k")), base("k") === col("_k"),
+            "left_anti")),
+        note = "day1")
+    }
+    assert(run() == 2)
+    val m1 = Snapshot.manifest(spark, dir, 1)
+    val m2 = Snapshot.manifest(spark, dir, 2)
+    assert(m1.files.map(_.path).toSet.subsetOf(m2.files.map(_.path).toSet) &&
+      m2.dvs.values.map(_.length).sum == 10, "the merge-on-read branch ran")
+    val after = state(dir)
+    assert(after.size == 800 && after.count(_._3 == "U") == 10)
+    // redriven after success: the token is found, nothing commits
+    assert(run() == 2 && Snapshot.versions(spark, dir) == Seq(1, 2))
+    // a compaction between the success and the redrive cannot erase it
+    Snapshot.compactVersion(spark, dir, 128L << 20)
+    assert(run() == 2 && Snapshot.versions(spark, dir) == Seq(1, 2, 3))
+    assert(state(dir) == after)
   }
 
   private val z2 = Snapshot.ZLayout.curve(Seq("a", "b"))
@@ -1268,10 +1380,10 @@ class SnapshotSpec extends SparkSpec {
     assert(statHit.size == 1, "range stats prune the clustering column")
   }
 
-  test("COW merge carries bloom sidecars for untouched files only") {
+  test("a narrow merge carries every bloom sidecar; the masked file's stays sound") {
     import spark.implicits._
     val dir = bloomTable()
-    // narrow change: one key → one touched file rewrites, 7 carry
+    // narrow change: one key → its position masked, all 8 files carry
     val changes = Seq((42L, "patched")).toDF("ck", "nv")
     Snapshot.mergeCow(spark, dir, changes, "ck",
       (base, ch) => base.join(ch, base("k") === ch("ck"), "left")
@@ -1280,13 +1392,16 @@ class SnapshotSpec extends SparkSpec {
     val m2 = Snapshot.manifest(spark, dir, 2)
     val m3 = Snapshot.manifest(spark, dir, 3)
     val carried = m3.files.map(_.path).toSet & m2.files.map(_.path).toSet
-    assert(carried.size == 7, "narrow COW must carry 7 of 8 files")
+    assert(carried.size == 8, "a narrow merge must carry all 8 files")
+    assert(m3.dvs.values.map(_.length).sum == 1 && m3.files.size == 9,
+      "one masked position, one fresh post-image file")
     assert(m3.blooms.keySet == carried.map(p => (p, "h")),
-      "carried files keep sketches; the rewritten file drops its stale one")
-    // unstamped rewritten file is always a candidate — degraded, not wrong
+      "carried files keep sketches (a masked row only adds a false " +
+        "positive); the fresh file has none yet")
+    // the sketch-less fresh file stays a candidate for the key it holds
     val fresh = m3.files.filterNot(f => carried.contains(f.path))
     val hOf = (k: Long) => (k * 2654435761L) % 100000L
-    assert(fresh.forall(f => Snapshot.mayContain(m3, f, "h", hOf(500L))))
+    assert(fresh.forall(f => Snapshot.mayContain(m3, f, "h", hOf(42L))))
     val got = Snapshot.readPoints(spark, dir, "h", Seq(hOf(42L)))
       .select("v").collect().map(_.getString(0)).toSeq
     assert(got == Seq("patched"))
@@ -1492,17 +1607,20 @@ class SnapshotSpec extends SparkSpec {
       cm.blooms.keySet.forall(_._1.contains(s"$src/")))
     assert(cm.checks == Seq("verdict_known" -> "verdict = 'K'"))
     assert(state(dst) == state(src))
-    // COW divergence: a narrow merge into the CLONE rewrites one file
-    // into dst, carries the rest as source refs; the SOURCE never moves
+    // divergence: a narrow merge into the CLONE masks one position of a
+    // source ref in dst's manifest and appends one file into dst; every
+    // source ref carries, and the SOURCE never moves
     val srcVersionsBefore = Snapshot.versions(spark, src)
     Snapshot.mergeCow(spark, dst, Seq((42L, "K")).toDF("ck", "nv"), "ck",
       (b, c) => b.join(c, b("k") === c("ck"), "left")
         .select(col("k"), when(col("nv").isNotNull, "patched")
           .otherwise(col("v")).as("v"), col("verdict")), nFiles = 1)
     val m2 = Snapshot.manifest(spark, dst, 2)
-    assert(m2.files.count(_.path.contains(s"$src/")) == 7 &&
-      m2.files.count(f => !Snapshot.isAbsolutePath(f.path)) == 1,
-      "1 rewritten file lands in the clone, 7 stay source refs")
+    assert(m2.files.count(_.path.contains(s"$src/")) == 8 &&
+      m2.files.count(f => !Snapshot.isAbsolutePath(f.path)) == 1 &&
+      m2.dvs.keySet.forall(_.contains(s"$src/")) &&
+      m2.dvs.values.map(_.length).sum == 1,
+      "1 fresh file lands in the clone, 8 stay source refs, 1 masked")
     assert(Snapshot.versions(spark, src) == srcVersionsBefore &&
       state(src) == baseRows().collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet,
@@ -1527,6 +1645,39 @@ class SnapshotSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Snapshot.cloneShallow(spark, src, dst)
     }
+  }
+
+  test("a majority-matched merge falls back to copy-on-write: clone-local " +
+    "rewrite, sidecars carry, no mask") {
+    import spark.implicits._
+    val src = bloomTable() // 8 files over k = 1..800, h Bloom-stamped
+    val dst = Files.createTempDirectory("graft_clone").toString + "/dst"
+    Snapshot.cloneShallow(spark, src, dst)
+    val m1 = Snapshot.manifest(spark, dst, 1)
+    // keys 1..80 match 80 of the first file's 100 live rows — past half,
+    // so the merge rewrites that one file instead of masking
+    val ch = (1 to 80).map(k => (k.toLong, s"cow_$k")).toDF("ck", "nv")
+    Snapshot.mergeCow(spark, dst, ch, "ck",
+      (b, c) => b.join(c, b("k") === c("ck"), "left")
+        .select(col("k"), col("h"), coalesce(col("nv"), col("v")).as("v")),
+      nFiles = 1)
+    val m2 = Snapshot.manifest(spark, dst, 2)
+    val carried = m2.files.map(_.path).toSet & m1.files.map(_.path).toSet
+    assert(carried.size == 7, "a one-file COW rewrite must carry 7 of 8 files")
+    assert(m2.dvs.isEmpty, "the COW branch masks nothing")
+    assert(m2.files.count(_.path.contains(s"$src/")) == 7 &&
+      m2.files.count(f => !Snapshot.isAbsolutePath(f.path)) == 1,
+      "1 rewritten file lands in the clone, 7 stay source refs")
+    assert(m2.blooms.keySet == carried.map(p => (p, "h")),
+      "carried files keep sketches; the rewritten file drops its stale one")
+    assert(m2.colStats.count(_._1._2 == "h") == 8 &&
+      m2.files.forall(f => m2.colStats.contains((f.path, "h"))),
+      "7 carried stamps + the rewrite's fresh auto stamp")
+    val got = Snapshot.read(spark, dst).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(got.size == 800 && got(80L) == "cow_80" && got(81L) == "val_81")
+    assert(Snapshot.read(spark, src).filter(col("v").startsWith("cow_"))
+      .isEmpty, "the source must be untouched by the clone's merge")
   }
 
   test("addColumn: metadata-only evolution; old versions keep their schema") {
@@ -1661,19 +1812,19 @@ class SnapshotSpec extends SparkSpec {
     val none = Snapshot.readPrunedCols(spark, dir,
       Seq(("k", 1L, 100L), ("k2", 1L, 100L)))
     assert(none.count() == 0 && none.columns.toSeq == Seq("k", "k2", "v"))
-    // COW carry: untouched files keep their stamps, and the REWRITTEN
-    // file re-stamps inside its own write (round 15 — no degradation
-    // window between a rewrite and the next optimizeStats)
+    // merge carry: every file keeps its stamps (a masked row only widens
+    // its file's stale range), and the FRESH file stamps inside its own
+    // write (round 15 — no degradation window until the next optimizeStats)
     Snapshot.mergeCow(spark, dir, Seq((42L, 900L)).toDF("ck", "nk2"), "ck",
       (b, c) => b.join(c, b("k") === c("ck"), "left")
         .select(col("k"), coalesce(col("nk2"), col("k2")).as("k2"),
           col("v")), nFiles = 1)
     val m3 = Snapshot.manifest(spark, dir, 3)
-    assert(m3.colStats.count(_._1._2 == "k2") == 8,
-      s"7 carried stamps + the rewrite's fresh auto stamp, got " +
+    assert(m3.colStats.count(_._1._2 == "k2") == 9,
+      s"8 carried stamps + the fresh file's auto stamp, got " +
         s"${m3.colStats.count(_._1._2 == "k2")}")
     assert(m3.files.forall(f => m3.colStats.contains((f.path, "k2"))),
-      "every file is k2-stamped after the rewrite")
+      "every file is k2-stamped after the merge")
     assert(Snapshot.candidateFilesCols(m3, Seq(("k2", 701L, 800L))).size < 8)
     // k=42's k2 moved to 900 in the merge, so the range now holds 99
     assert(Snapshot.readPrunedCols(spark, dir, Seq(("k2", 701L, 800L)))
